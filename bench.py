@@ -10,7 +10,9 @@ tail-capture always lands on:
      "unit": "sec", "n": <count>, "sf": <float>,
      "calibration_query": <name>, "calibration_sec": [4 samples],
      "calibration_median_sec": <float>, "probe_ratio": <float>,
-     "gate_breaches": [names], "normalized_total_sec": <float>}
+     "gate_breaches": [names], "normalized_total_sec": <float>,
+     "codegen_passes": [3 x {"compiles", "compile_ms", "metaspace_mb",
+                             "metaspace_grow_mb"}]}
 
 The calibration samples time one FIXED canonical query at the start,
 between passes, and at the end: uniform inflation of the calibration
@@ -417,6 +419,24 @@ HEADLINE = [
 ]
 
 
+def codegen_stats(spark) -> dict[str, float]:
+    """Janino compiles and their total ms so far in this JVM, and its
+    Metaspace MB. Per-pass deltas show a generated-code cache that
+    thrashes: a warm pass that still compiles is evicting."""
+    jvm = spark._jvm
+    pools = jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    metaspace = sum(
+        p.getUsage().getUsed() for p in pools if p.getName() == "Metaspace"
+    )
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "compile_ms": codegen.compileTime() / 1e6,
+        "metaspace_mb": round(metaspace / 2**20, 1),
+    }
+
+
 def main() -> None:
     target = sf_dir()
     m = re.search(r"sf([0-9.]+)", target)
@@ -453,13 +473,26 @@ def main() -> None:
     # by the rest of the suite don't, so the per-query minimum across
     # passes reflects the plan's actual cost
     timings: dict[str, float] = {name: float("inf") for name in HEADLINE}
+    codegen_passes: list[dict[str, float]] = []
     for _ in range(3):
+        before = codegen_stats(spark)
         for name in HEADLINE:
             t0 = time.perf_counter()
             QUERIES[name](spark, target).write.format("noop").mode(
                 "overwrite"
             ).save()
             timings[name] = min(timings[name], time.perf_counter() - t0)
+        after = codegen_stats(spark)
+        codegen_passes.append(
+            {
+                "compiles": after["compiles"] - before["compiles"],
+                "compile_ms": round(after["compile_ms"] - before["compile_ms"]),
+                "metaspace_mb": after["metaspace_mb"],
+                "metaspace_grow_mb": round(
+                    after["metaspace_mb"] - before["metaspace_mb"], 1
+                ),
+            }
+        )
         calibration.append(_calibrate())
     timings = {name: round(t, 3) for name, t in timings.items()}
 
@@ -501,6 +534,7 @@ def main() -> None:
         "calibration_query": CALIBRATION_QUERY,
         "calibration_sec": calibration,
         "calibration_median_sec": calib_median,
+        "codegen_passes": codegen_passes,
     }
 
     # ---- calibration-normalized perf gate vs FLOORS.json (sf0.1 only:

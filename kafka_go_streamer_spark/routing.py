@@ -10,11 +10,11 @@ priority semantics and the per-message single-pass cost are identical,
 but vectorized inside whole-stage codegen instead of one Go iteration per
 message.
 
-Scale notes: the produced plan is narrow (scan -> project -> case-when ->
-filter) with **zero shuffles**, so it parallelizes linearly with input
-partitions on any cluster size; predicates are JVM-side (``rlike`` /
-``contains``), regex literals are compiled once per task by the codegen'd
-``RLike`` expression, not per row.
+Scale notes: the produced plan is narrow (scan -> case-when project ->
+one-row explode -> filter) with **zero shuffles**, so it parallelizes
+linearly with input partitions on any cluster size; predicates are
+JVM-side (``rlike`` / ``contains``), regex literals are compiled once per
+task by the codegen'd ``RLike`` expression, not per row.
 """
 
 from __future__ import annotations
@@ -102,8 +102,16 @@ def route_and_filter(
     topic_col: str = "topic",
 ) -> DataFrame:
     """Route then keep only rows that actually produce: the reference's
-    observable output (dropped + unroutable-unmatched rows removed)."""
-    return route(df, spliter, value_col, topic_col).filter(
+    observable output (dropped + unroutable-unmatched rows removed).
+
+    A plain ``filter(topic IS NOT NULL)`` would be pushed below the
+    projection with the whole ``CASE`` inlined into it, so every row
+    would run the routing predicates twice. Exploding the one-element
+    ``array(topic)`` puts the filter on the generator's output, which
+    Catalyst cannot push further down: the ``CASE`` runs once, still in
+    the one codegen span."""
+    routed = route(df, spliter, value_col, topic_col)
+    return routed.withColumn(topic_col, F.explode(F.array(topic_col))).filter(
         F.col(topic_col).isNotNull()
     )
 

@@ -6,6 +6,11 @@ re-planning (partition coalescing, skew-join splitting), shuffle
 partitions sized to parallelism rather than the 200 default, UTC session
 timezone so timestamps compare bit-for-bit against the DuckDB oracle,
 and Arrow for any pandas-UDF path.
+
+One static conf is about long sessions rather than the cluster: the
+generated-code cache is sized to hold every class a full registry pass
+compiles, so a warm query reuses its Janino-compiled classes instead of
+recompiling them after an LRU eviction.
 """
 
 from __future__ import annotations
@@ -15,6 +20,14 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+#: ``spark.sql.codegen.cache.maxEntries`` (default 100). One 231-query
+#: ``bench.py`` headline pass at sf0.001 compiles about 4,250 distinct
+#: classes and the five ``analytics-mixed`` queries 168, so at the default
+#: every warm pass recompiles nearly all of them (~9 ms each). 8192 holds
+#: a whole headline pass with headroom; that pass grows the JVM's
+#: Metaspace by ~75 MB (``bench.py`` records it as ``codegen_passes``).
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def cpu_count() -> int:
@@ -54,10 +67,7 @@ def get_spark(
         # runtime side. Not a local[32] artifact — this is the
         # standard batch-ETL setting on adequate-memory executors.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # early fixtures stored TIMESTAMP(NANOS), which Spark's parquet
-        # reader rejects; read as LONG and convert (sources/tables.py).
-        # Harmless for the current timestamp[us] fixtures.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

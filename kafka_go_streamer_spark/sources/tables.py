@@ -5,6 +5,11 @@ Kafka consumer, reference main.go:348-367): columnar scan with predicate
 pushdown and column pruning — filters and projections written against
 these DataFrames reach the scan (check ``PushedFilters`` / ``ReadSchema``
 in ``df.explain("formatted")``).
+
+Every read takes its schema from the parquet footer (pyarrow metadata,
+no Spark job), mapped with the session's own NTZ inference rule, so
+building a query starts no schema-inference job and the schema equals
+the one ``spark.read.parquet`` would infer.
 """
 
 from __future__ import annotations
@@ -13,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,39 +40,32 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 
 
 def _fix_nanos(df: DataFrame) -> DataFrame:
-    """Normalize the event-time column to TIMESTAMP (with local tz),
-    whatever the fixture generation produced:
+    """Normalize the event-time column to TIMESTAMP (with local tz).
 
-    * early fixtures stored TIMESTAMP(NANOS), which Spark reads as LONG
-      nanos (``spark.sql.legacy.parquet.nanosAsLong``) — truncate to
-      microseconds with integer division (the same ns->us truncation
-      DuckDB applies, so oracle comparisons agree; float division would
-      silently lose precision at epoch-nanos magnitudes);
-    * current fixtures store timestamp[us] without a timezone, which a
-      Spark 4 session reads as TIMESTAMP_NTZ — cast to TIMESTAMP,
-      value-identical under the UTC session timezone and required by
-      LTZ-only operations (watermarks, epoch casts). Rounds 1-3 shipped
-      exactly this type from the nanos path, so oracle parity for LTZ
-      event time is driver-proven."""
-    for field in df.schema.fields:
-        if field.name != "ts":
-            continue
-        kind = field.dataType.simpleString()
-        if kind == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif kind == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    The fixtures store ``ts`` as timestamp[us] without a timezone, which
+    a Spark 4 session reads as TIMESTAMP_NTZ. Cast it to TIMESTAMP:
+    value-identical under the UTC session timezone, and required by
+    LTZ-only operations (watermarks, epoch casts)."""
+    if dict(df.dtypes).get("ts") == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of a parquet file, from its footer alone — no
+    Spark job, no scan. Timezone-less timestamps map to TIMESTAMP_NTZ
+    exactly when the session's parquet reader would infer them so."""
+    import pyarrow.parquet as pq
+
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return from_arrow_schema(
+        pq.read_schema(path), prefer_timestamp_ntz=ntz.lower() == "true"
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS); callers may hand us a
-        # session built elsewhere (e.g. the correctness driver's), so set
-        # the runtime-settable legacy conf here rather than relying on
-        # session.get_spark having done it.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     return _fix_nanos(df) if name == "events" else df
 
 

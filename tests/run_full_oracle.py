@@ -1,9 +1,11 @@
 """Drive every registered query/oracle pair exactly like the driver does.
 
-Uses a deliberately conf-less SparkSession (no nanosAsLong, default
-shuffle partitions) to prove the package is self-sufficient under the
-driver's own session, then twin-checks each query against its DuckDB
-oracle at the given scale factor via tests.oracle_harness.compare.
+Uses a deliberately conf-less SparkSession (UTC and 8 shuffle
+partitions only; default parquet TIMESTAMP_NTZ inference and
+generated-code cache) to prove the package is self-sufficient under a
+session it did not configure, then twin-checks each query against its
+DuckDB oracle at the given scale factor via
+tests.oracle_harness.compare.
 
 Usage: python tests/run_full_oracle.py [sf_dir] [name_filter ...]
 """

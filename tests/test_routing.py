@@ -199,6 +199,25 @@ def test_no_shuffle_in_routing_plan(spark):
     assert "Exchange" not in plan
 
 
+def test_route_and_filter_evaluates_case_once(spark):
+    """The produce filter must not be pushed below the routing
+    projection with the CASE inlined into it: the optimized plan holds
+    exactly one CASE, even when a drop arm makes topic nullable."""
+    spliter = Spliter(
+        input_topic="t",
+        actions={"unmatched": "dead"},
+        splits=[
+            Split(Extractor("AAA"), action="ghost-action"),
+            Split(Extractor("B+B", use_regex=True), output_topic="out-b"),
+        ],
+    )
+    rows = [("m1", "AAA"), ("m2", "BBB"), ("m3", "z")]
+    out = route_and_filter(spark.createDataFrame(rows, "key string, value string"), spliter)
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("CASE WHEN") == 1
+    assert out.columns == ["key", "value", "topic"]
+    assert sorted(map(tuple, out.collect())) == [("m2", "BBB", "out-b"), ("m3", "z", "dead")]
+
+
 def test_quote_bearing_pattern_and_topic_escape_in_sql_twin(spark):
     """A spliter whose PATTERN and topic both contain single quotes must
     route identically through the DataFrame path, the Spark-SQL twin,
