@@ -140,12 +140,6 @@ class SpliterCollection:
         for sp in self.spliters:
             sp.validate()
 
-    def by_input_topic(self, topic: str) -> Spliter:
-        for sp in self.spliters:
-            if sp.input_topic == topic:
-                return sp
-        raise KeyError(topic)
-
 
 def validate_group_fragment(value: str, name: str = "fragment") -> str:
     """Consumer-group-id fragment validation (reference main.go:207-221)."""

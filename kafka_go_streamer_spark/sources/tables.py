@@ -69,10 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _fix_nanos(df) if name == "events" else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition to cluster parallelism.
 
@@ -148,9 +144,3 @@ def fan_width(
         1,
         min(spark.sparkContext.defaultParallelism, -(-rows // per_task)),
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -15,10 +15,10 @@ batch hold verbatim under the micro-batch runtime.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.config import Spliter, SpliterCollection
 from kafka_go_streamer_spark.routing import route_and_filter
+from kafka_go_streamer_spark.sources.files import stream_message_lines
 from kafka_go_streamer_spark.sources.kafka import (
     DEFAULT_TRIGGER,
     kafka_reader,
@@ -76,26 +76,20 @@ def start_file_stream_router(
     spliter: Spliter,
     input_dir: str,
     query_name: str = "routed",
-    trigger_once: bool = True,
 ):
     """Kafka-less streaming harness (the driver environment has no
     broker): text-file source -> the same routing core -> in-memory
     sink, mirroring the reference's compose-test topology
-    (docker-compose-test.yml) without infrastructure."""
-    lines = (
-        spark.readStream.format("text")
-        .load(input_dir)
-        .select(F.lit(None).cast("string").alias("key"), F.col("value"))
-    )
-    routed = route_microbatch(lines, spliter)
-    writer = (
+    (docker-compose-test.yml) without infrastructure. Drains what is
+    in ``input_dir`` (availableNow) and stops."""
+    routed = route_microbatch(stream_message_lines(spark, input_dir), spliter)
+    return (
         routed.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_checkpointed_file_router(
@@ -120,12 +114,7 @@ def start_checkpointed_file_router(
     file sink used here (its manifest makes batch commits idempotent).
     Verified by tests/test_checkpoint_recovery.py.
     """
-    lines = (
-        spark.readStream.format("text")
-        .load(input_dir)
-        .select(F.lit(None).cast("string").alias("key"), F.col("value"))
-    )
-    routed = route_microbatch(lines, spliter)
+    routed = route_microbatch(stream_message_lines(spark, input_dir), spliter)
     return (
         routed.writeStream.format("parquet")
         .queryName(query_name)

@@ -11,14 +11,16 @@ them, i.e. the round can always end with zero verification backlog.
 Budget = every name the next driver window must absorb:
 
   * ``ROTATE_FRONT`` refronts (code changed since green verdict), plus
-  * every registered query without a fully-green driver row — which by
-    construction includes anything registered this round AND the
-    ``DEMOTED`` names (demotion re-orders within the unverified block;
-    it must never again be used to paper over an over-budget round).
+  * every registered query without a fully-green row in the
+    ``CORRECTNESS_r*.json`` records — which by construction includes
+    anything registered this round.
 
-If this exceeds the window, the fix is to stop registering, not to
-demote: a query that cannot get a driver verdict this round should not
-be registered this round.
+If this exceeds the window, the fix is to stop registering: a query
+that cannot get a driver verdict this round should not be registered
+this round. Note that adding any keyword to a query's ``@query(...)``
+call, or moving it to another module, changes its staleness
+fingerprint (tests/test_rotation_staleness.py) and so also spends a
+window slot.
 """
 
 from __future__ import annotations

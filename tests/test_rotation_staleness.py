@@ -165,7 +165,7 @@ def compute_stale() -> dict[str, str]:
             )
         commit = commits[rnd]
         if commit is None:
-            continue  # record predates git history (r1/r2 frozen seed)
+            continue  # record not in git history: nothing to diff
         f = _defining_file(fn)
         if f not in changed[rnd]:
             continue  # module untouched since the green verdict
@@ -219,14 +219,3 @@ def test_rotate_front_leads_the_window(git_available):
     names = entry._ordered_names()
     front = [n for n in entry.ROTATE_FRONT if n in names]
     assert names[: len(front)] == front
-
-
-def test_verified_r1_r2_seed_still_green():
-    """The frozen r1/r2 seed names must each still have a green row in
-    some record file OR be covered by the seed itself; a renamed query
-    would otherwise keep a phantom verdict."""
-    from kafka_go_streamer_spark.plans import QUERIES
-    import __spark_entry__ as entry
-
-    gone = [n for n in entry._VERIFIED_R1_R2 if n not in QUERIES]
-    assert not gone, f"seeded-verified names no longer registered: {gone}"
