@@ -22,6 +22,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -33,12 +34,16 @@ sys.path.insert(0, _REPO)
 from kafka_go_streamer_spark.plans import ORACLES, QUERIES
 
 
-def _driver_verified() -> frozenset[str]:
-    """All names with a fully-green driver verdict in any recorded
-    round, so the 50-query window auto-rotates to whatever has not
-    been proven yet."""
-    seen: set[str] = set()
+def newest_green_round() -> dict[str, int]:
+    """query name -> highest round ``N`` whose ``CORRECTNESS_r<N>.json``
+    records a fully-green driver row for it (rows, schema and hash all
+    match). The window ordering here and the staleness audit in
+    ``tests/test_rotation_staleness.py`` both read verdicts through it."""
+    newest: dict[str, int] = {}
     for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
         try:
             rows = json.load(open(path))
         except (OSError, ValueError):
@@ -50,11 +55,13 @@ def _driver_verified() -> frozenset[str]:
                 and r.get("schema_match")
                 and r.get("hash_match")
             ):
-                seen.add(name)
-    return frozenset(seen)
+                newest[name] = max(newest.get(name, 0), int(m.group(1)))
+    return newest
 
 
-DRIVER_VERIFIED = _driver_verified()
+#: Every name with a fully-green driver verdict in any recorded round, so
+#: the 50-query window auto-rotates to whatever has not been proven yet.
+DRIVER_VERIFIED = frozenset(newest_green_round())
 
 # Queries whose CODE changed since their newest green driver verdict:
 # forced to the front of the window so the verdict can't go stale.

@@ -6,9 +6,10 @@ reference main.go:124-161, 189-195).
 Where the reference exposes process-level profiles, Spark's runtime
 already meters every micro-batch; this listener surfaces the subset the
 reference's operators would have wanted — rows in, rows/sec, batch
-latency — keyed by query name, so a fleet of per-spliter routers
-(streaming/router.py) reports like the reference's per-spliter
-goroutine pairs.
+latency and its phases (``durationMs``: latestOffset, getBatch,
+queryPlanning, addBatch, walCommit, commitOffsets, ...) — keyed by query
+name, so a fleet of per-spliter routers (streaming/router.py) reports
+like the reference's per-spliter goroutine pairs.
 
 Zero overhead on the data path: listeners run on the driver's listener
 bus thread; nothing is added to the executor-side plan.
@@ -17,9 +18,16 @@ bus thread; nothing is added to the executor-side plan.
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass
+from collections import deque
+from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+#: Per-batch phase maps kept per query, like Spark's own
+#: ``StreamingQuery.recentProgress`` (``numRecentProgressUpdates`` = 100):
+#: a router that runs for days must not grow without bound. The per-phase
+#: totals cover every batch.
+RECENT_BATCHES = 100
 
 
 @dataclass
@@ -31,16 +39,23 @@ class QueryStats:
     total_input_rows: int = 0
     last_rows_per_sec: float = 0.0
     peak_rows_per_sec: float = 0.0
-    total_batch_ms: int = 0
+    #: Summed ``durationMs`` over every batch, per phase.
+    phase_ms: dict[str, int] = field(default_factory=dict)
+    #: The last ``RECENT_BATCHES`` batches' full ``durationMs`` maps.
+    recent_durations: deque = field(default_factory=lambda: deque(maxlen=RECENT_BATCHES))
+
+    @property
+    def avg_phase_ms(self) -> dict[str, float]:
+        return {k: v / self.batches for k, v in self.phase_ms.items()} if self.batches else {}
 
     @property
     def avg_batch_ms(self) -> float:
-        return self.total_batch_ms / self.batches if self.batches else 0.0
+        return self.avg_phase_ms.get("triggerExecution", 0.0)
 
 
 class RouterMetricsListener(StreamingQueryListener):
-    """Collects per-query rows/sec + batch-duration stats from the
-    driver's progress events.
+    """Collects per-query rows/sec + batch-duration stats, phase by
+    phase, from the driver's progress events.
 
     Usage::
 
@@ -69,14 +84,16 @@ class RouterMetricsListener(StreamingQueryListener):
         p = event.progress
         name = p.name or str(p.id)
         rps = p.processedRowsPerSecond or 0.0
-        batch_ms = (p.durationMs or {}).get("triggerExecution", 0)
+        durations = dict(p.durationMs or {})
         with self._lock:
             st = self.stats.setdefault(name, QueryStats(name=name))
             st.batches += 1
             st.total_input_rows += p.numInputRows
             st.last_rows_per_sec = rps
             st.peak_rows_per_sec = max(st.peak_rows_per_sec, rps)
-            st.total_batch_ms += batch_ms
+            for phase, ms in durations.items():
+                st.phase_ms[phase] = st.phase_ms.get(phase, 0) + ms
+            st.recent_durations.append(durations)
             self._changed.notify_all()
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover - no-op
@@ -115,6 +132,8 @@ class RouterMetricsListener(StreamingQueryListener):
                     "last_rows_per_sec": s.last_rows_per_sec,
                     "peak_rows_per_sec": s.peak_rows_per_sec,
                     "avg_batch_ms": s.avg_batch_ms,
+                    "avg_phase_ms": s.avg_phase_ms,
+                    "recent_durations": [dict(d) for d in s.recent_durations],
                 }
                 for n, s in self.stats.items()
             }

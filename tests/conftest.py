@@ -16,6 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark("kgs-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "4")))
     yield spark
+    spark.stop()
 
 
 @pytest.fixture(scope="session")

@@ -13,11 +13,13 @@ Usage: python tests/run_full_oracle.py [sf_dir] [name_filter ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# This checkout, so a second copy of the repo runs its own code.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

@@ -4,12 +4,21 @@ pprof/zap hooks, main.go:124-161)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from tests.test_routing import GOLDEN_OPENSTACK, SPLITER_OPENSTACK
 
 from kafka_go_streamer_spark.streaming import (
     RouterMetricsListener,
     start_file_stream_router,
 )
+from kafka_go_streamer_spark.streaming.metrics import RECENT_BATCHES
+
+#: Phases every committed micro-batch of a file-source router reports.
+BATCH_PHASES = {
+    "latestOffset", "getBatch", "queryPlanning", "addBatch",
+    "walCommit", "commitOffsets", "triggerExecution",
+}
 
 
 def test_listener_captures_throughput(spark, tmp_path):
@@ -34,6 +43,38 @@ def test_listener_captures_throughput(spark, tmp_path):
     assert stats["total_input_rows"] == len(GOLDEN_OPENSTACK)
     assert stats["peak_rows_per_sec"] > 0
     assert stats["avg_batch_ms"] > 0
+    # every batch's phase map is kept, not only triggerExecution
+    assert len(stats["recent_durations"]) == stats["batches"]
+    for durations in stats["recent_durations"]:
+        assert BATCH_PHASES <= set(durations)
+    assert BATCH_PHASES <= set(stats["avg_phase_ms"])
+    assert stats["avg_phase_ms"]["triggerExecution"] == stats["avg_batch_ms"]
+
+
+def _progress(name: str, batch: int) -> SimpleNamespace:
+    return SimpleNamespace(progress=SimpleNamespace(
+        name=name, id=None, numInputRows=10, processedRowsPerSecond=5.0,
+        durationMs={"triggerExecution": 100 + batch, "walCommit": 2},
+    ))
+
+
+def test_listener_keeps_recent_phase_maps_and_total_phases():
+    """A long-running router keeps the last ``RECENT_BATCHES`` phase maps
+    (bounded memory) and per-phase totals over every batch."""
+    listener = RouterMetricsListener()
+    n = RECENT_BATCHES + 50
+    for batch in range(n):
+        listener.onQueryProgress(_progress("long", batch))
+    stats = listener.snapshot()["long"]
+    assert stats["batches"] == n
+    recent = stats["recent_durations"]
+    assert len(recent) == RECENT_BATCHES
+    assert recent[-1] == {"triggerExecution": 100 + n - 1, "walCommit": 2}
+    assert recent[0]["triggerExecution"] == 100 + n - RECENT_BATCHES
+    assert listener.stats["long"].phase_ms == {
+        "triggerExecution": sum(100 + b for b in range(n)), "walCommit": 2 * n,
+    }
+    assert stats["avg_phase_ms"]["walCommit"] == 2.0
 
 
 def test_observe_collect_metrics_on_batch_query(spark, sf_dir):

@@ -35,11 +35,8 @@ the unverified-first ordering already puts them in the window.
 from __future__ import annotations
 
 import ast
-import glob
 import inspect
-import json
 import os
-import re
 import subprocess
 import sys
 
@@ -57,29 +54,6 @@ def _git(*args: str) -> str:
         text=True,
         check=True,
     ).stdout
-
-
-def _newest_green_round() -> dict[str, int]:
-    """query name -> highest round number with a fully-green row."""
-    newest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            if (
-                isinstance(r, dict)
-                and r.get("rows_match")
-                and r.get("schema_match")
-                and r.get("hash_match")
-            ):
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
 
 
 def _record_commit(rnd: int) -> str | None:
@@ -147,9 +121,10 @@ def compute_stale() -> dict[str, str]:
     decorator+body source span changed after its newest green round's
     record commit (falling back to file-touch staleness when the span
     cannot be extracted on either side)."""
+    from __spark_entry__ import newest_green_round
     from kafka_go_streamer_spark.plans import QUERIES
 
-    newest = _newest_green_round()
+    newest = newest_green_round()
     commits: dict[int, str | None] = {}
     changed: dict[int, set[str]] = {}
     old_text: dict[tuple[int, str], str | None] = {}
