@@ -69,7 +69,18 @@ DRIVER_VERIFIED = frozenset(newest_green_round())
 # mechanically (ast fingerprint of each query's decorator+body at its
 # green round's record commit vs now) and FAILS if any stale name is
 # missing here. Empty while that set is empty.
-ROTATE_FRONT: tuple[str, ...] = ()
+ROTATE_FRONT: tuple[str, ...] = (
+    "quality_calibration_bins",
+    "privacy_k_anonymity",
+    "sample_language_budget",
+    "storage_shard_plan",
+    "pii_density_by_source",
+    "sketch_hll_distinct",
+    "sketch_hll_intersection",
+    "sketch_hll_hourly_rollup",
+    "sketch_hll_error_curve",
+    "sketch_countmin_heavy_users",
+)
 
 
 def _ordered_names() -> list[str]:

@@ -112,9 +112,9 @@ def scored_gold(d: DataFrame) -> DataFrame:
     """(score, gold) projection of a documents-like frame (needs a
     ``text`` column, passes any other columns through): the frozen
     classifier's 4dp-rounded probability next to the gate-chain label.
-    The ONE scoring stage shared by ``quality_calibration_bins``,
-    ``quality_ece_summary``, and the streaming calibration monitor
-    (streaming/calibration.py) — so batch and stream can never
+    The ONE scoring stage shared by ``quality_calibration_bins``
+    (and so its streaming monitor, through ``calibration_counters``)
+    and ``quality_ece_summary`` — so batch and stream can never
     silently score differently."""
     from kafka_go_streamer_spark.plans.text import (
         QC_W0,
@@ -161,6 +161,40 @@ def scored_gold(d: DataFrame) -> DataFrame:
     )
 
 
+def calibration_counters(d: DataFrame) -> DataFrame:
+    """Per-bin counters (bin, n_docs, sum_score, sum_gold) of a
+    documents-like frame (needs ``text``). Plain sums, so the counters
+    of any split of the corpus merge with
+    ``streaming.partials.merge_partials`` (the streaming calibration
+    monitor); the merged float sums differ from one pass only in
+    association-order ulps, which the 4 dp ``stable_round`` absorbs."""
+    scored = scored_gold(d.select("text"))
+    return scored.groupBy(
+        F.least(F.floor(F.col("score") * 10), F.lit(9))
+        .cast("int")
+        .alias("bin")
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("score").alias("sum_score"),
+        F.sum(F.col("gold") * 1.0).alias("sum_gold"),
+    )
+
+
+def publish_calibration(counters: DataFrame) -> DataFrame:
+    """The reliability table from ``calibration_counters`` rows. Each
+    mean is Σ/n, exactly Spark's ``avg``, and the gap is the
+    difference of the two means."""
+    mean_score = F.col("sum_score") / F.col("n_docs")
+    pos_rate = F.col("sum_gold") / F.col("n_docs")
+    return counters.select(
+        "bin",
+        "n_docs",
+        stable_round(mean_score, 4).alias("mean_score"),
+        stable_round(pos_rate, 4).alias("pos_rate"),
+        stable_round(pos_rate - mean_score, 4).alias("gap"),
+    )
+
+
 @query("quality_calibration_bins", oracle=_calibration_sql)
 def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table for the frozen logistic quality classifier:
@@ -184,18 +218,48 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-parallelism fan measured +0.5-2.5 s at sf0.1 (pinned
     # frames fan every downstream stage); see sources/tables.cpu_fan.
     d = cpu_fan(spark, load_table(spark, sf_dir, "documents"), sf_dir)
-    scored = scored_gold(d.select("text"))
-    return scored.groupBy(
-        F.least(F.floor(F.col("score") * 10), F.lit(9))
-        .cast("int")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        stable_round(F.avg("score"), 4).alias("mean_score"),
-        stable_round(F.avg(F.col("gold") * 1.0), 4).alias("pos_rate"),
-        stable_round(
-            F.avg(F.col("gold") * 1.0) - F.avg("score"), 4
-        ).alias("gap"),
+    return publish_calibration(calibration_counters(d))
+
+
+def qi_class_counters(d: DataFrame) -> DataFrame:
+    """Quasi-identifier class sizes (lang, source, len_bin, c) of a
+    documents-like frame (needs lang, source, n_chars). Integer sums:
+    the counters of any split merge exactly with
+    ``streaming.partials.merge_partials``."""
+    return d.groupBy(
+        "lang",
+        "source",
+        F.expr(f"n_chars div {QI_LEN_BIN}").alias("len_bin"),
+    ).agg(F.count(F.lit(1)).alias("c"))
+
+
+def publish_k_anonymity(classes: DataFrame) -> DataFrame:
+    """The k-grid profile from ``qi_class_counters`` rows."""
+    fanned = classes.select(
+        "c",
+        F.explode(
+            F.array(*[F.lit(k) for k in K_ANON_GRID])
+        ).alias("k"),
+    )
+    return (
+        fanned.groupBy(F.col("k").cast("int").alias("k"))
+        .agg(
+            F.sum(F.when(F.col("c") < F.col("k"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_classes_below"),
+            F.sum(F.when(F.col("c") < F.col("k"), F.col("c")).otherwise(0))
+            .cast("long")
+            .alias("n_docs_below"),
+            F.sum("c").alias("_n_total"),
+        )
+        .select(
+            "k",
+            "n_classes_below",
+            "n_docs_below",
+            stable_round(
+                F.col("n_docs_below") * 1.0 / F.col("_n_total"), 6
+            ).alias("doc_share"),
+        )
     )
 
 
@@ -239,37 +303,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the tiny class frame — the fact table is scanned exactly
     once and never joined."""
     d = load_table(spark, sf_dir, "documents")
-    classes = d.groupBy(
-        "lang",
-        "source",
-        F.expr(f"n_chars div {QI_LEN_BIN}").alias("len_bin"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    fanned = classes.select(
-        "c",
-        F.explode(
-            F.array(*[F.lit(k) for k in K_ANON_GRID])
-        ).alias("k"),
-    )
-    return (
-        fanned.groupBy(F.col("k").cast("int").alias("k"))
-        .agg(
-            F.sum(F.when(F.col("c") < F.col("k"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_classes_below"),
-            F.sum(F.when(F.col("c") < F.col("k"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("n_docs_below"),
-            F.sum("c").alias("_n_total"),
-        )
-        .select(
-            "k",
-            "n_classes_below",
-            "n_docs_below",
-            stable_round(
-                F.col("n_docs_below") * 1.0 / F.col("_n_total"), 6
-            ).alias("doc_share"),
-        )
-    )
+    return publish_k_anonymity(qi_class_counters(d))
 
 
 @query(
@@ -598,13 +632,22 @@ def dedup_component_size_histogram(
     )
 
 
+def lang_token_counters(d: DataFrame) -> DataFrame:
+    """Per-language token counters (lang, avail) of a documents-like
+    frame (needs lang, text). Integer sums: the counters of any split
+    merge exactly with ``streaming.partials.merge_partials``."""
+    return d.groupBy("lang").agg(
+        F.sum(X.token_count(F.col("text"))).cast("long").alias("avail")
+    )
+
+
 def allocation_from_per_lang(per_lang: DataFrame) -> DataFrame:
-    """The closed-form uniform-target allocation from a (lang, avail)
-    frame — the ONE arithmetic stage shared by
-    ``sample_language_budget`` and the streaming language-budget
-    monitor (streaming/langbudget.py), so batch and stream can never
-    silently allocate differently. Input frame is language-bounded
-    (single-digit rows); every window below runs on it."""
+    """The closed-form uniform-target allocation from
+    ``lang_token_counters`` rows (lang, avail) — the publish step of
+    ``sample_language_budget`` and of its streaming monitor, so batch
+    and stream can never silently allocate differently. Input frame is
+    language-bounded (single-digit rows); every window below runs on
+    it."""
     w = Window.partitionBy()
     base = per_lang.select(
         "lang",
@@ -710,10 +753,7 @@ def sample_language_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The allocation is deterministic closed-form arithmetic —
     no iterative water-filling loop, no driver-side solver."""
     d = load_table(spark, sf_dir, "documents")
-    per_lang = d.groupBy("lang").agg(
-        F.sum(X.token_count(F.col("text"))).cast("long").alias("avail")
-    )
-    return allocation_from_per_lang(per_lang)
+    return allocation_from_per_lang(lang_token_counters(d))
 
 
 def _aspect_buckets_sql() -> str:

@@ -78,6 +78,43 @@ TRIGGER_SWEEP = (1, 10, 60)
 FRONTIER_NPROBES = (1, 2, 4)
 
 
+def shard_counters(d: DataFrame) -> DataFrame:
+    """Per-source counters (source, n_docs, total_bytes) of a
+    documents-like frame (needs source, n_chars). Integer sums: the
+    counters of any split merge exactly with
+    ``streaming.partials.merge_partials`` (the streaming shard-plan
+    monitor)."""
+    return d.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("total_bytes"),
+    )
+
+
+def publish_shard_plan(per_source: DataFrame) -> DataFrame:
+    """The shard plan from ``shard_counters`` rows."""
+    n_shards = F.greatest(
+        F.ceil(F.col("total_bytes") * 1.0 / SHARD_TARGET_BYTES), F.lit(1)
+    )
+    return per_source.select(
+        "source",
+        "n_docs",
+        "total_bytes",
+        n_shards.cast("long").alias("n_shards"),
+        stable_round(F.col("total_bytes") * 1.0 / n_shards, 2).alias(
+            "mean_shard_bytes"
+        ),
+        stable_round(F.col("n_docs") * 1.0 / n_shards, 2).alias(
+            "docs_per_shard"
+        ),
+        stable_round(
+            F.col("total_bytes")
+            * 1.0
+            / F.sum("total_bytes").over(Window.partitionBy()),
+            6,
+        ).alias("corpus_share"),
+    )
+
+
 @query(
     "storage_shard_plan",
     oracle=f"""
@@ -112,31 +149,7 @@ def storage_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), then window arithmetic over the 20-row result —
     the fact table is scanned once and never shuffled on a wide key."""
     d = load_table(spark, sf_dir, "documents")
-    per_source = d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_bytes"),
-    )
-    n_shards = F.greatest(
-        F.ceil(F.col("total_bytes") * 1.0 / SHARD_TARGET_BYTES), F.lit(1)
-    )
-    return per_source.select(
-        "source",
-        "n_docs",
-        "total_bytes",
-        n_shards.cast("long").alias("n_shards"),
-        stable_round(F.col("total_bytes") * 1.0 / n_shards, 2).alias(
-            "mean_shard_bytes"
-        ),
-        stable_round(F.col("n_docs") * 1.0 / n_shards, 2).alias(
-            "docs_per_shard"
-        ),
-        stable_round(
-            F.col("total_bytes")
-            * 1.0
-            / F.sum("total_bytes").over(Window.partitionBy()),
-            6,
-        ).alias("corpus_share"),
-    )
+    return publish_shard_plan(shard_counters(d))
 
 
 def _skipping_audit_sql() -> str:

@@ -910,9 +910,9 @@ def _pii_density_sql() -> str:
 def pii_per_doc(d: DataFrame) -> DataFrame:
     """Per-document PII projection (needs doc_id, source, text):
     (source, chars, ne, np) under the deterministic PII seeding and
-    the RE2∩Java-dialect patterns. The ONE scoring stage shared by
-    ``pii_density_by_source`` and the streaming PII monitor
-    (streaming/pii.py), so batch and stream can never silently count
+    the RE2∩Java-dialect patterns. The ONE scoring stage of
+    ``pii_density_by_source`` and (through ``pii_counters``) of its
+    streaming monitor, so batch and stream can never silently count
     differently."""
     from kafka_go_streamer_spark.plans.training_ops import (
         EMAIL_RE,
@@ -945,6 +945,41 @@ def pii_per_doc(d: DataFrame) -> DataFrame:
     )
 
 
+def pii_counters(d: DataFrame) -> DataFrame:
+    """Per-source PII counters (source, n_docs, docs_with_pii,
+    n_emails, n_phones, chars) of a documents-like frame (needs
+    doc_id, source, text). Integer sums: the counters of any split
+    merge exactly with ``streaming.partials.merge_partials``."""
+    per = pii_per_doc(d.select("doc_id", "source", "text"))
+    return per.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.when(F.col("ne") + F.col("np") > 0, 1).otherwise(0))
+        .cast("long")
+        .alias("docs_with_pii"),
+        F.sum("ne").cast("long").alias("n_emails"),
+        F.sum("np").cast("long").alias("n_phones"),
+        F.sum("chars").cast("long").alias("chars"),
+    )
+
+
+def publish_pii_density(counters: DataFrame) -> DataFrame:
+    """The PII triage table from ``pii_counters`` rows: the density
+    divides the integer sums, so it is the same double either way."""
+    return counters.select(
+        "source",
+        "n_docs",
+        "docs_with_pii",
+        "n_emails",
+        "n_phones",
+        stable_round(
+            (F.col("n_emails") + F.col("n_phones"))
+            * 10000.0
+            / F.col("chars"),
+            6,
+        ).alias("pii_per_10kchars"),
+    )
+
+
 @query("pii_density_by_source", oracle=_pii_density_sql)
 def pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-gate rollup of the PII scrub: per source, how many
@@ -958,18 +993,7 @@ def pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a pure narrow projection (seed + two codegen'd
     regexp_count) followed by one aggregate by source."""
     d = load_table(spark, sf_dir, "documents")
-    per = pii_per_doc(d.select("doc_id", "source", "text"))
-    return per.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("ne") + F.col("np") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("docs_with_pii"),
-        F.sum("ne").cast("long").alias("n_emails"),
-        F.sum("np").cast("long").alias("n_phones"),
-        stable_round(
-            F.sum(F.col("ne") + F.col("np")) * 10000.0 / F.sum("chars"), 6
-        ).alias("pii_per_10kchars"),
-    )
+    return publish_pii_density(pii_counters(d))
 
 
 # --------------------------------------------------------------------

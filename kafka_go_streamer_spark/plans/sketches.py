@@ -59,6 +59,14 @@ def _bitlen_case(expr: str, width: int) -> str:
     return f"(CASE {arms} ELSE 0 END)"
 
 
+def _hll_hash(col: str):
+    """The 60-bit md5-slice hash of ``col`` as a BIGINT; the SQL twin
+    is ``('0x' || substr(md5(col::VARCHAR), 1, 15))::BIGINT``."""
+    return F.conv(
+        F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10
+    ).cast("long")
+
+
 def _hll_rho_sql(w_expr: str) -> str:
     """rho = position of the leftmost 1-bit in the 54-bit suffix
     (1-based), W+1 when the suffix is all zeros."""
@@ -139,9 +147,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        _hll_hash("user_id").alias("h"),
         "user_id",
     )
     rr = h.select(
@@ -211,10 +217,25 @@ def _cms_bucket_sql(key_expr: str, row: int) -> str:
     )
 
 
-def _cms_bucket_spark(key, row: int):
-    lo = 8 * row + 1
-    return (
-        F.conv(F.substring(F.md5(key), lo, 8), 16, 10).cast("long") % CMS_W
+def _cms_cells(key: str):
+    """The CMS_D (d, bucket) cells of column ``key`` (cast to string),
+    exploded one row per sketch row: the grid's update cells and a
+    key's probe cells. Bucket d is ``_cms_bucket_sql(key, d)``."""
+    md5 = F.md5(F.col(key).cast("string"))
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"),
+                    (
+                        F.conv(F.substring(md5, 8 * d + 1, 8), 16, 10)
+                        .cast("long")
+                        % CMS_W
+                    ).alias("bucket"),
+                )
+                for d in range(CMS_D)
+            ]
+        )
     )
 
 
@@ -263,37 +284,13 @@ def sketch_countmin_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch broadcasts. At 100 TB you'd keep only the grid and probe ad
     hoc; the truth column here is the verification twin."""
     ev = load_table(spark, sf_dir, "events")
-    key = F.col("user_id").cast("string")
-    cells = ev.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cms_bucket_spark(key, d).alias("bucket"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("c")
-    ).select("c.d", "c.bucket")
+    cells = ev.select(_cms_cells("user_id").alias("c")).select(
+        "c.d", "c.bucket"
+    )
     sketch = cells.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
     truth = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_count"))
-    tkey = F.col("user_id").cast("string")
     probes = truth.select(
-        "user_id",
-        "true_count",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cms_bucket_spark(tkey, d).alias("bucket"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("p"),
+        "user_id", "true_count", _cms_cells("user_id").alias("p")
     ).select("user_id", "true_count", "p.d", "p.bucket")
     est = (
         probes.join(F.broadcast(sketch), ["d", "bucket"])
@@ -518,9 +515,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        _hll_hash("user_id").alias("h"),
         "user_id",
     )
     rr = h.select(
@@ -846,13 +841,7 @@ def sketch_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rr = ev.select(
         "event_type",
         F.hour("ts").alias("hour_of_day"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-        ).alias("h"),
+        _hll_hash("user_id").alias("h"),
         "user_id",
     ).select(
         "event_type",
@@ -1364,15 +1353,7 @@ def sketch_hll_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of input; the exact column is the verification twin
     (one countDistinct) that production drops."""
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
+    h = ev.select(_hll_hash("user_id").alias("h"))
     p_case = F.expr(
         "CASE "
         + " ".join(

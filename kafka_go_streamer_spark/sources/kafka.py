@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_TRIGGER = "10 seconds"
 
 
+def _jaas_quote(value: str | None) -> str:
+    escaped = str(value).replace("\\", "\\\\").replace('"', '\\"')
+    return f'"{escaped}"'
+
+
 def security_options(
     *,
     sasl_username: str | None = None,
@@ -43,7 +48,10 @@ def security_options(
     insecure_skip_verify: bool = False,
 ) -> dict[str, str]:
     """TLS / SASL-PLAIN auth as pass-through Kafka options
-    (reference main.go:223-287 equivalents)."""
+    (reference main.go:223-287 equivalents). The SASL credentials are
+    quoted for Kafka's ``JaasConfig`` parser, a ``StreamTokenizer`` in
+    whose quoted strings a backslash escapes the next character, so any
+    password reaches the login module unchanged."""
     opts: dict[str, str] = {}
     if sasl_username is not None:
         proto = "SASL_SSL" if tls else "SASL_PLAINTEXT"
@@ -51,7 +59,8 @@ def security_options(
         opts["kafka.sasl.mechanism"] = "PLAIN"
         opts["kafka.sasl.jaas.config"] = (
             "org.apache.kafka.common.security.plain.PlainLoginModule required "
-            f'username="{sasl_username}" password="{sasl_password}";'
+            f"username={_jaas_quote(sasl_username)} "
+            f"password={_jaas_quote(sasl_password)};"
         )
     elif tls:
         opts["kafka.security.protocol"] = "SSL"

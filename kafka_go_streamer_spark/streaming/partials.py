@@ -1,25 +1,43 @@
-"""Idempotent partial-store writes for the associative-partial
-monitors (calibration / privacy / shard plan / pii density / language
-budget).
+"""The partial store behind the streaming data-quality monitors, and
+its one merge.
 
-The monitors' streamed == batch guarantee needs each micro-batch's
-partial rows to land EXACTLY once in the partial store. foreachBatch
-itself is at-least-once under task/epoch retry: a plain
-``mode("append")`` write replays a failed epoch's rows a second time
-and every merged sum double-counts that batch. The fix is the standard
-Spark idempotency pattern for foreachBatch sinks: key the write by
-``epoch_id`` (which Spark guarantees is the SAME on replay of the same
-batch) and make the write an epoch-partition OVERWRITE, so a replayed
-epoch replaces its own rows instead of appending beside them.
+A monitor keeps a registered batch table current over arriving
+micro-batches without rescanning the corpus. Each such batch query is
+written as ``publish(counters(docs))``, with both steps next to the
+query that owns them:
 
-``write_epoch_partials`` is that pattern in one place: partition the
-partial store by ``epoch`` and dynamically overwrite only the epoch
-being (re)written (``partitionOverwriteMode=dynamic`` scoped to this
-writer — other epochs' partitions are untouched). Readers just
-``spark.read.parquet(store)`` and see ``epoch`` as a normal column.
+* calibration: ``plans/audit_ops.calibration_counters`` /
+  ``publish_calibration`` (``quality_calibration_bins``);
+* k-anonymity: ``plans/audit_ops.qi_class_counters`` /
+  ``publish_k_anonymity`` (``privacy_k_anonymity``);
+* language budget: ``plans/audit_ops.lang_token_counters`` /
+  ``allocation_from_per_lang`` (``sample_language_budget``);
+* shard plan: ``plans/pipeline_econ.shard_counters`` /
+  ``publish_shard_plan`` (``storage_shard_plan``);
+* PII density: ``plans/semdedup.pii_counters`` /
+  ``publish_pii_density`` (``pii_density_by_source``).
+
+The stream runs the same counters per epoch and publishes from the
+store: ``publish(merge_partials(spark.read.parquet(store), keys))``.
+Every counter is a sum, so the merge is one ``groupBy(keys).sum`` and
+streamed == batch for any batching (exactly for the integer counters;
+the calibration means after their 4 dp rounding).
+
+Exactly once: foreachBatch is at-least-once under task/epoch retry,
+so a plain ``mode("append")`` write replays a failed epoch's rows a
+second time and every merged sum double-counts that batch.
+``write_epoch_partials`` keys the write by ``epoch_id`` (which Spark
+guarantees is the SAME on replay of the same batch) and makes it an
+epoch-partition OVERWRITE (``partitionOverwriteMode=dynamic`` scoped
+to this writer — other epochs' partitions are untouched), so a
+replayed epoch replaces its own rows instead of appending beside
+them. Readers see ``epoch`` as a normal column; a monitoring window is
+a plain filter on it.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,3 +58,11 @@ def write_epoch_partials(
         .partitionBy("epoch")
         .parquet(store_path)
     )
+
+
+def merge_partials(partials: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Merge stored partial counters into one row per key: every
+    column other than ``keys`` and ``epoch`` is summed under its own
+    name, so the result has the shape of the counters it merges."""
+    sums = [c for c in partials.columns if c not in (*keys, "epoch")]
+    return partials.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])

@@ -209,18 +209,13 @@ def hll_registers_stream(events: DataFrame) -> DataFrame:
     complete/update mode forever without watermark eviction; the
     distinct-count estimate is read off the registers at any moment
     with the batch query's estimate arithmetic."""
-    from kafka_go_streamer_spark.plans.sketches import HLL_M, _hll_rho_sql
-
-    h = events.select(
-        "event_type",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+    from kafka_go_streamer_spark.plans.sketches import (
+        HLL_M,
+        _hll_hash,
+        _hll_rho_sql,
     )
+
+    h = events.select("event_type", _hll_hash("user_id").alias("h"))
     rr = h.select(
         "event_type",
         (F.col("h") % HLL_M).alias("idx"),
@@ -348,25 +343,11 @@ def cms_grid_stream(events: DataFrame) -> DataFrame:
     the batch probe arithmetic. State is bounded at D×W rows forever —
     complete/update mode with no watermark eviction, like the HLL and
     histogram register streams."""
-    from kafka_go_streamer_spark.plans.sketches import (
-        CMS_D,
-        _cms_bucket_spark,
-    )
+    from kafka_go_streamer_spark.plans.sketches import _cms_cells
 
-    key = F.col("user_id").cast("string")
-    cells = events.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cms_bucket_spark(key, d).alias("bucket"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("c")
-    ).select("c.d", "c.bucket")
+    cells = events.select(_cms_cells("user_id").alias("c")).select(
+        "c.d", "c.bucket"
+    )
     return cells.groupBy("d", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import signal
 import sys
 
 import pytest
@@ -17,6 +18,48 @@ def spark():
     spark = get_spark("kgs-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "4")))
     yield spark
     spark.stop()
+
+
+def _release_stalled_spark_call() -> None:
+    """After a deadline fired inside a py4j call: close this thread's
+    gateway connection, whose unread answer would otherwise be taken
+    as the reply to the next call, and cancel the jobs left running."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return
+    conn = sc._gateway._gateway_client.get_thread_connection()
+    if conn is not None:
+        conn.close()
+    sc.cancelAllJobs()
+
+
+@pytest.fixture(autouse=True)
+def _deadline(request):
+    """Enforce a ``timeout(seconds)`` marker: SIGALRM fails the test by
+    node id once its budget runs out, and the traceback ends in the
+    step that stalled (a py4j call, a stream's ``awaitTermination``)."""
+    marker = request.node.get_closest_marker("timeout")
+    if marker is None:
+        yield
+        return
+    budget = int(marker.args[0])
+    fired = []
+
+    def expired(signum, frame):
+        fired.append(True)
+        pytest.fail(f"{request.node.nodeid} ran past its {budget} s deadline")
+
+    previous = signal.signal(signal.SIGALRM, expired)
+    signal.alarm(budget)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
+        if fired:
+            _release_stalled_spark_call()
 
 
 @pytest.fixture(scope="session")

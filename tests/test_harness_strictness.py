@@ -91,6 +91,7 @@ _SPARK_CLASS = {
 
 
 @pytest.mark.slow  # executes all 280+ DuckDB oracles (~2 min)
+@pytest.mark.timeout(600)
 def test_every_oracle_integer_columns_cast(spark, sf_dir, built_query, oracle_df):
     """Registry-wide dtype contract: execute EVERY oracle (DuckDB only
     — cheap) and require each output column's dtype class to match the

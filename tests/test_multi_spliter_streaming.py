@@ -29,8 +29,8 @@ def test_streamed_router_counts_equal_batch_times_replay(
 ):
     """The streamed router's per-topic counts must equal the BATCH
     router's (``route_documents_counts``) × replay on the same corpus —
-    the assertion half of the r13 BENCH_ROUTER task (the throughput
-    script records the counts; this pins them). The batch side's
+    the correctness half of the router throughput record (perfbench's
+    router-drain workload measures the rate; this pins the counts). The batch side's
     ``__dropped__`` bucket (matched rule, nil writer) must NOT appear
     in the streamed output: the router filters non-produced rows, it
     never emits them to a topic."""
