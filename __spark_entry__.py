@@ -80,6 +80,15 @@ ROTATE_FRONT: tuple[str, ...] = (
     "sketch_hll_hourly_rollup",
     "sketch_hll_error_curve",
     "sketch_countmin_heavy_users",
+    "ann_ivf_store_probe",
+    "ann_ivf_store_append_probe",
+    "sim_hard_negatives",
+    "multimodal_phash_hamming_hist",
+    "storage_bucket_pruning_audit",
+    "dedup_shingle_selectivity",
+    "stats_join_sample_estimators",
+    "storage_layout_chooser",
+    "events_watermark_dedup_audit",
 )
 
 

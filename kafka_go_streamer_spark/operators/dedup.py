@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.operators.iterate import pinned, pinned_counted
 
@@ -281,12 +282,6 @@ def exact_dedup_sql(table: str, id_col: str, text_col: str = "text") -> str:
 SIMHASH_BITS = 32
 
 
-def _word_hash64(w: Column) -> Column:
-    """Stable 60-bit integer hash of a word: first 15 hex chars of md5,
-    identical in the SQL twin (DuckDB '0x..'::BIGINT)."""
-    return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
-
-
 def simhash_table(
     df: DataFrame, id_col: str, text_col: str = "text"
 ) -> DataFrame:
@@ -306,7 +301,7 @@ def simhash_table(
         F.explode(F.array_distinct(words(F.col(text_col)))).alias("w"),
     )
     hashed = exploded.select(
-        F.col(id_col), _word_hash64(F.col("w")).alias("h")
+        F.col(id_col), md5_60("w").alias("h")
     )
     bit_sums = hashed.groupBy(id_col).agg(
         *[

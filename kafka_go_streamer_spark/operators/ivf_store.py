@@ -6,8 +6,9 @@ statement — but its docstring promises what production actually does:
 train ONCE offline, persist the index, and serve probes against the
 artifact. This module is that artifact:
 
-* ``build_ivf_index`` — OFFLINE: k = ceil(sqrt(n)) centroids from full
-  Lloyd iterations (operators/kmeans.py primitives), persisted as
+* ``build_ivf_index`` — OFFLINE: k = ceil(sqrt(n)) centroids from two
+  full Lloyd iterations (``operators/kmeans.train_centroids``),
+  persisted as
 
   - ``{base}/centroids`` — the trained quantizer, (cid, pos, c) long
     form, k x dims rows (tiny: ~1M x 64 even at 10^12 vectors);
@@ -15,13 +16,17 @@ artifact. This module is that artifact:
     PARTITIONED BY cell, so a probe's I/O is pruned to the probed
     cells' directories and never scans the other ~k-1/k of the data.
 
-* ``probe_ivf_index`` — ONLINE: score the k centroids against the
-  query (a k-row job — no corpus touch), take the top ``nprobe``
-  cells, and join them broadcast against the partitioned store.
-  The cell ids stay INSIDE the plan (no driver collect): Spark's
-  dynamic partition pruning turns the broadcast join on the partition
-  column into runtime partition filters, which
-  tests/test_ivf_store.py asserts on the physical plan.
+* ``append_to_ivf_index`` — INCREMENTAL: new vectors join the cell of
+  their nearest stored centroid, no retrain.
+
+* ``probe_ivf`` — ONLINE: one batched probe over a ``(q_id, qv)``
+  panel of query vectors (a single query is a panel of one). It scores
+  the k centroids against each query (k x |Q| rows, no corpus touch),
+  takes each query's top ``nprobe`` cells, and joins them broadcast
+  against the partitioned store. The cell ids stay INSIDE the plan (no
+  driver collect): Spark's dynamic partition pruning turns the
+  broadcast join on the partition column into runtime partition
+  filters, which tests/test_ivf_store.py asserts on the physical plan.
 
 The reference engine has no persistent state at all (its only sink is
 Kafka, SURVEY.md §2.1 #11); this is storage-level machinery for the
@@ -36,7 +41,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions.rounding import stable_round
@@ -47,8 +52,7 @@ from kafka_go_streamer_spark.functions.vectors import (
 from kafka_go_streamer_spark.operators.kmeans import (
     assign_nearest,
     explode_vectors,
-    seed_centroids,
-    update_centroids,
+    train_centroids,
 )
 
 
@@ -107,31 +111,19 @@ def _ensure_cached(base: str, fp: dict, build) -> str:
     return base
 
 
-def ensure_ivf_index(
-    emb: DataFrame, sf_dir: str, iters: int = 2, k: int | None = None
-) -> str:
+def ensure_ivf_index(emb: DataFrame, sf_dir: str) -> str:
     """Build the IVF index for ``sf_dir`` exactly once (offline step),
     returning its base path. A fingerprint sidecar invalidates the cache
     if the source fixture changes; otherwise every later call is a pure
-    read — the offline-train / online-probe split at the API level.
-    The fingerprint covers the BUILD PARAMETERS too, not just the
-    source fixture — otherwise a later call with different iters/k
-    silently reuses the index trained under the old parameters."""
+    read — the offline-train / online-probe split at the API level."""
     base = default_index_base(sf_dir)
-    fp = {**_source_fingerprint(sf_dir), "iters": iters, "k": k}
     return _ensure_cached(
-        base, fp, lambda: build_ivf_index(emb, base, iters=iters, k=k)
+        base, _source_fingerprint(sf_dir), lambda: build_ivf_index(emb, base)
     )
 
 
 def ensure_ivf_index_with_append(
-    emb: DataFrame,
-    new_emb: DataFrame,
-    sf_dir: str,
-    *,
-    tag: str = "append",
-    iters: int = 2,
-    k: int | None = None,
+    emb: DataFrame, new_emb: DataFrame, sf_dir: str
 ) -> str:
     """Build an index from ``emb`` and fold ``new_emb`` in through the
     INCREMENTAL path (``append_to_ivf_index``) exactly once, returning
@@ -149,71 +141,34 @@ def ensure_ivf_index_with_append(
     are just labels."""
 
     def build() -> None:
-        from pyspark.sql import Window
-
         train = emb.withColumn(
             "vec_id",
             F.row_number().over(Window.orderBy("vec_id")) - 1,
         )
-        build_ivf_index(emb, base, iters=iters, k=k, train_emb=train)
+        build_ivf_index(emb, base, train_emb=train)
         append_to_ivf_index(new_emb.sparkSession, base, new_emb)
 
-    base = default_index_base(sf_dir) + "_" + tag
-    fp = {
-        **_source_fingerprint(sf_dir),
-        "iters": iters,
-        "k": k,
-        "tag": tag,
-        "train": "rekeyed",
-    }
-    return _ensure_cached(base, fp, build)
-
-
-def train_centroids(
-    emb: DataFrame, iters: int = 2, k: int | None = None
-) -> DataFrame:
-    """Trained centroid table (cid, pos, c) after ``iters`` full Lloyd
-    rounds; k defaults to ceil(sqrt(n)) inside the plan (no action)."""
-    k_df = (
-        emb.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).alias("_k"))
-        if k is None
-        else None
-    )
-    ex = explode_vectors(emb).localCheckpoint(eager=True)
-    cents = seed_centroids(ex, k, k_df=k_df)
-    for _ in range(iters):
-        cents = update_centroids(ex, assign_nearest(ex, cents))
-    return cents
+    base = default_index_base(sf_dir) + "_append"
+    return _ensure_cached(base, _source_fingerprint(sf_dir), build)
 
 
 def build_ivf_index(
-    emb: DataFrame,
-    base: str,
-    iters: int = 2,
-    k: int | None = None,
-    train_emb: DataFrame | None = None,
+    emb: DataFrame, base: str, train_emb: DataFrame | None = None
 ) -> None:
-    """OFFLINE: train the quantizer and persist the two index artifacts
-    (see module docstring). The vectors table is written partitioned by
-    cell — the write shuffles once on the assignment, and every later
-    probe prunes to its cells' files. ``train_emb`` optionally
-    substitutes the TRAINING view (e.g. a densely re-keyed copy when
-    ``emb``'s id space has holes below k — seeding draws from
-    ``vec_id < k``); the stored vectors always come from ``emb``."""
-    cents = train_centroids(
-        emb if train_emb is None else train_emb, iters=iters, k=k
-    )
+    """OFFLINE: train the quantizer (k = ceil(sqrt(n)), two Lloyd
+    rounds) and persist the two index artifacts (see module docstring).
+    The vectors table is written partitioned by cell — the write
+    shuffles once on the assignment, and every later probe prunes to
+    its cells' files. ``train_emb`` optionally substitutes the TRAINING
+    view (e.g. a densely re-keyed copy when ``emb``'s id space has
+    holes below k — seeding draws from ``vec_id < k``); the stored
+    vectors always come from ``emb``."""
+    train = emb if train_emb is None else train_emb
+    k_df = train.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).alias("_k"))
+    ex = explode_vectors(train).localCheckpoint(eager=True)
+    cents = train_centroids(ex, iters=2, k_df=k_df)
     cents.write.mode("overwrite").parquet(centroids_path(base))
-    ex = explode_vectors(emb)
-    assigned = assign_nearest(ex, cents).select(
-        "vec_id", F.col("cid").alias("cell")
-    )
-    (
-        emb.join(assigned, "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(vectors_path(base))
-    )
+    _write_cells(emb, cents, base, "overwrite")
 
 
 def append_to_ivf_index(
@@ -234,230 +189,50 @@ def append_to_ivf_index(
     balance degrades only as far as the data drifts from the trained
     quantizer, which is the usual signal to schedule a retrain."""
     cents = spark.read.parquet(centroids_path(base))
-    ex = explode_vectors(new_emb)
-    assigned = assign_nearest(ex, cents).select(
+    _write_cells(new_emb, cents, base, "append")
+
+
+def _write_cells(
+    emb: DataFrame, cents: DataFrame, base: str, mode: str
+) -> None:
+    """``emb`` plus its nearest-centroid ``cell``, written into the
+    cell-partitioned vectors table."""
+    assigned = assign_nearest(explode_vectors(emb), cents).select(
         "vec_id", F.col("cid").alias("cell")
     )
     (
-        new_emb.join(assigned, "vec_id")
-        .write.mode("append")
+        emb.join(assigned, "vec_id")
+        .write.mode(mode)
         .partitionBy("cell")
         .parquet(vectors_path(base))
     )
 
 
-def _query_long(spark: SparkSession, qv: list[float]) -> DataFrame:
-    """(pos, qv) long form of the query vector — a k-free tiny frame."""
-    return spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(qv)], "pos int, q double"
-    )
-
-
-def probe_ivf_index(
+def probe_ivf(
     spark: SparkSession,
     base: str,
-    qv: list[float],
+    queries: DataFrame,
     nprobe: int = 2,
     topk: int = 5,
-    exclude_id: int | None = None,
-    min_cell_sim: float = -1.0,
-) -> DataFrame:
-    """ONLINE probe against a persisted index: rank the k stored
-    centroids by cosine to ``qv`` (k-row work), then broadcast the top
-    ``nprobe`` cell ids into the partitioned vectors table — dynamic
-    partition pruning keeps the scan to those cells — and return the
-    cosine top-k within them. No driver-side collect anywhere; the
-    probed cell set lives inside the plan.
-
-    ``min_cell_sim`` floors the centroid cosine a cell must clear to be
-    probed (skip cells pointing away from the query even when nprobe
-    would allow them). It doubles as the selective predicate Spark's
-    DynamicPartitionPruning rule requires on the build side — without
-    it the probe would scan every cell directory despite the join."""
-    q = _query_long(spark, qv)
-    q_norm = float(sum(v * v for v in qv)) ** 0.5
-    if q_norm == 0.0:
-        raise ValueError("probe_ivf_index: zero-norm query vector")
-
-    cents = spark.read.parquet(centroids_path(base))
-    scored = (
-        cents.join(F.broadcast(q), "pos")
-        .groupBy("cid")
-        .agg(
-            F.sum(F.col("c") * F.col("q")).alias("dot"),
-            F.sum(F.col("c") * F.col("c")).alias("cc"),
-        )
-        .select(
-            "cid",
-            stable_round(
-                F.col("dot") / (F.sqrt("cc") * F.lit(q_norm)), 6
-            ).alias("qsim"),
-        )
-    )
-    top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
-        .orderBy(F.col("qsim").desc(), F.col("cid").asc())
-        .limit(nprobe)
-        .select(F.col("cid").alias("cell"))
-    )
-
-    vecs = spark.read.parquet(vectors_path(base))
-    if exclude_id is not None:
-        vecs = vecs.filter(F.col("vec_id") != exclude_id)
-    qv_arr = F.array(*[F.lit(float(v)) for v in qv])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv_arr,
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    vnorm = F.sqrt(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
-    # zero-norm stored vectors would score NaN (which Spark sorts above
-    # every double) — drop them before the cosine instead of letting a
-    # degenerate vector outrank every real match
-    from pyspark.sql import Window
-
-    cand = (
-        vecs.join(F.broadcast(top_cells), "cell")
-        .filter(vnorm > 0)
-        .select(
-            "vec_id",
-            "cell",
-            stable_round(dot / (vnorm * F.lit(q_norm)), 6).alias("cos_sim"),
-        )
-    )
-    # serve-side dedup by vec_id: the streaming ingest path is
-    # at-least-once, so a replayed micro-batch can leave the same
-    # vector in the store twice — keep each vec_id's best-scoring row
-    # so replays never surface duplicate ids in the top-k
-    dw = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cell").asc()
-    )
-    return (
-        cand.withColumn("_dd", F.row_number().over(dw))
-        .filter(F.col("_dd") == 1)
-        .drop("_dd")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
-def probe_ivf_store(
-    spark: SparkSession,
-    base: str,
-    q_emb: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    exclude_id: int | None = None,
-    min_cell_sim: float = -1.0,
     pool=None,
 ) -> DataFrame:
-    """In-plan variant of :func:`probe_ivf_index`: the query vector is a
-    ONE-ROW DataFrame with a single array column ``qv`` (e.g. selected
-    out of the corpus, or parallelize'd from a client request), so the
-    whole probe — centroid ranking, cell selection, in-cell scoring —
-    stays inside one Spark plan with no driver-side collect at all.
+    """ONLINE probe of a ``(q_id, qv)`` panel against a persisted index:
+    ``(q_id, vec_id, cell, cos_sim, rk)``, each query's cosine top-k.
 
-    Same physical shape as the literal path: centroid ranking is k-row
-    work against the broadcast exploded query; the top-``nprobe`` cell
-    ids broadcast into the cell-PARTITIONED vectors table where dynamic
-    partition pruning bounds the scan (tests/test_ivf_store.py asserts
-    ``dynamicpruning`` on this plan too); top-k compiles to
-    TakeOrderedAndProject. Zero-norm stored vectors are dropped before
-    the cosine (NaN would sort above every real score)."""
-    q_long = q_emb.select(
-        F.posexplode(F.col("qv").cast("array<double>")).alias("pos", "q")
-    )
-    qn = q_long.agg(F.sqrt(F.sum(F.col("q") * F.col("q"))).alias("qn"))
-
-    cents = spark.read.parquet(centroids_path(base))
-    scored = (
-        cents.join(F.broadcast(q_long), "pos")
-        .groupBy("cid")
-        .agg(
-            F.sum(F.col("c") * F.col("q")).alias("dot"),
-            F.sum(F.col("c") * F.col("c")).alias("cc"),
-        )
-        .crossJoin(F.broadcast(qn))
-        .select(
-            "cid",
-            stable_round(
-                F.col("dot") / (F.sqrt("cc") * F.col("qn")), 6
-            ).alias("qsim"),
-        )
-    )
-    top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
-        .orderBy(F.col("qsim").desc(), F.col("cid").asc())
-        .limit(nprobe)
-        .select(F.col("cid").alias("cell"))
-    )
-
-    vecs = spark.read.parquet(vectors_path(base))
-    if exclude_id is not None:
-        vecs = vecs.filter(F.col("vec_id") != exclude_id)
-    if pool is not None:
-        # restrict the CANDIDATE pool (e.g. appended-only) — the cell
-        # ranking above still runs over the full stored quantizer
-        vecs = vecs.filter(pool)
-    from pyspark.sql import Window
-
-    cand = (
-        vecs.join(F.broadcast(top_cells), "cell")
-        .crossJoin(F.broadcast(q_emb.select("qv")))
-        .filter(vec_norm(F.col("embedding")) > 0)
-        .select(
-            "vec_id",
-            "cell",
-            stable_round(
-                vec_cosine(F.col("embedding"), F.col("qv")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    # same replay-defense dedup as probe_ivf_index (see comment there)
-    dw = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cell").asc()
-    )
-    return (
-        cand.withColumn("_dd", F.row_number().over(dw))
-        .filter(F.col("_dd") == 1)
-        .drop("_dd")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
-def probe_ivf_index_many(
-    spark: SparkSession,
-    base: str,
-    q_df: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    min_cell_sim: float = -1.0,
-) -> DataFrame:
-    """Batched multi-query probe against a persisted index: ``q_df`` is
-    (q_id, qv) — a whole panel of query vectors scored in ONE plan.
     Centroid ranking is k x |Q| rows (a per-q_id window picks each
     query's top-``nprobe`` cells); the (q_id, cell) pairs broadcast
-    into the cell-partitioned store; the final per-query top-k is a
-    window over candidates only. This is the serving-path shape: the
-    per-batch cost is |Q| x (k + nprobe cells), never the corpus.
+    into the cell-partitioned store, where dynamic partition pruning
+    bounds the scan to the probed cells; the per-query top-k is a
+    window over candidates only. Per-call cost is |Q| x (k + nprobe
+    cells), never the corpus, and the panel may be a literal frame or
+    a selection inside the caller's plan.
 
-    Zero-norm queries produce no output rows (their centroid cosine is
-    NULL-division-guarded out); zero-norm stored vectors are dropped
-    before scoring, as in the single-query probe."""
-    from pyspark.sql import Window
-
-    q_long = q_df.select(
+    ``pool`` restricts the CANDIDATE vectors (e.g. ``vec_id != 0`` to
+    leave the query out, or appended-only); cells are still ranked over
+    the full stored quantizer. Zero-norm queries produce no rows;
+    zero-norm stored vectors are dropped before the cosine (NaN would
+    sort above every real score)."""
+    q_long = queries.select(
         "q_id",
         F.posexplode(F.col("qv").cast("array<double>")).alias("pos", "q"),
     )
@@ -486,16 +261,17 @@ def probe_ivf_index_many(
         F.col("qsim").desc(), F.col("cid").asc()
     )
     top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
-        .withColumn("_rk", F.row_number().over(cw))
+        scored.withColumn("_rk", F.row_number().over(cw))
         .filter(F.col("_rk") <= nprobe)
         .select("q_id", F.col("cid").alias("cell"))
     )
 
     vecs = spark.read.parquet(vectors_path(base))
+    if pool is not None:
+        vecs = vecs.filter(pool)
     cand = (
         vecs.join(F.broadcast(top_cells), "cell")
-        .join(F.broadcast(q_df), "q_id")
+        .join(F.broadcast(queries), "q_id")
         .filter(vec_norm(F.col("embedding")) > 0)
         .select(
             "q_id",
@@ -506,8 +282,10 @@ def probe_ivf_index_many(
             ).alias("cos_sim"),
         )
     )
-    # replay-defense dedup by (q_id, vec_id) before ranking (see
-    # probe_ivf_index): at-least-once ingest can duplicate a vector
+    # serve-side dedup by (q_id, vec_id): the streaming ingest path is
+    # at-least-once, so a replayed micro-batch can leave the same
+    # vector in the store twice — keep each vec_id's best-scoring row
+    # so replays never surface duplicate ids in a top-k
     ddw = Window.partitionBy("q_id", "vec_id").orderBy(
         F.col("cos_sim").desc(), F.col("cell").asc()
     )

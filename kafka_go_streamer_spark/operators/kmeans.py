@@ -120,6 +120,23 @@ def update_centroids(ex: DataFrame, assigned: DataFrame) -> DataFrame:
     )
 
 
+def train_centroids(
+    ex: DataFrame,
+    k: int | None = None,
+    iters: int = 2,
+    k_df: DataFrame | None = None,
+) -> DataFrame:
+    """The Lloyd loop: centroids ``(cid, pos, c)`` after ``iters`` full
+    iterations from the first-``k`` seeds over the exploded corpus
+    ``ex`` (pin it first: every iteration re-reads it). ``k_df``
+    overrides ``k`` with a data-derived count (see
+    :func:`seed_centroids`)."""
+    cents = seed_centroids(ex, k, k_df=k_df)
+    for _ in range(iters):
+        cents = update_centroids(ex, assign_nearest(ex, cents))
+    return cents
+
+
 def lloyd(
     emb: DataFrame,
     k: int = 8,
@@ -128,16 +145,10 @@ def lloyd(
     vec_col: str = "embedding",
     k_df: DataFrame | None = None,
 ) -> DataFrame:
-    """``iters`` full Lloyd iterations; returns the FINAL assignment
-    ``(vec_id, cluster, d2)`` computed from the trained centroids.
-    ``k_df`` overrides ``k`` with a data-derived count (see
-    :func:`seed_centroids`)."""
+    """The FINAL assignment ``(vec_id, cluster, d2)`` against the
+    centroids of :func:`train_centroids`."""
     ex = explode_vectors(emb, id_col, vec_col).localCheckpoint(eager=True)
-    cents = seed_centroids(ex, k, k_df=k_df)
-    for _ in range(iters):
-        assigned = assign_nearest(ex, cents)
-        cents = update_centroids(ex, assigned)
-    return assign_nearest(ex, cents).select(
+    return assign_nearest(ex, train_centroids(ex, k, iters, k_df)).select(
         "vec_id", F.col("cid").alias("cluster"), "d2"
     )
 

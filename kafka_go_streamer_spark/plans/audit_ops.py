@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions import text as X
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import cpu_fan, load_table
@@ -1128,9 +1129,7 @@ def multimodal_phash_hamming_hist(
     d = load_table(spark, sf_dir, "documents")
     sigs = d.select(
         "doc_id",
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("sig"),
+        md5_60("text").alias("sig"),
     )
     bands = sigs.select(
         "doc_id",

@@ -84,6 +84,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions import text as X
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.plans.text import PREP_LANG
@@ -147,10 +148,6 @@ KLL_EPS_BY_K = {32: 0.12, 128: 0.04, 512: 0.012}
 
 def _md5long_sql(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
-def _md5long(col) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # --------------------------------------------------- events_transition_dwell
@@ -631,7 +628,7 @@ def storage_bucket_pruning_audit(
     b_fan = F.explode(
         F.array(*[F.lit(b) for b in BUCKET_B_GRID])
     ).alias("b")
-    bucket = _md5long(F.col("o_custkey").cast("string")) % F.col("b")
+    bucket = md5_60("o_custkey") % F.col("b")
     rows_b = (
         o.select("o_custkey", b_fan)
         .select("b", bucket.alias("bucket"))
@@ -2102,7 +2099,7 @@ def dedup_shingle_selectivity(
     harr = dw.select(
         "doc_id",
         *[
-            F.transform(shingle_k_of(F.col("_w"), k), _md5long).alias(
+            F.transform(shingle_k_of(F.col("_w"), k), md5_60).alias(
                 f"_h{k}"
             )
             for k in SHINGLE_K_GRID

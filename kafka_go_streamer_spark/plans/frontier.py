@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import load_table
@@ -2185,8 +2186,6 @@ def stats_join_sample_estimators(
 
     Reference parity: the reference keeps no statistics (SURVEY.md
     §2.1) — estimator economics are engine-extension surface."""
-    from kafka_go_streamer_spark.plans.fidelity import _md5long
-
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     act = (
@@ -2194,16 +2193,16 @@ def stats_join_sample_estimators(
         .join(l.select(F.col("l_orderkey").alias("o_orderkey")), "o_orderkey")
         .agg(F.count(F.lit(1)).alias("actual_rows"))
     )
-    o_row = _md5long(F.concat(F.col("o_orderkey").cast("string"), F.lit("or")))
-    l_row = _md5long(
+    o_row = md5_60(F.concat(F.col("o_orderkey").cast("string"), F.lit("or")))
+    l_row = md5_60(
         F.concat(
             F.col("l_orderkey").cast("string"),
             F.lit("-"),
             F.col("l_linenumber").cast("string"),
         )
     )
-    o_key = _md5long(F.col("o_orderkey").cast("string"))
-    l_key = _md5long(F.col("l_orderkey").cast("string"))
+    o_key = md5_60("o_orderkey")
+    l_key = md5_60("l_orderkey")
 
     # the hash-sample rates are NESTED (16 | 64 | 256: h % 256 == 0
     # implies h % 64 == 0 implies h % 16 == 0), so ONE join per design

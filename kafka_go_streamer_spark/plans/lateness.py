@@ -82,6 +82,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import load_table
@@ -113,26 +114,19 @@ DUP_GAP_MAX_US = 7_200_000_000
 
 
 # --------------------------------------------------------------- helpers
-def _h60(col: Column, salt: str) -> Column:
-    """Deterministic 60-bit integer hash of a key + salt, identical in
-    Spark and DuckDB: first 15 hex chars of md5(key || salt)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col.cast("string"), F.lit(salt))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-
-
 def _h60_sql(salt: str) -> str:
+    """SQL twin of ``md5_60(event_id || salt)``."""
     return f"('0x' || substr(md5(event_id::VARCHAR || '{salt}'), 1, 15))::BIGINT"
 
 
 def jitter_us(col: Column) -> Column:
     """Seeded arrival jitter in integer microseconds: body/tail mixture
     keyed only on the event id (salts 'lt'/'lm')."""
-    mag = _h60(col, "lm")
+    key = col.cast("string")
+    mag = md5_60(F.concat(key, F.lit("lm")))
     return F.when(
-        _h60(col, "lt") % TAIL_MOD == 0, mag % (TAIL_MAX_US + 1)
+        md5_60(F.concat(key, F.lit("lt"))) % TAIL_MOD == 0,
+        mag % (TAIL_MAX_US + 1),
     ).otherwise(mag % (BODY_MAX_US + 1))
 
 
@@ -529,7 +523,8 @@ def events_watermark_dedup_audit(
     delay grid fans only the dup-pair frame (1/4 of events x 4) into
     a 4-row aggregate."""
     base = jittered_arrivals(load_table(spark, sf_dir, "events"))
-    gap = _h60(F.col("event_id"), "dg") % (DUP_GAP_MAX_US + 1)
+    eid = F.col("event_id").cast("string")
+    gap = md5_60(F.concat(eid, F.lit("dg"))) % (DUP_GAP_MAX_US + 1)
     origs = base.select(
         "event_id",
         "us",
@@ -539,7 +534,7 @@ def events_watermark_dedup_audit(
         F.lit(None).cast("long").alias("gap_us"),
     )
     dups = (
-        base.filter(_h60(F.col("event_id"), "df") % DUP_MOD == 0)
+        base.filter(md5_60(F.concat(eid, F.lit("df"))) % DUP_MOD == 0)
         .select(
             "event_id",
             "us",

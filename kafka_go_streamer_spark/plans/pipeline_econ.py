@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions import text as X
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import load_table
@@ -1045,7 +1046,6 @@ def storage_layout_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink is Kafka, main.go:544-651) — this is engine-extension
     machinery for the tables this repo materializes."""
     from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.fidelity import _md5long
 
     g = 1 << Z_GRID_BITS
     e = load_table(spark, sf_dir, "events")
@@ -1071,8 +1071,7 @@ def storage_layout_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "ubkt",
-            (_md5long(F.col("user_id").cast("string"))
-             % LAYOUT_FILES).cast("long"),
+            (md5_60("user_id") % LAYOUT_FILES).cast("long"),
         )
     )
     z = F.expr(

@@ -15,7 +15,7 @@ from kafka_go_streamer_spark.functions.vectors import cosine, cosine_sql
 from kafka_go_streamer_spark.operators.ivf_store import (
     ensure_ivf_index,
     ensure_ivf_index_with_append,
-    probe_ivf_store,
+    probe_ivf,
 )
 from kafka_go_streamer_spark.operators.kmeans import (
     _assign_sql,
@@ -415,20 +415,21 @@ def ann_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path re-ran n·sqrt(n) training per invocation and measured x17 wall
     at x10 data (BENCH_SCALEUP r6); the probe's online cost is
     ~nprobe·sqrt(n) scoring rows. The query vector (vec_id 0) stays
-    inside the plan — no driver collect anywhere (probe_ivf_store).
+    inside the plan — no driver collect anywhere (probe_ivf over a
+    one-query panel).
 
     Oracle note: nprobe=2 probes the two best TRAINED cells by centroid
     cosine, so unlike the inline query (nprobe=1 on the query's own
     cell) the SQL twin ranks cells explicitly; both engines rank the
     ROUNDED centroid cosine with cid tiebreak."""
     emb = load_table(spark, sf_dir, "embeddings")
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
-    q_emb = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
+    base = ensure_ivf_index(emb, sf_dir)
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
-    return probe_ivf_store(
-        spark, base, q_emb, nprobe=2, topk=5, exclude_id=0
-    )
+    return probe_ivf(
+        spark, base, q, nprobe=2, topk=5, pool=F.col("vec_id") != 0
+    ).select("vec_id", "cell", "cos_sim")
 
 
 #: Held-out slice for the incremental-append store: vec_id % MOD == REM
@@ -547,24 +548,17 @@ def ann_ivf_store_append_probe(
     (main.go:348-367 consume->route->produce); this is north-star ANN
     serving machinery."""
     emb = load_table(spark, sf_dir, "embeddings")
-    resident = emb.filter(
-        F.col("vec_id") % IVF_APPEND_MOD != IVF_APPEND_REM
-    )
-    arriving = emb.filter(
-        F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM
-    )
+    appended = F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM
     base = ensure_ivf_index_with_append(
-        resident, arriving, sf_dir, tag="append", iters=2
+        emb.filter(~appended), emb.filter(appended), sf_dir
     )
-    q_emb = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
-    appended = (
-        F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM
-    )
+    not_q = F.col("vec_id") != 0
 
-    def tagged(df: DataFrame, pool_name: str) -> DataFrame:
-        return df.select(
+    def tagged(pool, pool_name: str) -> DataFrame:
+        return probe_ivf(spark, base, q, nprobe=2, topk=5, pool=pool).select(
             F.lit(pool_name).alias("pool"),
             "vec_id",
             F.col("cell").cast("long").alias("cell"),
@@ -574,17 +568,8 @@ def ann_ivf_store_append_probe(
             ),
         )
 
-    full = tagged(
-        probe_ivf_store(spark, base, q_emb, nprobe=2, topk=5, exclude_id=0),
-        "all",
-    )
-    app_only = tagged(
-        probe_ivf_store(
-            spark, base, q_emb, nprobe=2, topk=5, exclude_id=0,
-            pool=appended,
-        ),
-        "appended",
-    )
+    full = tagged(not_q, "all")
+    app_only = tagged(not_q & appended, "appended")
     return full.unionByName(app_only)
 
 

@@ -90,7 +90,7 @@ def _store_frames(spark: SparkSession, sf_dir: str):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
+    base = ensure_ivf_index(emb, sf_dir)
     vecs = spark.read.parquet(vectors_path(base))
     cents = spark.read.parquet(centroids_path(base))
     return vecs, cents

@@ -567,7 +567,7 @@ def embedding_drop_rule(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
+    base = ensure_ivf_index(emb, sf_dir)
     vecs = spark.read.parquet(vectors_path(base)).select(
         "vec_id", "cell", "embedding"
     )
@@ -807,7 +807,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
+    base = ensure_ivf_index(emb, sf_dir)
     vecs = spark.read.parquet(vectors_path(base)).select(
         "vec_id", "cell", "embedding"
     )

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import load_table
@@ -57,14 +58,6 @@ def _bitlen_case(expr: str, width: int) -> str:
         for i in range(width, 0, -1)
     )
     return f"(CASE {arms} ELSE 0 END)"
-
-
-def _hll_hash(col: str):
-    """The 60-bit md5-slice hash of ``col`` as a BIGINT; the SQL twin
-    is ``('0x' || substr(md5(col::VARCHAR), 1, 15))::BIGINT``."""
-    return F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
 
 
 def _hll_rho_sql(w_expr: str) -> str:
@@ -147,7 +140,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",
-        _hll_hash("user_id").alias("h"),
+        md5_60("user_id").alias("h"),
         "user_id",
     )
     rr = h.select(
@@ -515,7 +508,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",
-        _hll_hash("user_id").alias("h"),
+        md5_60("user_id").alias("h"),
         "user_id",
     )
     rr = h.select(
@@ -841,7 +834,7 @@ def sketch_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rr = ev.select(
         "event_type",
         F.hour("ts").alias("hour_of_day"),
-        _hll_hash("user_id").alias("h"),
+        md5_60("user_id").alias("h"),
         "user_id",
     ).select(
         "event_type",
@@ -1353,7 +1346,7 @@ def sketch_hll_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of input; the exact column is the verification twin
     (one countDistinct) that production drops."""
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(_hll_hash("user_id").alias("h"))
+    h = ev.select(md5_60("user_id").alias("h"))
     p_case = F.expr(
         "CASE "
         + " ".join(

@@ -51,9 +51,12 @@ def security_options(
     (reference main.go:223-287 equivalents). The SASL credentials are
     quoted for Kafka's ``JaasConfig`` parser, a ``StreamTokenizer`` in
     whose quoted strings a backslash escapes the next character, so any
-    password reaches the login module unchanged."""
+    password reaches the login module unchanged. A username without a
+    password is rejected here, at config time, not at broker login."""
     opts: dict[str, str] = {}
     if sasl_username is not None:
+        if sasl_password is None:
+            raise ValueError("SASL username given without a password")
         proto = "SASL_SSL" if tls else "SASL_PLAINTEXT"
         opts["kafka.security.protocol"] = proto
         opts["kafka.sasl.mechanism"] = "PLAIN"

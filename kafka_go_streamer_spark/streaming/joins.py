@@ -214,7 +214,7 @@ def serve_ann_stream(
 ):
     """ONLINE ANN serving: a stream of (q_id, qv) query vectors probed
     per micro-batch against the persisted IVF index
-    (operators/ivf_store.py) via the batched multi-query probe, results
+    (operators/ivf_store.py) via the batched panel probe, results
     appended to a parquet sink — the model-serving loop over the same
     artifact the offline pipeline builds. foreachBatch (not a stream
     join) because the probe needs per-query top-k windows, which the
@@ -225,13 +225,11 @@ def serve_ann_stream(
     cost is |batch| x (k centroids + nprobe cells) — the corpus is
     never scanned (cell partition pruning), so latency tracks batch
     size, not index size."""
-    from kafka_go_streamer_spark.operators.ivf_store import (
-        probe_ivf_index_many,
-    )
+    from kafka_go_streamer_spark.operators.ivf_store import probe_ivf
 
     def _probe(batch_df: DataFrame, _batch_id: int) -> None:
         if not batch_df.isEmpty():
-            probe_ivf_index_many(
+            probe_ivf(
                 spark, index_base, batch_df, nprobe=nprobe, topk=topk
             ).write.mode("append").parquet(out_dir)
 
@@ -259,12 +257,12 @@ def ingest_ann_stream(
     foreachBatch because the append is a partitioned-parquet write
     keyed by a computed column (the cell assignment), which the
     streaming file sink can't express. At-least-once via the
-    checkpoint: a replayed batch re-appends its rows. The serving
-    paths (probe_ivf_index / probe_ivf_store / probe_ivf_index_many)
-    ENFORCE the (vec_id) dedup — each keeps one row per vec_id before
-    ranking — so a replay never surfaces duplicate ids in a served
-    top-k; the store itself can additionally be compacted with
-    operators/compaction.py on the retrain cadence."""
+    checkpoint: a replayed batch re-appends its rows. The one serving
+    path (``probe_ivf``) ENFORCES the (vec_id) dedup — it keeps one
+    row per query and vec_id before ranking — so a replay never
+    surfaces duplicate ids in a served top-k; the store itself can
+    additionally be compacted with operators/compaction.py on the
+    retrain cadence."""
     from kafka_go_streamer_spark.operators.ivf_store import (
         append_to_ivf_index,
     )

@@ -12,8 +12,9 @@ retrain cadence. The GROWING state is the set of claimed
 1. assigns its vectors to the nearest stored centroid (broadcast
    k×dims join — the same ``assign_nearest`` the index build ran, so
    a vector's streamed cell EQUALS its stored cell);
-2. scores cosine-to-own-centroid and quantizes to the
-   SEMDEDUP_SCALE bucket (same arithmetic as the batch manifest);
+2. scores cosine-to-own-centroid with the batch manifest's own
+   ``_cells`` / ``_scored`` frames (plans/semdedup.py) and quantizes
+   to the SEMDEDUP_SCALE bucket;
 3. drops vectors whose bucket is already claimed — by the committed
    store or by a smaller id in the SAME batch — and commits both the
    survivors and the batch's newly claimed buckets.
@@ -42,47 +43,31 @@ from kafka_go_streamer_spark.operators.kmeans import (
     assign_nearest,
     explode_vectors,
 )
-from kafka_go_streamer_spark.plans.semdedup import SEMDEDUP_SCALE
+from kafka_go_streamer_spark.plans.semdedup import (
+    SEMDEDUP_SCALE,
+    _cells,
+    _scored,
+)
 
 
 def score_batch(bdf: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cell, bucket) for one micro-batch of (vec_id,
-    embedding) rows: nearest-stored-centroid assignment + quantized
-    cosine-to-own-centroid. ``bucket`` is NULL for unscorable
+    embedding) rows: nearest-stored-centroid assignment, then the batch
+    manifest's own cosine-to-own-centroid (``_scored``) quantized to
+    the SEMDEDUP_SCALE bucket. ``bucket`` is NULL for unscorable
     (zero-norm) vectors."""
-    ex = explode_vectors(bdf)
-    assigned = assign_nearest(ex, cents).select(
+    cells = assign_nearest(explode_vectors(bdf), cents).select(
         "vec_id", F.col("cid").alias("cell")
     )
-    c = cents.select(
-        F.col("cid").alias("ccell"), F.col("pos").alias("cpos"), "c"
-    )
-    per = (
-        ex.join(assigned, "vec_id")
-        .join(
-            F.broadcast(c),
-            (F.col("cell") == F.col("ccell"))
-            & (F.col("pos") == F.col("cpos")),
+    vecs = bdf.select("vec_id", "embedding").join(cells, "vec_id")
+    return (
+        _cells(vecs)
+        .join(_scored(vecs, cents).select("vec_id", "cos_c"), "vec_id", "left")
+        .select(
+            "vec_id",
+            "cell",
+            stable_round(F.col("cos_c"), SEMDEDUP_SCALE).alias("bucket"),
         )
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.sum(F.col("v") * F.col("c")).alias("dot"),
-            F.sum(F.col("v") * F.col("v")).alias("vv"),
-        )
-    )
-    cn = cents.groupBy("cid").agg(
-        F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("cn")
-    )
-    cos = F.when(
-        (F.col("vv") > 0) & (F.col("cn") > 0),
-        stable_round(
-            F.col("dot") / (F.sqrt(F.col("vv")) * F.col("cn")), 6
-        ),
-    )
-    return per.join(F.broadcast(cn), per.cell == cn.cid).select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        stable_round(cos, SEMDEDUP_SCALE).alias("bucket"),
     )
 
 

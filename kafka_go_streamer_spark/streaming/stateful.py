@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kafka_go_streamer_spark.functions.hashing import md5_60
+
 RUNNING_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 _STATE_SCHEMA = "n bigint, total double"
 
@@ -209,13 +211,9 @@ def hll_registers_stream(events: DataFrame) -> DataFrame:
     complete/update mode forever without watermark eviction; the
     distinct-count estimate is read off the registers at any moment
     with the batch query's estimate arithmetic."""
-    from kafka_go_streamer_spark.plans.sketches import (
-        HLL_M,
-        _hll_hash,
-        _hll_rho_sql,
-    )
+    from kafka_go_streamer_spark.plans.sketches import HLL_M, _hll_rho_sql
 
-    h = events.select("event_type", _hll_hash("user_id").alias("h"))
+    h = events.select("event_type", md5_60("user_id").alias("h"))
     rr = h.select(
         "event_type",
         (F.col("h") % HLL_M).alias("idx"),

@@ -5,6 +5,7 @@ round-tripping through the tokenizer Kafka's ``JaasConfig`` parses
 
 from __future__ import annotations
 
+import pytest
 from py4j.java_gateway import get_field
 
 from kafka_go_streamer_spark.sources.kafka import security_options
@@ -47,6 +48,11 @@ def test_option_maps():
         "kafka.ssl.endpoint.identification.algorithm": "",
     }
     assert security_options() == {}
+
+
+def test_sasl_username_without_password_is_rejected():
+    with pytest.raises(ValueError, match="without a password"):
+        security_options(sasl_username="u", tls=True)
 
 
 def _jaas_tokens(spark, text):

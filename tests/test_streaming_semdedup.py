@@ -31,7 +31,7 @@ def test_streaming_semdedup_matches_batch(spark, sf_dir, tmp_path, n_batches):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
+    base = ensure_ivf_index(emb, sf_dir)
     cents = spark.read.parquet(centroids_path(base)).localCheckpoint()
     median = emb.approxQuantile("vec_id", [0.5], 0.0)[0]
 
