@@ -89,6 +89,17 @@ ROTATE_FRONT: tuple[str, ...] = (
     "stats_join_sample_estimators",
     "storage_layout_chooser",
     "events_watermark_dedup_audit",
+    "multimodal_decode_meta",
+    "multimodal_binary_stats",
+    "multimodal_frame_sample",
+    "multimodal_audio_meta",
+    "multimodal_resize",
+    "multimodal_byte_histogram",
+    "multimodal_dedup_blobs",
+    "multimodal_phash_bands",
+    "multimodal_format_mix",
+    "multimodal_aspect_ratio_buckets",
+    "multimodal_decode_quarantine",
 )
 
 

@@ -47,7 +47,3 @@ def eps_for_scale(scale: int) -> float:
 
 def stable_round(col: Column, scale: int) -> Column:
     return F.round(col + F.lit(eps_for_scale(scale)), scale)
-
-
-def stable_round_sql(expr: str, scale: int) -> str:
-    return f"round(({expr}) + {eps_for_scale(scale):.1e}, {scale})"

@@ -55,8 +55,3 @@ def vector_literal(values: list[float]) -> Column:
     """A query vector as a literal array column (broadcast to every row
     for brute-force scoring)."""
     return F.array(*[F.lit(float(v)) for v in values])
-
-
-def vector_literal_sql(values: list[float]) -> str:
-    inner = ", ".join(repr(float(v)) for v in values)
-    return f"[{inner}]::DOUBLE[]"

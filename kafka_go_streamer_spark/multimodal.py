@@ -1,12 +1,22 @@
-"""Multimodal column plumbing: treat image/audio/video payloads as
-opaque ``binary`` columns with typed metadata, processed by
-Arrow-batched pandas functions over ``mapInPandas``.
+"""Multimodal column plumbing: image/audio/video payloads as opaque
+``binary`` values with typed metadata, produced by per-row Python
+functions that run inside ONE Arrow stage (``arrow_stage``, the
+module's only ``mapInPandas``).
 
-The decode step is a REAL container-format parser: PNG (signature +
+The per-row functions compose in plain Python: synthesize a container
+from a document text (``image_blob_for_text``, or a WAV container),
+optionally corrupt or ``resize`` it, parse it back, and reduce it to
+metadata, frames, a histogram, a signature or the blob itself. Each
+``*_rows(key, text)`` function is one such chain; the stage applies it
+to every row of a ``(key, text)`` frame, batch or ``foreachBatch``, so
+the blob never crosses between Python and the JVM mid-chain.
+
+The parse step is a REAL container-format parser: PNG (signature +
 IHDR chunk walk with CRC verification), JPEG (SOI + marker-segment walk
-to the SOF frame header), GIF (logical screen descriptor). The heavy
-pixel libraries (PIL/libvips/ffmpeg) are not in this container, so the
-test payloads are synthesized as structurally-valid containers by
+to the SOF frame header), GIF (logical screen descriptor), RIFF/WAVE
+(chunk walk to ``fmt `` and ``data``). The heavy pixel libraries
+(PIL/libvips/ffmpeg) are not in this container, so the payloads are
+synthesized as structurally-valid containers by
 ``synthesize_image_blob`` — the parser does not know or use the
 generator's arithmetic; it reads magic bytes, walks segments, and
 unpacks FORMAT and DIMENSIONS exactly as it would for a camera file
@@ -15,8 +25,8 @@ unpacks FORMAT and DIMENSIONS exactly as it would for a camera file
 bytes after the first SOF segment — which on a real camera JPEG (SOF
 after APPn/DQT/DHT, entropy-coded scan) would not isolate the pixel
 payload; treat it as a payload fingerprint, not a pixel hash.
-Pixel-level ops (resize, colorspace) would slot into the same
-mapInPandas batch loop below.
+Pixel-level ops (a PIL resize, a colorspace change) drop into the same
+per-row chain.
 """
 
 from __future__ import annotations
@@ -24,13 +34,13 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-#: Output schema of the decode stage: the typed metadata a real decoder
+#: Output schema of the decode chain: the typed metadata a real decoder
 #: would produce for an image payload.
 DECODE_SCHEMA = (
     "key bigint, byte_len int, format string, width int, height int, "
@@ -137,46 +147,6 @@ def _meta(payload: bytes, fmt: str, width: int, height: int,
     }
 
 
-def decode_images(
-    df: DataFrame, key_col: str, blob_col: str, *, fan: bool = True
-) -> DataFrame:
-    """Decode a binary column into typed metadata via mapInPandas.
-
-    Arrow moves each partition to Python in columnar batches; the
-    decode loop is per-batch, not per-row-serialized. Narrow transform:
-    partitioning and ordering of the input are preserved, no shuffle.
-    Pass ``fan=False`` when the input is already fanned out (e.g. the
-    output of ``synthetic_image_blobs``, which parallelizes BEFORE its
-    own Python stage) — repartitioning again would shuffle the blob
-    bytes a second time for no parallelism gain (A/B'd r11: the
-    fan-before-synth chain with fan=False here reads the same single
-    shuffle but moves it from the synthesized containers to the
-    smaller text rows AND unserializes the generator stage)."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-    if fan:
-        src = fan_out(src)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [parse_image_header(bytes(b)) for b in pdf["blob"]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "key", pdf["key"].values)
-            yield out
-
-    return src.mapInPandas(batches, DECODE_SCHEMA)
-
-
-def synthetic_blobs(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
-    """Build a (key, blob) frame from a text column — the stand-in for a
-    real image/audio payload table in this container."""
-    return df.select(
-        F.col(key_col).alias("key"),
-        F.encode(F.col(text_col), "UTF-8").alias("blob"),
-    )
-
-
 #: Hash-indexed image-format palette for the blob synthesizer.
 IMAGE_FORMATS = ("png", "jpeg", "gif")
 
@@ -198,8 +168,7 @@ def image_params_for(content: bytes) -> tuple:
 def image_blob_for_text(text) -> bytes:
     """Synthesize the canonical container for a text payload: utf-8
     bytes ride as the content body; format/dims from
-    ``image_params_for``. The one call every Arrow synthesis stage
-    makes per row."""
+    ``image_params_for``. The first step of every image chain below."""
     content = str(text).encode("utf-8")
     fmt, w, h = image_params_for(content)
     return synthesize_image_blob(content, fmt, w, h)
@@ -250,84 +219,6 @@ def wav_channels_sql(col: str = "text") -> str:
     """DuckDB mirror of ``wav_params_for``'s channels arm (digest byte
     4 == hex chars 9..10)."""
     return f"(1 + ('0x' || substr(sha256({col}), 9, 2))::INT % 2)"
-
-
-def synthetic_image_blobs(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
-    """Build a (key, blob) frame of structurally-valid image containers
-    from a text column: format and dimensions derive deterministically
-    from sha256(text) (so the SQL oracle can predict what an
-    INDEPENDENT parse of the binary must find), and the text bytes ride
-    as the container's content body.
-
-    This is the test-data generator half of the decode round-trip:
-    ``parse_image_header(synthesize_image_blob(...))`` exercises real
-    magic-byte detection, chunk/segment walking, CRC checking, and
-    endian-correct dimension unpacking."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = [image_blob_for_text(text) for text in pdf["text"]]
-            yield pd.DataFrame({"key": pdf["key"], "blob": blobs})
-
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    # Fan out BEFORE the Python stage: the test parquet ships one row
-    # group, so without this the container synthesis (sha256 + CRC per
-    # row) runs in a single task no matter how many cores the cluster
-    # has. Fanning here instead of in the downstream decoder keeps the
-    # chain at ONE shuffle, placed on the small text rows rather than
-    # the synthesized containers (A/B'd r11, see BASELINE.md).
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-    )
-    return src.mapInPandas(batches, "key bigint, blob binary")
-
-
-#: Frame-sampling parameters for the (stubbed) video path: fixed frame
-#: size in bytes and the keep-every-Nth stride. A real pipeline gets
-#: these from the container header; frozen here so the SQL oracle can
-#: replay the slicing exactly.
-FRAME_BYTES = 16
-FRAME_STRIDE = 4
-
-FRAME_SCHEMA = "key bigint, frame_idx int, frame_sha string"
-
-
-def sample_frames(df: DataFrame, key_col: str, blob_col: str) -> DataFrame:
-    """Sample every ``FRAME_STRIDE``-th fixed-size frame from a binary
-    payload (the video analogue of ``decode_images``): one input row
-    fans out to ``ceil(n_frames / stride)`` output rows carrying the
-    frame index and a content hash.
-
-    A real implementation would run ffmpeg keyframe extraction inside
-    the same ``mapInPandas`` generator; the slicing stub keeps the
-    plumbing — Arrow batch transfer, 1→N row fan-out, narrow no-shuffle
-    plan — identical to production.
-    """
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys, idxs, shas = [], [], []
-            for key, blob in zip(pdf["key"], pdf["blob"]):
-                payload = bytes(blob)
-                n_frames = len(payload) // FRAME_BYTES
-                for i in range(0, n_frames, FRAME_STRIDE):
-                    frame = payload[
-                        i * FRAME_BYTES : (i + 1) * FRAME_BYTES
-                    ]
-                    keys.append(key)
-                    idxs.append(i)
-                    shas.append(hashlib.sha256(frame).hexdigest())
-            yield pd.DataFrame(
-                {"key": keys, "frame_idx": idxs, "frame_sha": shas}
-            )
-
-    return src.mapInPandas(batches, FRAME_SCHEMA)
 
 
 # -- audio: RIFF/WAVE ---------------------------------------------------
@@ -403,98 +294,6 @@ def parse_wav_header(payload: bytes) -> dict:
     }
 
 
-def synthetic_wav_blobs(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
-    """(key, blob) frame of structurally-valid WAV containers: the text
-    bytes ride as PCM data; rate/channels derive from sha256(text) so
-    the oracle can predict the parse output."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for text in pdf["text"]:
-                pcm = str(text).encode("utf-8")
-                rate, ch = wav_params_for(pcm)
-                blobs.append(synthesize_wav_blob(pcm, rate, ch))
-            yield pd.DataFrame({"key": pdf["key"], "blob": blobs})
-
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    # Fan before the Python synthesis stage (see synthetic_image_blobs).
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-    )
-    return src.mapInPandas(batches, "key bigint, blob binary")
-
-
-def decode_audio(
-    df: DataFrame, key_col: str, blob_col: str, *, fan: bool = True
-) -> DataFrame:
-    """Binary WAV payloads -> typed audio metadata via the same
-    Arrow-batched mapInPandas path as ``decode_images`` — narrow
-    per-batch transform, no shuffle, linear in input splits. Pass
-    ``fan=False`` when the input is already fanned out (output of
-    ``synthetic_wav_blobs``) to keep the chain at one shuffle."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-    if fan:
-        src = fan_out(src)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [parse_wav_header(bytes(b)) for b in pdf["blob"]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "key", pdf["key"].values)
-            yield out
-
-    return src.mapInPandas(batches, AUDIO_SCHEMA)
-
-
-#: Resize output: same (key, blob) shape as the input — resize is a
-#: blob -> blob stage that composes with decode_images downstream.
-RESIZE_SCHEMA = "key bigint, blob binary"
-
-
-def resize_images(
-    df: DataFrame, key_col: str, blob_col: str, max_side: int = 256
-) -> DataFrame:
-    """Bounding-box resize: scale every image so its longer side is at
-    most ``max_side``, preserving aspect ratio (integer arithmetic:
-    ``new_w = w * max_side // max(w, h)``), floored at 1px.
-
-    Without pixel libraries in this container the raster stage is the
-    header rewrite: the container is re-synthesized with the new
-    dimensions — a REAL rewrite (fresh PNG CRC, fresh JPEG SOF, fresh
-    GIF screen descriptor) whose output must re-parse; the payload body
-    passes through untouched. A PIL ``Image.resize`` drops into the
-    same batch loop, changing only the body handling.
-
-    Scale: blob -> blob narrow per-batch transform, composable with
-    decode in the same stage — no shuffle anywhere in the chain."""
-    src = df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_blobs = []
-            for b in pdf["blob"]:
-                payload = bytes(b)
-                meta = parse_image_header(payload)
-                w, h = meta["width"], meta["height"]
-                mx = max(w, h)
-                if mx > max_side:
-                    nw = max(1, w * max_side // mx)
-                    nh = max(1, h * max_side // mx)
-                else:
-                    nw, nh = w, h
-                content = _content_of(payload, meta["format"])
-                out_blobs.append(
-                    synthesize_image_blob(content, meta["format"], nw, nh)
-                )
-            yield pd.DataFrame({"key": pdf["key"].values, "blob": out_blobs})
-
-    return src.mapInPandas(batches, RESIZE_SCHEMA)
-
-
 def _content_of(payload: bytes, fmt: str) -> bytes:
     """Extract the content body the container carries (inverse of
     ``synthesize_image_blob``'s framing)."""
@@ -509,138 +308,20 @@ def _content_of(payload: bytes, fmt: str) -> bytes:
     raise ValueError(f"unsupported format: {fmt}")
 
 
-#: Feature-extraction output: one row per (key, bin) — the classic
-#: histogram-feature layout (a color histogram would use the same
-#: schema with bins over pixel values).
-FEATURE_SCHEMA = "key bigint, bin int, n int, density double"
+# -- per-row chains ----------------------------------------------------
 
+#: Bounding box of ``resize``: the longer side is scaled down to this.
+RESIZE_MAX_SIDE = 256
 
-def byte_histogram(
-    df: DataFrame, key_col: str, blob_col: str, bins: int = 16
-) -> DataFrame:
-    """Feature extraction from the DECODED payload: parse the container,
-    take the content body's bytes, and emit a ``bins``-bin histogram of
-    ``byte % bins`` with per-bin density — the multimodal
-    feature-extraction stage (for a raster image this same loop computes
-    a color histogram; for audio, energy bands).
+#: Bins of the content-byte histogram (``byte % HIST_BINS``).
+HIST_BINS = 16
 
-    Scale: 1 -> bins fan-out happens inside the Arrow batch; no shuffle,
-    no driver involvement; downstream similarity search consumes the
-    (key, bin, density) rows or pivots them to a dense vector."""
-    import numpy as np
-
-    src = df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys, bs, ns, ds = [], [], [], []
-            for key, b in zip(pdf["key"], pdf["blob"]):
-                payload = bytes(b)
-                meta = parse_image_header(payload)
-                content = _content_of(payload, meta["format"])
-                vals = np.frombuffer(content, dtype=np.uint8) % bins
-                counts = np.bincount(vals, minlength=bins)
-                total = max(len(content), 1)
-                for k in range(bins):
-                    keys.append(key)
-                    bs.append(k)
-                    ns.append(int(counts[k]))
-                    # epsilon matches stable_round/stabilize_rounds at scale 6
-                    ds.append(round(counts[k] / total + 5e-9, 6))
-            yield pd.DataFrame(
-                {"key": keys, "bin": bs, "n": ns, "density": ds}
-            )
-
-    return src.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def perceptual_signatures(
-    df: DataFrame, key_col: str, blob_col: str, *, fan: bool = True
-) -> DataFrame:
-    """(key, sig) frame: a fixed-width 60-bit signature of each blob's
-    DECODED content body, for banded near-duplicate blocking.
-
-    STUB NOTE: with no imaging libraries in this container, the
-    "perceptual" signature is md5 of the decoded content body (so it
-    is deterministic, engine-predictable, and sensitive only to the
-    content — not the container). Production swaps exactly this one
-    per-batch line for a real dHash/pHash over decoded pixels; the
-    Spark-side plumbing this module exercises — container parse →
-    content extraction → fixed-width integer signature, Arrow-batched,
-    only 8 bytes per blob leaving the scan — is the real shape."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = df.select(F.col(key_col).alias("key"), F.col(blob_col).alias("blob"))
-    if fan:
-        src = fan_out(src)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs = []
-            for b in pdf["blob"]:
-                payload = bytes(b)
-                if payload.startswith(_PNG_SIG):
-                    (length,) = struct.unpack_from(">I", payload, 8)
-                    content = payload[16 + length + 4 :]
-                elif payload.startswith(b"\xff\xd8"):
-                    off = 2
-                    content = b""
-                    while off + 4 <= len(payload):
-                        marker = payload[off + 1]
-                        (seglen,) = struct.unpack_from(">H", payload, off + 2)
-                        if 0xC0 <= marker <= 0xC3:
-                            content = payload[off + 2 + seglen : -2]
-                            break
-                        off += 2 + seglen
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    content = payload[13:-1]
-                else:
-                    raise ValueError("unrecognized container magic")
-                sigs.append(int(hashlib.md5(content).hexdigest()[:15], 16))
-            yield pd.DataFrame({"key": pdf["key"], "sig": sigs})
-
-    return src.mapInPandas(batches, "key bigint, sig bigint")
-
-
-def synthesize_and_decode(
-    df: DataFrame, key_col: str, text_col: str, width: int | None = None
-) -> DataFrame:
-    """Fused generate→parse: synthesize the container AND structurally
-    re-parse it inside ONE Arrow batch stage (one fan-out shuffle, one
-    Python hop), instead of chaining ``synthetic_image_blobs`` →
-    ``decode_images`` (two Python stages with the full blob crossing
-    Python→JVM→Python between them). The round-trip stays real — the
-    parser is the same independent ``parse_image_header`` walking magic
-    bytes/chunks/CRC; only the pointless inter-stage blob transfer
-    goes. This is also the production ingest shape: decode runs in the
-    same narrow stage that receives the bytes whenever possible.
-
-    Measured r11 same-session at sf0.1 (min-of-3, noop sink): two-stage
-    chain 0.702 s → fused 0.441 s (×1.6; the two-stage chain remains in
-    resize/phash queries, which exercise blob→blob composition)."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    # width: stat-based fan (sources.tables.fan_width) when the caller
-    # knows the input row count — the header walk is µs-per-row, so a
-    # full 32-way fan of a few thousand rows pays more in per-task
-    # worker round-trips than it buys in parallelism (measured: 32-task
-    # 0.705 s vs 8-task 0.537 s min-of-3 on the sf0.1 corpus).
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text")),
-        width,
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = []
-            for text in pdf["text"]:
-                metas.append(parse_image_header(image_blob_for_text(text)))
-            out = pd.DataFrame(metas)
-            out.insert(0, "key", pdf["key"].values)
-            yield out
-
-    return src.mapInPandas(batches, DECODE_SCHEMA)
-
+#: Frame-sampling parameters for the (stubbed) video path: fixed frame
+#: size in bytes and the keep-every-Nth stride. A real pipeline gets
+#: these from the container header; frozen here so the SQL oracle can
+#: replay the slicing exactly.
+FRAME_BYTES = 16
+FRAME_STRIDE = 4
 
 #: Every doc_id divisible by this gets its container's magic byte
 #: zeroed before the parse — the deterministic corruption model for the
@@ -648,87 +329,162 @@ def synthesize_and_decode(
 #: MUST reject exactly these rows).
 QUARANTINE_MOD = 37
 
+FRAME_SCHEMA = "key bigint, frame_idx int, frame_sha string"
+#: One row per (key, bin) — the classic histogram-feature layout (a
+#: color histogram would use the same schema with bins over pixels).
+FEATURE_SCHEMA = "key bigint, bin int, n int, density double"
+SIGNATURE_SCHEMA = "key bigint, sig bigint"
+BLOB_SCHEMA = "key bigint, blob binary"
 QUARANTINE_SCHEMA = "key bigint, status_format string, byte_len int"
 
 
-def synthesize_decode_quarantine(
-    df: DataFrame, key_col: str, text_col: str, width: int | None = None
-) -> DataFrame:
-    """The fused synthesize→parse stage with the ERROR PATH a real
-    ingest needs: a crawler's blobs are routinely truncated or
-    bit-rotted, and a decoder that throws on the first bad payload
-    kills the whole task (then the stage, then the job, at 100 TB —
-    after hours). Here every blob whose key is divisible by
-    QUARANTINE_MOD is corrupted (magic byte zeroed) before the SAME
-    independent ``parse_image_header`` walk; a parse failure is caught
-    PER ROW and emitted as ``status_format = 'quarantined'`` instead
-    of propagating — the job completes, and the quarantine share is a
-    queryable output instead of a stack trace.
+def resize(blob: bytes) -> bytes:
+    """Bounding-box resize: scale the image so its longer side is at
+    most ``RESIZE_MAX_SIDE``, preserving aspect ratio (integer
+    arithmetic: ``new_w = w * RESIZE_MAX_SIDE // max(w, h)``), floored
+    at 1px.
 
-    Emits (key, status_format, byte_len): the parsed container format
-    for healthy rows, 'quarantined' for rejects — only three small
-    columns leave the Arrow stage."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text")),
-        width,
+    Without pixel libraries the raster step is the header rewrite: the
+    container is re-synthesized with the new dimensions — a REAL
+    rewrite (fresh PNG CRC, fresh JPEG SOF, fresh GIF screen
+    descriptor) whose output must re-parse; the content body passes
+    through untouched."""
+    meta = parse_image_header(blob)
+    w, h = meta["width"], meta["height"]
+    mx = max(w, h)
+    if mx > RESIZE_MAX_SIDE:
+        w = max(1, w * RESIZE_MAX_SIDE // mx)
+        h = max(1, h * RESIZE_MAX_SIDE // mx)
+    return synthesize_image_blob(
+        _content_of(blob, meta["format"]), meta["format"], w, h
     )
+
+
+def body(blob: bytes) -> bytes:
+    """The content body of a parsed image container."""
+    return _content_of(blob, parse_image_header(blob)["format"])
+
+
+def histogram(blob: bytes) -> list[tuple]:
+    """``(bin, n, density)`` rows: a ``HIST_BINS``-bin histogram of
+    ``byte % HIST_BINS`` over the decoded content body (for a raster
+    image the same step computes a color histogram; for audio, energy
+    bands)."""
+    content = body(blob)
+    counts = np.bincount(
+        np.frombuffer(content, dtype=np.uint8) % HIST_BINS,
+        minlength=HIST_BINS,
+    )
+    total = max(len(content), 1)
+    # epsilon matches stable_round/stabilize_rounds at scale 6
+    return [
+        (k, int(counts[k]), round(counts[k] / total + 5e-9, 6))
+        for k in range(HIST_BINS)
+    ]
+
+
+def signature(blob: bytes) -> int:
+    """60-bit signature of the decoded content body, for banded
+    near-duplicate blocking.
+
+    STUB NOTE: with no imaging libraries in this container, the
+    "perceptual" signature is md5 of the decoded content body (so it is
+    deterministic, engine-predictable, and sensitive only to the
+    content — not the container). Production swaps exactly this line
+    for a real dHash/pHash over decoded pixels."""
+    return int(hashlib.md5(body(blob)).hexdigest()[:15], 16)
+
+
+def meta_rows(key, text) -> list[tuple]:
+    """synthesize → parse → one ``DECODE_SCHEMA`` row."""
+    return [tuple(parse_image_header(image_blob_for_text(text)).values())]
+
+
+def resized_meta_rows(key, text) -> list[tuple]:
+    """synthesize → resize → parse → one ``DECODE_SCHEMA`` row: the
+    re-parse proves the rewritten header."""
+    blob = resize(image_blob_for_text(text))
+    return [tuple(parse_image_header(blob).values())]
+
+
+def audio_rows(key, text) -> list[tuple]:
+    """synthesize a WAV container (the text bytes ride as PCM data,
+    rate/channels from ``wav_params_for``) → parse → one
+    ``AUDIO_SCHEMA`` row."""
+    pcm = str(text).encode("utf-8")
+    blob = synthesize_wav_blob(pcm, *wav_params_for(pcm))
+    return [tuple(parse_wav_header(blob).values())]
+
+
+def frame_rows(key, text) -> list[tuple]:
+    """Every ``FRAME_STRIDE``-th fixed-size frame of the text bytes
+    (the stubbed video payload), as ``(frame_idx, frame_sha)`` rows —
+    an ffmpeg keyframe extractor slots in here."""
+    payload = str(text).encode("utf-8")
+    return [
+        (i, hashlib.sha256(
+            payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
+        ).hexdigest())
+        for i in range(0, len(payload) // FRAME_BYTES, FRAME_STRIDE)
+    ]
+
+
+def histogram_rows(key, text) -> list[tuple]:
+    """synthesize → parse → ``HIST_BINS`` ``FEATURE_SCHEMA`` rows."""
+    return histogram(image_blob_for_text(text))
+
+
+def signature_rows(key, text) -> list[tuple]:
+    """synthesize → parse → one ``(sig,)`` row."""
+    return [(signature(image_blob_for_text(text)),)]
+
+
+def blob_rows(key, text) -> list[tuple]:
+    """synthesize → one ``(blob,)`` row."""
+    return [(image_blob_for_text(text),)]
+
+
+def quarantine_rows(key, text) -> list[tuple]:
+    """synthesize → corrupt (keys divisible by ``QUARANTINE_MOD``) →
+    parse, with the error path a real ingest needs: a parse failure is
+    caught PER ROW and emitted as ``status_format = 'quarantined'``
+    instead of failing the task. One ``(status_format, byte_len)``
+    row."""
+    blob = image_blob_for_text(text)
+    if int(key) % QUARANTINE_MOD == 0:
+        blob = b"\x00" + blob[1:]
+    try:
+        status = parse_image_header(blob)["format"]
+    except ValueError:
+        status = "quarantined"
+    return [(status, len(blob))]
+
+
+def arrow_stage(
+    df: DataFrame,
+    rows: Callable[[int, str], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The family's one ``mapInPandas``: apply ``rows(key, text)`` to
+    every row of a ``(key, text)`` frame; each returned tuple becomes
+    one output row after ``key``, typed by ``schema``.
+
+    Arrow moves each partition to Python in columnar batches and the
+    chain runs per row inside the batch, so 1 → N fan-outs (frames,
+    histogram bins) happen in the batch and only the chain's output
+    crosses back to the JVM. Narrow transform: the stage never
+    repartitions — scan width is the caller's."""
+    names = [field.split()[0] for field in schema.split(",")]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            statuses = []
-            lens = []
-            for key, text in zip(pdf["key"], pdf["text"]):
-                blob = image_blob_for_text(text)
-                if int(key) % QUARANTINE_MOD == 0:
-                    blob = b"\x00" + blob[1:]
-                try:
-                    statuses.append(parse_image_header(blob)["format"])
-                except ValueError:
-                    statuses.append("quarantined")
-                lens.append(len(blob))
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "status_format": pd.Series(statuses, dtype="object"),
-                    "byte_len": pd.Series(lens, dtype="int32"),
-                }
+            yield pd.DataFrame.from_records(
+                [
+                    (key, *out)
+                    for key, text in zip(pdf["key"], pdf["text"])
+                    for out in rows(key, text)
+                ],
+                columns=names,
             )
 
-    return src.mapInPandas(batches, QUARANTINE_SCHEMA)
-
-
-def synthesize_and_sign(
-    df: DataFrame, key_col: str, text_col: str
-) -> DataFrame:
-    """Fused generate→parse→signature: synthesize the container,
-    structurally re-parse it (the same independent
-    ``parse_image_header`` + ``_content_of`` walk the two-stage chain
-    runs), and compress the decoded body to the 60-bit perceptual
-    signature — all inside ONE Arrow batch stage, so only (key, sig)
-    rows ever leave Python and the blob never round-trips through the
-    JVM. The two-stage ``synthetic_image_blobs`` →
-    ``perceptual_signatures`` chain remains for blob→blob composition
-    (resize); this is the ingest shape for signature-only consumers.
-
-    Measured r12 same-session at sf0.1 (min-of-3): two-stage chain
-    0.805 s → blob-fan variant 0.651 s → fused 0.440 s (×1.8) — the
-    same fusion win ``synthesize_and_decode`` recorded in r11."""
-    from kafka_go_streamer_spark.sources.tables import fan_out
-
-    src = fan_out(
-        df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs = []
-            for text in pdf["text"]:
-                blob = bytes(image_blob_for_text(text))
-                meta = parse_image_header(blob)
-                body = _content_of(blob, meta["format"])
-                sigs.append(int(hashlib.md5(body).hexdigest()[:15], 16))
-            yield pd.DataFrame({"key": pdf["key"], "sig": sigs})
-
-    return src.mapInPandas(batches, "key bigint, sig bigint")
+    return df.mapInPandas(batches, schema)

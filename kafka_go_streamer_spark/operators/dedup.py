@@ -130,16 +130,6 @@ def shingles_of(w: Column) -> Column:
     return F.array_distinct(shingle_stream_of(w))
 
 
-def minhash_sig(sh: Column, k: int) -> Column:
-    """k-th minhash: lexicographic min of the k-th 8-hex-char slice of
-    md5(shingle). One digest per shingle serves all NUM_HASHES
-    functions (128 md5 bits = 4 independent 32-bit hashes) — 4× less
-    hashing than a per-function salted digest, same LSH behavior."""
-    return F.array_min(
-        F.transform(sh, lambda s: F.substring(F.md5(s), 8 * k + 1, 8))
-    )
-
-
 def minhash_sig_sql(sh_expr: str, k: int) -> str:
     return (
         f"list_min(list_transform({sh_expr}, s -> substr(md5(s), {8 * k + 1}, 8)))"

@@ -37,6 +37,7 @@ queries).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import tempfile
@@ -49,6 +50,7 @@ from kafka_go_streamer_spark.functions.vectors import (
     cosine as vec_cosine,
     norm as vec_norm,
 )
+from kafka_go_streamer_spark.operators import kmeans
 from kafka_go_streamer_spark.operators.kmeans import (
     assign_nearest,
     explode_vectors,
@@ -76,15 +78,28 @@ def default_index_base(sf_dir: str) -> str:
     return os.path.join(root, key)
 
 
+def _build_digest() -> str:
+    """sha256 of the index build code: this module and the Lloyd loop
+    in ``operators/kmeans.py``. An index built by other code (a changed
+    seeding, round count or cell re-keying) is not served."""
+    h = hashlib.sha256()
+    for path in (__file__, kmeans.__file__):
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def _source_fingerprint(sf_dir: str) -> dict:
     """Size+mtime of the embeddings fixture — enough to notice the
-    driver regenerating testdata under an unchanged path."""
+    driver regenerating testdata under an unchanged path — plus the
+    digest of the code that builds the index."""
     path = os.path.join(sf_dir, "embeddings.parquet")
     try:
         st = os.stat(path)
-        return {"size": st.st_size, "mtime": int(st.st_mtime)}
+        fp = {"size": st.st_size, "mtime": int(st.st_mtime)}
     except OSError:
-        return {"size": -1, "mtime": -1}
+        fp = {"size": -1, "mtime": -1}
+    return {**fp, "code": _build_digest()}
 
 
 def _ensure_cached(base: str, fp: dict, build) -> str:
@@ -114,8 +129,9 @@ def _ensure_cached(base: str, fp: dict, build) -> str:
 def ensure_ivf_index(emb: DataFrame, sf_dir: str) -> str:
     """Build the IVF index for ``sf_dir`` exactly once (offline step),
     returning its base path. A fingerprint sidecar invalidates the cache
-    if the source fixture changes; otherwise every later call is a pure
-    read — the offline-train / online-probe split at the API level."""
+    if the source fixture or the build code changes; otherwise every
+    later call is a pure read — the offline-train / online-probe split
+    at the API level."""
     base = default_index_base(sf_dir)
     return _ensure_cached(
         base, _source_fingerprint(sf_dir), lambda: build_ivf_index(emb, base)

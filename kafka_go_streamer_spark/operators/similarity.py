@@ -1,34 +1,20 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two strategies:
-
-* **brute-force cosine top-k** — a narrow projection computing cosine
-  against a literal query vector, then global top-k
-  (TakeOrderedAndProject). Linear scan, embarrassingly parallel: the
-  right baseline, and often the right answer when the query set is
-  small.
-* **random-hyperplane LSH (SimHash for vectors)** — H fixed hyperplanes
-  -> H-bit signature -> bucket equi-join. Candidate generation never
-  materializes all pairs; at cluster scale the bucket join is an
-  ordinary shuffle join on a short key. Hyperplanes are derived
-  deterministically from md5 so Spark and the SQL oracle share them
-  as literals.
+Random-hyperplane LSH (SimHash for vectors): H fixed hyperplanes ->
+H-bit signature -> bucket equi-join. Candidate generation never
+materializes all pairs; at cluster scale the bucket join is an ordinary
+shuffle join on a short key. Hyperplanes are derived deterministically
+from md5 so Spark and the SQL oracle share them as literals.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from kafka_go_streamer_spark.functions.rounding import stable_round
-
-from kafka_go_streamer_spark.functions.vectors import (
-    as_double,
-    cosine,
-    vector_literal,
-)
+from kafka_go_streamer_spark.functions.vectors import as_double, vector_literal
 
 
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -95,26 +81,3 @@ def lsh_signature_sql(vec_expr: str, planes: list[list[float]]) -> str:
         d = f"list_dot_product({vec_expr}::DOUBLE[], [{lits}]::DOUBLE[])"
         terms.append(f"(CASE WHEN {d} > 0 THEN {2**p} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-def topk_cosine(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Brute-force cosine top-k against one query vector.
-
-    Scale: cosine is a codegen'd projection; ORDER BY+LIMIT compiles to
-    TakeOrderedAndProject (per-partition heap of k, no global sort)."""
-    q = vector_literal(query_vec)
-    out = df.select(
-        F.col(id_col),
-        "label",
-        stable_round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-    )
-    if exclude_id is not None:
-        out = out.filter(F.col(id_col) != exclude_id)
-    return out.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)

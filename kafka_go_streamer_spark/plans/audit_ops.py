@@ -36,12 +36,6 @@ mixture planner.
   overflows: the deficit is at most the total headroom by
   construction). The multilingual mixture planner's worksheet.
 
-* ``multimodal_aspect_ratio_buckets`` — aspect-ratio bucket mix of
-  the decoded image corpus (ultra_tall … ultra_wide, exact integer
-  cross-multiplication — no float ratios), per container format: the
-  bucketed-batching plan for vision-encoder training, straight off
-  the real fused decode.
-
 Scale discipline: everything aggregates small — score bins (10),
 k grid (3), source pairs (≤ S²/2 with single-digit-to-dozens S),
 language rows (5), component-size rows (≤ max cluster size). The
@@ -55,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions import text as X
-from kafka_go_streamer_spark.functions.hashing import md5_60
 from kafka_go_streamer_spark.functions.rounding import stable_round
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import cpu_fan, load_table
@@ -757,68 +750,6 @@ def sample_language_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return allocation_from_per_lang(lang_token_counters(d))
 
 
-def _aspect_buckets_sql() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    meta = ORACLES["multimodal_decode_meta"]
-    return f"""
-    WITH meta AS MATERIALIZED ({meta})
-    SELECT format,
-           CASE WHEN width * 2 <= height THEN 'ultra_tall'
-                WHEN width < height THEN 'tall'
-                WHEN width = height THEN 'square'
-                WHEN width >= height * 2 THEN 'ultra_wide'
-                ELSE 'wide' END AS ar_bucket,
-           count(*)::BIGINT AS n_blobs,
-           round(avg(width * height / 1000000.0), 4) AS mean_megapixels,
-           round(avg(byte_len), 2) AS mean_bytes
-    FROM meta GROUP BY 1, 2
-    """
-
-
-@query("multimodal_aspect_ratio_buckets", oracle=_aspect_buckets_sql)
-def multimodal_aspect_ratio_buckets(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Aspect-ratio bucket mix of the decoded image corpus, per
-    container format: vision-encoder training batches group images of
-    like aspect ratio (resize-to-bucket beats letterboxing), so this
-    table — bucket populations and their mean megapixels/bytes — IS
-    the bucketed-batching plan and the resize-budget estimate.
-    Buckets are decided by exact integer cross-multiplication
-    (width·2 ≤ height etc.), never a float ratio, so bucket edges are
-    deterministic on both engines.
-
-    Scale: dimensions come off the audited one-Arrow-stage fused
-    decode (``synthesize_and_decode``); the mix is one
-    map-side-combined aggregate on a (format × 5-bucket) key — decode
-    scan speed at any corpus size."""
-    from kafka_go_streamer_spark.multimodal import synthesize_and_decode
-    from kafka_go_streamer_spark.sources.tables import fan_width, table_rows
-
-    d = load_table(spark, sf_dir, "documents")
-    meta = synthesize_and_decode(
-        d, "doc_id", "text",
-        width=fan_width(spark, table_rows(sf_dir, "documents")),
-    )
-    bucket = (
-        F.when(F.col("width") * 2 <= F.col("height"), "ultra_tall")
-        .when(F.col("width") < F.col("height"), "tall")
-        .when(F.col("width") == F.col("height"), "square")
-        .when(F.col("width") >= F.col("height") * 2, "ultra_wide")
-        .otherwise("wide")
-    )
-    return meta.groupBy(
-        "format", bucket.alias("ar_bucket")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_blobs"),
-        stable_round(
-            F.avg(F.col("width") * F.col("height") / 1000000.0), 4
-        ).alias("mean_megapixels"),
-        stable_round(F.avg("byte_len"), 2).alias("mean_bytes"),
-    )
-
-
 #: Top-of-vocabulary size for the Zipf fit.
 ZIPF_TOP_N = 1000
 
@@ -1055,126 +986,6 @@ def quality_ece_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("auc"),
         )
-    )
-
-
-def _phash_hamming_sql() -> str:
-    from kafka_go_streamer_spark.plans.multimodal_queries import (
-        PHASH_BAND_BITS,
-        PHASH_BANDS,
-        PHASH_BUCKET_CAP,
-    )
-
-    return f"""
-    WITH sigs AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(text), 1, 15))::BIGINT AS sig
-      FROM documents
-    ),
-    bands AS (
-      SELECT doc_id, sig, b.band,
-             (sig >> (b.band * {PHASH_BAND_BITS}))
-               & {(1 << PHASH_BAND_BITS) - 1} AS key
-      FROM sigs, (SELECT unnest(range(0, {PHASH_BANDS})) AS band) b
-    ),
-    capped AS (
-      SELECT doc_id, sig, band, key FROM (
-        SELECT *, count(*) OVER (PARTITION BY band, key) AS _n
-        FROM bands
-      ) WHERE _n <= {PHASH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sig AS sig_a, b.sig AS sig_b
-      FROM capped a JOIN capped b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    )
-    SELECT (bit_count(xor(sig_a, sig_b)) // 8)::INTEGER AS ham_bucket,
-           count(*)::BIGINT AS n_pairs,
-           min(bit_count(xor(sig_a, sig_b)))::INTEGER AS min_ham,
-           max(bit_count(xor(sig_a, sig_b)))::INTEGER AS max_ham
-    FROM cand GROUP BY 1
-    """
-
-
-@query("multimodal_phash_hamming_hist", oracle=_phash_hamming_sql)
-def multimodal_phash_hamming_hist(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hamming-distance histogram of the pHash band candidates (8-bit
-    buckets over the 60-bit signature): where the candidate mass sits
-    relative to the verification threshold. ``multimodal_phash_bands``
-    reports counts at ONE threshold (PHASH_HAMMING); this is the
-    distribution an operator reads to MOVE it — a bimodal histogram
-    (near-zero mass + band-collision noise floor) confirms the
-    threshold; a flat one says the bands are pure collisions and the
-    signature needs more bits.
-
-    Scale: identical banding discipline to the bands query (in-row
-    band explode, capped buckets, candidates only); the histogram adds
-    one xor+bit_count projection (codegen) and a ≤8-row aggregate. The
-    signature stage here uses the text-side md5 signature TWIN the
-    bands oracle pins (injective synthesis ⇒ same group structure), so
-    the histogram needs no blob decode at all — this is the cheap
-    re-tuning query between decode-backed audits."""
-    from pyspark.sql import Window as W
-
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.multimodal_queries import (
-        PHASH_BAND_BITS,
-        PHASH_BANDS,
-        PHASH_BUCKET_CAP,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    sigs = d.select(
-        "doc_id",
-        md5_60("text").alias("sig"),
-    )
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(PHASH_BANDS - 1))).alias(
-            "band"
-        ),
-    ).select(
-        "doc_id",
-        "sig",
-        "band",
-        F.expr(
-            f"shiftrightunsigned(sig, band * {PHASH_BAND_BITS})"
-            f" & {(1 << PHASH_BAND_BITS) - 1}"
-        ).alias("key"),
-    )
-    wn = W.partitionBy("band", "key")
-    capped = pinned(
-        bands.withColumn("_n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("_n") <= PHASH_BUCKET_CAP)
-        .drop("_n")
-    )
-    a = capped.select(
-        F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"),
-        "band", "key",
-    )
-    b = capped.select(
-        F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"),
-        "band", "key",
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.groupBy(
-        F.expr(
-            "cast(bit_count(sig_a ^ sig_b) div 8 as int)"
-        ).alias("ham_bucket")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min(ham).cast("int").alias("min_ham"),
-        F.max(ham).cast("int").alias("max_ham"),
     )
 
 

@@ -805,87 +805,9 @@ def pack_shard_span_sensitivity(
     )
 
 
-# ---------------------------------------------- multimodal_decode_quarantine
-
 #: Weak-link threshold for the transitive-merge audit: the similarity
 #: the strict-mode dedup (`dedup_minhash_lsh_strict`) is tuned around.
 WEAK_LINK_J = 0.5
-
-
-def _quarantine_sql() -> str:
-    from kafka_go_streamer_spark.multimodal import QUARANTINE_MOD
-    from kafka_go_streamer_spark.plans.multimodal_queries import (
-        _FMT_SQL,
-        _OVERHEAD_SQL,
-    )
-
-    return f"""
-    WITH meta AS (
-      SELECT CASE WHEN doc_id % {QUARANTINE_MOD} = 0 THEN 'quarantined'
-                  ELSE {_FMT_SQL} END AS status_format,
-             octet_length(encode(text)) + {_OVERHEAD_SQL} AS byte_len
-      FROM documents
-    ),
-    nn AS (SELECT count(*) AS n FROM documents)
-    SELECT status_format,
-           count(*)::BIGINT AS n_blobs,
-           round(avg(byte_len), 2) AS mean_bytes,
-           round(count(*) * 1.0 / max(nn.n), 6) AS corpus_share
-    FROM meta CROSS JOIN nn GROUP BY 1
-    """
-
-
-@query("multimodal_decode_quarantine", oracle=_quarantine_sql)
-def multimodal_decode_quarantine(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The decode error path, priced: blobs whose key is divisible by
-    QUARANTINE_MOD arrive corrupted (magic byte zeroed — the fixture's
-    stand-in for truncated crawls and bit rot), the fused Arrow stage
-    catches the parse failure PER ROW, and this table reports the
-    healthy format mix beside the quarantine bucket. The number a real
-    ingest pages on: a quarantine share jumping from ~3% to 30% means
-    the upstream fetcher broke, and the pipeline kept running to tell
-    you so instead of dying mid-stage.
-
-    Oracle: the corruption set and every healthy row's format/bytes
-    are predicted from the generator's arithmetic — the parse MUST
-    reject exactly the corrupted keys (no container magic starts 0x00)
-    and must parse everything else.
-
-    Scale: the quarantine stage emits three small columns per blob
-    (signature-only consumer discipline — blobs never round-trip
-    through the JVM); the rollup is one tiny aggregate."""
-    from kafka_go_streamer_spark.multimodal import (
-        synthesize_decode_quarantine,
-    )
-    from kafka_go_streamer_spark.sources.tables import fan_width, table_rows
-
-    d = load_table(spark, sf_dir, "documents")
-    meta = synthesize_decode_quarantine(
-        d, "doc_id", "text",
-        width=fan_width(spark, table_rows(sf_dir, "documents")),
-    )
-    # corpus size off the RAW table: one blob per document by
-    # construction, and counting meta instead would re-inline the
-    # Arrow stage into a second consumer
-    nn = d.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        meta.groupBy("status_format")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_blobs"),
-            stable_round(F.avg("byte_len"), 2).alias("mean_bytes"),
-        )
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "status_format",
-            "n_blobs",
-            "mean_bytes",
-            stable_round(F.col("n_blobs") * 1.0 / F.col("n"), 6).alias(
-                "corpus_share"
-            ),
-        )
-    )
 
 
 # --------------------------------------------------- dedup_weak_link_audit

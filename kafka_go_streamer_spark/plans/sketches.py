@@ -21,7 +21,7 @@ north-star training-pipeline surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions.hashing import md5_60
@@ -73,6 +73,38 @@ def _hll_rho_sql(w_expr: str) -> str:
 #: the final division touches floating point.
 def _hll_weight_sql(reg_expr: str) -> str:
     return f"(CAST(1 AS BIGINT) << (55 - {reg_expr}))"
+
+
+def hll_ranks(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``cols`` of ``df`` plus each row's register index ``idx`` and
+    rank ``rho`` from the 60-bit ``md5_60(user_id)`` hash: the low 6
+    bits pick the register, the 54-bit suffix's leading-zero run is the
+    rank. The one hash-to-register step of every HLL sketch here and of
+    the streaming twin (``streaming/stateful.hll_registers_stream``)."""
+    h = df.select(*cols, md5_60("user_id").alias("h"))
+    return h.select(
+        *[c for c in h.columns if c != "h"],
+        (F.col("h") % HLL_M).alias("idx"),
+        F.expr(_hll_rho_sql("(h >> 6)")).alias("rho"),
+    )
+
+
+def hll_registers(ranks: DataFrame, *keys: str) -> DataFrame:
+    """``(keys..., idx, reg)``: the per-register max rank of each
+    ``keys`` group of a ``hll_ranks`` frame. max is associative and
+    commutative, so registers built on any split of the rows merge by
+    the same max."""
+    return ranks.groupBy(*keys, "idx").agg(F.max("rho").alias("reg"))
+
+
+def hll_estimate() -> Column:
+    """Raw HLL estimate of a register group: ``HLL_NUMERATOR / (Σ
+    2^(55-reg) + empty · 2^55)``, an exact BIGINT sum until the one
+    float division. An aggregate expression over ``reg`` rows."""
+    return F.lit(HLL_NUMERATOR) / (
+        F.sum(F.expr(_hll_weight_sql("reg")))
+        + (HLL_M - F.count(F.lit(1))) * F.lit(2**55).cast("long")
+    )
 
 
 @query(
@@ -137,19 +169,8 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be dropped at 100 TB — the sketch IS the product. Estimate
     arithmetic is exact-integer until one final float division, so
     Spark and DuckDB agree bit-for-bit."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        "event_type",
-        md5_60("user_id").alias("h"),
-        "user_id",
-    )
-    rr = h.select(
-        "event_type",
-        (F.col("h") % HLL_M).alias("idx"),
-        F.expr(_hll_rho_sql("(h >> 6)")).alias("rho"),
-        "user_id",
-    )
-    regs = rr.groupBy("event_type", "idx").agg(F.max("rho").alias("reg"))
+    rr = hll_ranks(load_table(spark, sf_dir, "events"), "event_type", "user_id")
+    regs = hll_registers(rr, "event_type")
     merged = (
         regs.groupBy("idx")
         .agg(F.max("reg").alias("reg"))
@@ -158,10 +179,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     allregs = regs.unionByName(merged)
     est = allregs.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("filled_registers"),
-        (
-            F.sum(F.expr(_hll_weight_sql("reg")))
-            + (HLL_M - F.count(F.lit(1))) * F.lit(2**55).cast("long")
-        ).alias("int_sum"),
+        hll_estimate().alias("raw"),
     )
     exact = rr.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
@@ -170,7 +188,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("__all__").alias("event_type"), "exact_distinct"
         )
     )
-    raw = F.lit(HLL_NUMERATOR) / F.col("int_sum")
+    raw = F.col("raw")
     # Flajolet et al.'s small-range correction: when the raw estimate
     # is <= 2.5m and empty registers remain, linear counting
     # m*ln(m/V) is far more accurate. Both branches are a single libm
@@ -505,33 +523,9 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join that the sketch path exists to avoid). Raw estimates
     (no small-range correction) on all three terms so the algebra is
     exact over the same integer sums in both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        "event_type",
-        md5_60("user_id").alias("h"),
-        "user_id",
-    )
-    rr = h.select(
-        "event_type",
-        (F.col("h") % HLL_M).alias("idx"),
-        F.expr(_hll_rho_sql("(h >> 6)")).alias("rho"),
-        "user_id",
-    )
-    regs = rr.groupBy("event_type", "idx").agg(F.max("rho").alias("reg"))
-
-    def estimate(df, keys):
-        return df.groupBy(*keys).agg(
-            (
-                F.lit(HLL_NUMERATOR)
-                / (
-                    F.sum(F.expr(_hll_weight_sql("reg")))
-                    + (HLL_M - F.count(F.lit(1)))
-                    * F.lit(2**55).cast("long")
-                )
-            ).alias("e")
-        )
-
-    est = estimate(regs, ["event_type"])
+    rr = hll_ranks(load_table(spark, sf_dir, "events"), "event_type", "user_id")
+    regs = hll_registers(rr, "event_type")
+    est = regs.groupBy("event_type").agg(hll_estimate().alias("e"))
     # Union registers per type-pair: max(reg) over the UNION ALL of
     # both sides' register lists. A full join filtered to both-not-null
     # (the previous form) collapses to an inner join and DROPS any
@@ -539,7 +533,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the intersection high whenever a sketch has unfilled registers.
     # The pair list is event-type-cardinality (tiny) and broadcasts;
     # registers missing from BOTH sketches correctly fall to the
-    # (HLL_M - count) empty-register term inside estimate().
+    # (HLL_M - count) empty-register term inside hll_estimate().
     types = regs.select("event_type").distinct()
     tp = (
         types.select(F.col("event_type").alias("type_a"))
@@ -558,7 +552,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("type_a", "type_b", "idx")
         .agg(F.max("reg").alias("reg"))
     )
-    uest = estimate(pairs, ["type_a", "type_b"]).withColumnRenamed("e", "eu")
+    uest = pairs.groupBy("type_a", "type_b").agg(hll_estimate().alias("eu"))
     du = rr.select("event_type", "user_id").distinct()
     xa = du.select(
         F.col("event_type").alias("type_a"), F.col("user_id").alias("ua")
@@ -830,44 +824,21 @@ def sketch_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over THAT table — the raw corpus is scanned once for the hourly
     build and once for the verification twin (direct + exact), which
     a production deployment would drop."""
-    ev = load_table(spark, sf_dir, "events")
-    rr = ev.select(
-        "event_type",
-        F.hour("ts").alias("hour_of_day"),
-        md5_60("user_id").alias("h"),
-        "user_id",
-    ).select(
-        "event_type",
-        "hour_of_day",
-        (F.col("h") % HLL_M).alias("idx"),
-        F.expr(_hll_rho_sql("(h >> 6)")).alias("rho"),
-        "user_id",
-    )
     from kafka_go_streamer_spark.operators.iterate import pinned
 
-    rr = pinned(rr)
-    hourly = rr.groupBy("event_type", "hour_of_day", "idx").agg(
-        F.max("rho").alias("reg")
+    ev = load_table(spark, sf_dir, "events")
+    rr = pinned(
+        hll_ranks(
+            ev, "event_type", F.hour("ts").alias("hour_of_day"), "user_id"
+        )
     )
+    hourly = hll_registers(rr, "event_type", "hour_of_day")
     merged = hourly.groupBy("event_type", "idx").agg(
         F.max("reg").alias("reg")
     )
-    direct = rr.groupBy("event_type", "idx").agg(F.max("rho").alias("reg"))
-
-    def est(df):
-        return df.groupBy("event_type").agg(
-            (
-                F.lit(HLL_NUMERATOR)
-                / (
-                    F.sum(F.expr(_hll_weight_sql("reg")))
-                    + (HLL_M - F.count(F.lit(1)))
-                    * F.lit(2**55).cast("long")
-                )
-            ).alias("e")
-        )
-
-    est_m = est(merged)
-    est_d = est(direct).withColumnRenamed("e", "ed")
+    direct = hll_registers(rr, "event_type")
+    est_m = merged.groupBy("event_type").agg(hll_estimate().alias("e"))
+    est_d = direct.groupBy("event_type").agg(hll_estimate().alias("ed"))
     hours = hourly.groupBy("event_type").agg(
         F.count_distinct("hour_of_day").cast("long").alias("n_hours")
     )

@@ -24,9 +24,6 @@ from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.config import ResolvedSplit, Spliter
 
-#: Sentinel used in SQL-twin form; the DataFrame form uses a NULL topic.
-DROP = None
-
 
 def split_predicate(split: ResolvedSplit, value: Column) -> Column:
     """Predicate for one split: regex partial match (reference
@@ -114,14 +111,6 @@ def route_and_filter(
     return routed.withColumn(topic_col, F.explode(F.array(topic_col))).filter(
         F.col(topic_col).isNotNull()
     )
-
-
-def project_key_value(df: DataFrame, extra: list[str] | None = None) -> DataFrame:
-    """The reference's output projection: keep only {key, value}, dropping
-    consumed-topic/partition/offset/headers/timestamp
-    (reference main.go:496-499)."""
-    cols = [c for c in ("key", "value") if c in df.columns] + (extra or [])
-    return df.select(*cols)
 
 
 def split_condition_sql(split: ResolvedSplit, value_expr: str) -> str:

@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kafka_go_streamer_spark.functions.hashing import md5_60
-
 RUNNING_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 _STATE_SCHEMA = "n bigint, total double"
 
@@ -199,8 +197,8 @@ def return_gaps_stream(events: DataFrame) -> DataFrame:
 def hll_registers_stream(events: DataFrame) -> DataFrame:
     """Streaming HyperLogLog: maintain the per-(event_type, register)
     max-rho table over an unbounded event stream — the streaming twin
-    of the batch ``sketch_hll_distinct`` build (plans/sketches.py),
-    sharing its hash/register expressions verbatim.
+    of the batch ``sketch_hll_distinct`` build, made by the same
+    ``plans/sketches.hll_ranks`` / ``hll_registers`` helpers.
 
     max() is associative and commutative, so the register table is
     EXACTLY mergeable across micro-batches: after any prefix of the
@@ -211,15 +209,9 @@ def hll_registers_stream(events: DataFrame) -> DataFrame:
     complete/update mode forever without watermark eviction; the
     distinct-count estimate is read off the registers at any moment
     with the batch query's estimate arithmetic."""
-    from kafka_go_streamer_spark.plans.sketches import HLL_M, _hll_rho_sql
+    from kafka_go_streamer_spark.plans.sketches import hll_ranks, hll_registers
 
-    h = events.select("event_type", md5_60("user_id").alias("h"))
-    rr = h.select(
-        "event_type",
-        (F.col("h") % HLL_M).alias("idx"),
-        F.expr(_hll_rho_sql("(h >> 6)")).alias("rho"),
-    )
-    return rr.groupBy("event_type", "idx").agg(F.max("rho").alias("reg"))
+    return hll_registers(hll_ranks(events, "event_type"), "event_type")
 
 
 def histogram_bands_stream(

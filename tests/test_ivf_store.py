@@ -240,6 +240,42 @@ def test_ensure_index_builds_once_and_detects_staleness(
     assert os.path.getmtime(marker) > mtime  # rebuilt
 
 
+def test_index_built_by_other_code_is_rebuilt(tmp_path):
+    """The sidecar carries a digest of the build code: an index whose
+    marker was stamped by other code (or before the digest existed) is
+    rebuilt, and one stamped by this code is served as is."""
+    import json
+
+    from kafka_go_streamer_spark.operators.ivf_store import (
+        _ensure_cached,
+        _source_fingerprint,
+    )
+
+    src = tmp_path / "corpus"
+    src.mkdir()
+    (src / "embeddings.parquet").write_bytes(b"fixture")
+    base = str(tmp_path / "index")
+    for p in (centroids_path(base), vectors_path(base)):
+        os.makedirs(p)
+        open(os.path.join(p, "_SUCCESS"), "w").close()
+    marker = os.path.join(base, "_fingerprint.json")
+    fp = _source_fingerprint(str(src))
+    builds = []
+    stale_markers = (
+        {k: v for k, v in fp.items() if k != "code"},
+        {**fp, "code": "0" * 64},
+    )
+    for stale in stale_markers:
+        with open(marker, "w") as f:
+            json.dump(stale, f)
+        _ensure_cached(base, _source_fingerprint(str(src)), lambda: builds.append(1))
+        with open(marker) as f:
+            assert json.load(f) == fp
+    assert len(builds) == 2
+    _ensure_cached(base, _source_fingerprint(str(src)), lambda: builds.append(1))
+    assert len(builds) == 2  # stamped by this code: cache hit
+
+
 def test_index_survives_session_boundary_sf01(spark, tmp_path, monkeypatch):
     """The production lifecycle contract: build the index once at
     sf0.1, then probe it from a FRESH session (new session state — no

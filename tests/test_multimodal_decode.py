@@ -115,49 +115,31 @@ def test_wav_rejects_corrupt():
 
 
 def test_resize_rewrites_header_and_preserves_content():
-    from kafka_go_streamer_spark.multimodal import (
-        _content_of,
-        parse_image_header,
-        synthesize_image_blob,
-    )
+    from kafka_go_streamer_spark.multimodal import resize
 
     blob = synthesize_image_blob(b"payload-bytes", "png", 2000, 1000)
     meta = parse_image_header(blob)
     assert (meta["width"], meta["height"]) == (2000, 1000)
-    # manual resize arithmetic: 2000 -> 256, 1000 -> 128
-    resized = synthesize_image_blob(
-        _content_of(blob, "png"), "png", 2000 * 256 // 2000, 1000 * 256 // 2000
-    )
-    m2 = parse_image_header(resized)  # fresh CRC must verify
+    # resize arithmetic: 2000 -> 256, 1000 -> 128
+    m2 = parse_image_header(resize(blob))  # fresh CRC must verify
     assert (m2["width"], m2["height"]) == (256, 128)
     assert m2["content_hash"] == meta["content_hash"]
 
 
-def test_resize_keeps_small_images(spark):
-    from kafka_go_streamer_spark.multimodal import (
-        decode_images,
-        resize_images,
-    )
-
-    df = spark.createDataFrame([(1, "tiny")], "doc_id long, text string")
-    from kafka_go_streamer_spark.multimodal import synthesize_image_blob
+def test_resize_keeps_small_images():
+    from kafka_go_streamer_spark.multimodal import resize
 
     blob = synthesize_image_blob(b"x", "gif", 100, 50)
-    src = spark.createDataFrame([(1, bytearray(blob))], "key long, blob binary")
-    out = decode_images(resize_images(src, "key", "blob"), "key", "blob").collect()
-    assert (out[0]["width"], out[0]["height"]) == (100, 50)
+    meta = parse_image_header(resize(blob))
+    assert (meta["width"], meta["height"]) == (100, 50)
 
 
-def test_byte_histogram_counts(spark):
-    from kafka_go_streamer_spark.multimodal import (
-        byte_histogram,
-        synthesize_image_blob,
-    )
+def test_byte_histogram_counts():
+    from kafka_go_streamer_spark.multimodal import histogram
 
     # content "AAAA": ord('A') = 65, 65 % 16 = 1 -> bin 1 has n=4
     blob = synthesize_image_blob(b"AAAA", "jpeg", 64, 64)
-    src = spark.createDataFrame([(7, bytearray(blob))], "key long, blob binary")
-    rows = {r["bin"]: r for r in byte_histogram(src, "key", "blob").collect()}
+    rows = {b: (n, density) for b, n, density in histogram(blob)}
     assert len(rows) == 16
-    assert rows[1]["n"] == 4 and abs(rows[1]["density"] - 1.0) < 1e-6
-    assert all(rows[b]["n"] == 0 for b in rows if b != 1)
+    assert rows[1][0] == 4 and abs(rows[1][1] - 1.0) < 1e-6
+    assert all(rows[b][0] == 0 for b in rows if b != 1)

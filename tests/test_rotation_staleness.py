@@ -14,8 +14,10 @@ was hand-curated; this test derives the must-refront set MECHANICALLY:
      ``CORRECTNESS_r{N}.json``);
   3. a verified query is STALE iff its SOURCE SPAN — the ``@query``
      decorator (which embeds the oracle SQL) plus the function body,
-     extracted by ast from the module text at the record commit via
-     ``git show`` — differs from the span in the working tree now;
+     extracted by ast from the ``plans/*.py`` texts at the record
+     commit via ``git show`` and looked up by function name, so a pure
+     move between plan modules is not a change — differs from the span
+     in the working tree now;
   4. assert every stale query is re-fronted (appears in
      ``ROTATE_FRONT``) so the next driver window re-verifies it.
 
@@ -27,7 +29,7 @@ module-level constants interpolated into oracle f-strings — is covered
 by the complementary guard: the local 205-query type-strict replica
 (tests/run_full_oracle.py) re-executes EVERY query against its oracle
 each closing sweep, so a helper regression fails there regardless of
-rotation. If span extraction fails for a changed module, the query is
+rotation. If a span cannot be extracted on either side, the query is
 conservatively treated as stale. Never-green queries need no entry —
 the unverified-first ordering already puts them in the window.
 """
@@ -46,17 +48,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _git(*args: str) -> str:
+def _git(*args: str, repo: str = REPO) -> str:
     return subprocess.run(
         ["git", *args],
-        cwd=REPO,
+        cwd=repo,
         capture_output=True,
         text=True,
         check=True,
     ).stdout
 
 
-def _record_commit(rnd: int) -> str | None:
+def _record_commit(rnd: int, repo: str = REPO) -> str | None:
     """The commit that added CORRECTNESS_r{rnd}.json (the driver's
     round-record commit); the code green in round ``rnd`` is the tree
     at that commit."""
@@ -66,19 +68,28 @@ def _record_commit(rnd: int) -> str | None:
         "--format=%H",
         "--",
         f"CORRECTNESS_r{rnd:02d}.json",
+        repo=repo,
     ).split()
     return out[-1] if out else None
 
 
-def _changed_since(commit: str) -> set[str]:
-    """Repo-relative paths touched after ``commit`` (committed or dirty)."""
-    changed = set(_git("diff", "--name-only", f"{commit}..HEAD").split())
-    changed |= {
-        line[3:].split(" -> ")[-1]
-        for line in _git("status", "--porcelain").splitlines()
-        if len(line) > 3
-    }
-    return changed
+PLANS_DIR = "kafka_go_streamer_spark/plans"
+
+
+def _spans_at(commit: str, repo: str = REPO) -> dict[str, str]:
+    """function name -> span for every def in ``plans/*.py`` at
+    ``commit``: a query's old span is found by its name wherever it was
+    defined then, so a pure move between plan modules keeps its
+    fingerprint (query function names are unique under ``plans/``)."""
+    spans: dict[str, str] = {}
+    listing = _git(
+        "ls-tree", "--name-only", commit, f"{PLANS_DIR}/", repo=repo
+    ).split()
+    for path in sorted(p for p in listing if p.endswith(".py")):
+        text = _git("show", f"{commit}:{path}", repo=repo)
+        for name, span in _spans(text).items():
+            spans.setdefault(name, span)
+    return spans
 
 
 def _defining_file(fn) -> str:
@@ -87,20 +98,22 @@ def _defining_file(fn) -> str:
     return os.path.relpath(os.path.abspath(path), REPO)
 
 
-def _query_span(module_text: str, func_name: str) -> str | None:
-    """A semantic fingerprint of ``def func_name`` INCLUDING its
-    decorators (the ``@query(...)`` call carries the oracle SQL
-    literal): the ast dump with docstrings stripped, so comment-,
-    docstring-, and formatting-only edits do not force a refront.
-    None if the def is not found / the text does not parse."""
+def _spans(module_text: str) -> dict[str, str]:
+    """function name -> a semantic fingerprint of its ``def``
+    INCLUDING its decorators (the ``@query(...)`` call carries the
+    oracle SQL literal): the ast dump with docstrings stripped, so
+    comment-, docstring-, and formatting-only edits do not force a
+    refront. Empty if the text does not parse; the first def of a name
+    wins."""
     try:
         tree = ast.parse(module_text)
     except SyntaxError:
-        return None
+        return {}
+    spans: dict[str, str] = {}
     for node in ast.walk(tree):
         if (
             isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-            and node.name == func_name
+            and node.name not in spans
         ):
             for n in ast.walk(node):
                 body = getattr(n, "body", None)
@@ -112,49 +125,55 @@ def _query_span(module_text: str, func_name: str) -> str | None:
                     and isinstance(body[0].value.value, str)
                 ):
                     n.body = body[1:] or [ast.Pass()]
-            return ast.dump(node, include_attributes=False)
-    return None
+            spans[node.name] = ast.dump(node, include_attributes=False)
+    return spans
 
 
-def compute_stale() -> dict[str, str]:
+def compute_stale(
+    repo: str = REPO,
+    defs: dict[str, tuple[str, str]] | None = None,
+    newest: dict[str, int] | None = None,
+) -> dict[str, str]:
     """name -> defining module, for every driver-verified query whose
     decorator+body source span changed after its newest green round's
-    record commit (falling back to file-touch staleness when the span
-    cannot be extracted on either side)."""
-    from __spark_entry__ import newest_green_round
-    from kafka_go_streamer_spark.plans import QUERIES
+    record commit. The old span is looked up by function name across
+    ``plans/*.py`` at that commit, the new one in the working tree (a
+    span found on neither side counts as stale).
 
-    newest = newest_green_round()
+    ``defs`` maps query name -> (function name, repo-relative defining
+    file) and ``newest`` maps query name -> newest green round; both
+    default to the registry and the ``CORRECTNESS_r*.json`` records."""
+    if defs is None:
+        from kafka_go_streamer_spark.plans import QUERIES
+
+        defs = {
+            name: (fn.__name__, _defining_file(fn))
+            for name, fn in QUERIES.items()
+        }
+    if newest is None:
+        from __spark_entry__ import newest_green_round
+
+        newest = newest_green_round()
     commits: dict[int, str | None] = {}
-    changed: dict[int, set[str]] = {}
-    old_text: dict[tuple[int, str], str | None] = {}
+    spans_then: dict[str, dict[str, str]] = {}
+    spans_now: dict[str, dict[str, str]] = {}
     stale: dict[str, str] = {}
-    for name, fn in QUERIES.items():
+    for name, (func, f) in defs.items():
         rnd = newest.get(name)
         if rnd is None:
             continue  # never green: unverified-first ordering covers it
         if rnd not in commits:
-            commits[rnd] = _record_commit(rnd)
-            changed[rnd] = (
-                _changed_since(commits[rnd]) if commits[rnd] else set()
-            )
+            commits[rnd] = _record_commit(rnd, repo)
         commit = commits[rnd]
         if commit is None:
             continue  # record not in git history: nothing to diff
-        f = _defining_file(fn)
-        if f not in changed[rnd]:
-            continue  # module untouched since the green verdict
-        key = (rnd, f)
-        if key not in old_text:
-            try:
-                old_text[key] = _git("show", f"{commit}:{f}")
-            except subprocess.CalledProcessError:
-                old_text[key] = None  # module did not exist then
-        then = old_text[key]
-        now = open(os.path.join(REPO, f)).read()
-        span_then = _query_span(then, fn.__name__) if then else None
-        span_now = _query_span(now, fn.__name__)
-        if span_then is None or span_now is None or span_then != span_now:
+        if commit not in spans_then:
+            spans_then[commit] = _spans_at(commit, repo)
+        if f not in spans_now:
+            spans_now[f] = _spans(open(os.path.join(repo, f)).read())
+        then = spans_then[commit].get(func)
+        now = spans_now[f].get(func)
+        if then is None or now is None or then != now:
             stale[name] = f
     return stale
 
@@ -165,6 +184,46 @@ def git_available():
         _git("rev-parse", "HEAD")
     except (OSError, subprocess.CalledProcessError):
         pytest.skip("git history unavailable")
+
+
+_QUERY_SRC = '''
+@query("q_one", oracle="SELECT 1 AS x")
+def q_one(spark, sf_dir):
+    """A query."""
+    return spark.range(1)
+'''
+
+
+def test_pure_move_keeps_fingerprint_body_edit_does_not(
+    git_available, tmp_path
+):
+    """In a scratch repo: a query green at a record commit and then
+    moved to another plan module unchanged is not stale; the same move
+    with a body edit is."""
+    repo = str(tmp_path)
+    plans = tmp_path / PLANS_DIR
+    plans.mkdir(parents=True)
+    (plans / "a.py").write_text("X = 1\n" + _QUERY_SRC)
+    (plans / "b.py").write_text("Y = 2\n")
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
+    _git("init", "-q", repo=repo)
+    _git("add", "-A", repo=repo)
+    _git(
+        "-c", "user.name=t", "-c", "user.email=t@t",
+        "commit", "-q", "-m", "round 1", repo=repo,
+    )
+
+    (plans / "a.py").write_text("X = 1\n")
+    (plans / "b.py").write_text("Y = 2\n" + _QUERY_SRC)
+    defs = {"q_one": ("q_one", f"{PLANS_DIR}/b.py")}
+    assert compute_stale(repo, defs, {"q_one": 1}) == {}
+
+    (plans / "b.py").write_text(
+        "Y = 2\n" + _QUERY_SRC.replace("range(1)", "range(2)")
+    )
+    assert compute_stale(repo, defs, {"q_one": 1}) == {
+        "q_one": f"{PLANS_DIR}/b.py"
+    }
 
 
 def test_rotate_front_covers_every_stale_query(git_available):

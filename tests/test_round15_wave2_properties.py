@@ -1,5 +1,6 @@
 """Pure-Python property oracles for the round-15 wave-2 queries
-(plans/frontier.py), at sf0.001: recomputed from raw parquet with
+(plans/frontier.py, and the decode quarantine in
+plans/multimodal_queries.py), at sf0.001: recomputed from raw parquet with
 pandas/numpy or pinned by construction invariants."""
 
 from __future__ import annotations
@@ -54,7 +55,10 @@ def test_quarantine_parser_really_rejects_corrupted_magic():
     """The corruption model must actually defeat the parser — every
     container's magic dies when its first byte is zeroed."""
     from kafka_go_streamer_spark.multimodal import (
+        QUARANTINE_MOD,
+        image_blob_for_text,
         parse_image_header,
+        quarantine_rows,
         synthesize_image_blob,
     )
 
@@ -63,6 +67,12 @@ def test_quarantine_parser_really_rejects_corrupted_magic():
         assert parse_image_header(blob)["format"] == fmt
         with pytest.raises(ValueError):
             parse_image_header(b"\x00" + blob[1:])
+    # the per-row chain corrupts exactly the keys divisible by the mod
+    text = "some document text"
+    fmt = parse_image_header(image_blob_for_text(text))["format"]
+    n = len(image_blob_for_text(text))
+    assert quarantine_rows(QUARANTINE_MOD + 1, text) == [(fmt, n)]
+    assert quarantine_rows(QUARANTINE_MOD, text) == [("quarantined", n)]
 
 
 def test_weak_link_audit_consistent_with_components(spark):

@@ -76,7 +76,9 @@ def test_quarantine_stream_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_go_streamer_spark.multimodal import (
-        synthesize_decode_quarantine,
+        QUARANTINE_SCHEMA,
+        arrow_stage,
+        quarantine_rows,
     )
 
     batch = {
@@ -97,7 +99,8 @@ def test_quarantine_stream_equals_batch(spark, tmp_path):
     counts: dict = {}
 
     def fold(bdf, bid):
-        meta = synthesize_decode_quarantine(bdf, "doc_id", "text")
+        docs = bdf.select(F.col("doc_id").alias("key"), "text")
+        meta = arrow_stage(docs, quarantine_rows, QUARANTINE_SCHEMA)
         for r in meta.groupBy("status_format").count().collect():
             counts[r["status_format"]] = (
                 counts.get(r["status_format"], 0) + r["count"]
