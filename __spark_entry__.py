@@ -66,9 +66,10 @@ DRIVER_VERIFIED = frozenset(newest_green_round())
 # Queries whose CODE changed since their newest green driver verdict:
 # forced to the front of the window so the verdict can't go stale.
 # tests/test_rotation_staleness.py derives the must-refront set
-# mechanically (ast fingerprint of each query's decorator+body at its
-# green round's record commit vs now) and FAILS if any stale name is
-# missing here. Empty while that set is empty.
+# mechanically (ast fingerprint of each query's decorator+body, plus
+# every same-module function it names, transitively, at its green
+# round's record commit vs now) and FAILS if any stale name is missing
+# here. Empty while that set is empty.
 ROTATE_FRONT: tuple[str, ...] = (
     "quality_calibration_bins",
     "privacy_k_anonymity",
@@ -100,6 +101,24 @@ ROTATE_FRONT: tuple[str, ...] = (
     "multimodal_format_mix",
     "multimodal_aspect_ratio_buckets",
     "multimodal_decode_quarantine",
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
+    "graph_degree_assortativity",
+    "graph_kcore_decomposition",
+    "graph_label_propagation",
+    "graph_modularity_lpa",
+    "graph_adamic_adar",
+    "graph_jaccard_neighbors",
+    "graph_rich_club",
+    "graph_pagerank_transitions",
+    "text_textrank_keywords",
+    "graph_doc_centrality",
+    "graph_bipartite_projection",
+    "graph_reciprocity",
+    "events_lateness_watermark_grid",
+    "events_arrival_delay_profile",
+    "events_lateness_trigger_matrix",
+    "dedup_embedding_drop_rule",
 )
 
 

@@ -14,6 +14,7 @@ from kafka_go_streamer_spark.plans import (  # noqa: E402,F401
     dedup,
     fidelity,
     frontier,
+    graph,
     insights,
     lateness,
     multimodal_queries,

@@ -397,117 +397,6 @@ def pack_fill_rate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _modularity_sql() -> str:
-    from kafka_go_streamer_spark.plans.timeseries import lpa_label_ctes
-
-    body, final = lpa_label_ctes()
-    return f"""
-    WITH {body},
-    ue AS MATERIALIZED (
-      SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      FROM e
-    ),
-    lbls AS MATERIALIZED (SELECT node, lbl FROM {final}),
-    deg AS (
-      SELECT node, count(*)::BIGINT AS d FROM (
-        SELECT a AS node FROM ue UNION ALL SELECT b AS node FROM ue
-      ) GROUP BY 1
-    ),
-    m AS (SELECT count(*)::BIGINT AS m FROM ue),
-    intra AS (
-      SELECT la.lbl, count(*)::BIGINT AS mc
-      FROM ue JOIN lbls la ON la.node = ue.a
-              JOIN lbls lb ON lb.node = ue.b
-      WHERE la.lbl = lb.lbl GROUP BY 1
-    ),
-    dc AS (
-      SELECT l.lbl, sum(d.d)::BIGINT AS dc
-      FROM lbls l JOIN deg d USING (node) GROUP BY 1
-    )
-    SELECT (SELECT count(*) FROM lbls)::BIGINT AS n_nodes,
-           (SELECT count(*) FROM dc)::BIGINT AS n_communities,
-           max(m.m)::BIGINT AS n_edges,
-           round(sum(coalesce(i.mc, 0) * 1.0 / m.m
-                     - (d.dc * 1.0 / (2 * m.m))
-                       * (d.dc * 1.0 / (2 * m.m))), 6) AS modularity
-    FROM dc d LEFT JOIN intra i USING (lbl) CROSS JOIN m
-    """
-
-
-@query("graph_modularity_lpa", oracle=_modularity_sql)
-def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the LPA communities on the winnowing
-    near-dup graph: Q = Σ_c [m_c/m − (d_c/2m)²]. LPA emits community
-    SIZES; this scores whether those communities are actually denser
-    than chance — the accept/reject check before using them for
-    cluster-level dedup (Q near 0 = the "template families" are an
-    artifact; Q ≫ 0 = real block structure worth deduping at the
-    cluster grain).
-
-    Scale: runs entirely on the capped edge list, its degree frame,
-    and the node-cardinality label frame (the SAME ``lpa_label_frame``
-    chain the LPA query runs — extracted r12); intra-community edge
-    counting is two equi-joins of the edge list against labels; the
-    final fold is |communities| rows."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-    from kafka_go_streamer_spark.plans.timeseries import lpa_label_frame
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    ue = pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-    # share the pinned pairs: without this the winnowing pipeline
-    # executes twice (once for ue/deg, once inside the label chain)
-    lbls = pinned(lpa_label_frame(spark, sf_dir, pairs=pairs))
-    deg = (
-        ue.select(F.col("a").alias("node"))
-        .unionAll(ue.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    m = ue.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    la = lbls.select(F.col("node").alias("a"), F.col("lbl").alias("la"))
-    lb = lbls.select(F.col("node").alias("b"), F.col("lbl").alias("lb"))
-    intra = (
-        ue.join(la, "a")
-        .join(lb, "b")
-        .filter(F.col("la") == F.col("lb"))
-        .groupBy(F.col("la").alias("lbl"))
-        .agg(F.count(F.lit(1)).cast("long").alias("mc"))
-    )
-    dc = (
-        lbls.join(deg, "node")
-        .groupBy("lbl")
-        .agg(F.sum("d").cast("long").alias("dc"))
-    )
-    n_nodes = lbls.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    terms = (
-        dc.join(intra, "lbl", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            (
-                F.coalesce(F.col("mc"), F.lit(0)) * 1.0 / F.col("m")
-                - (F.col("dc") * 1.0 / (2 * F.col("m")))
-                * (F.col("dc") * 1.0 / (2 * F.col("m")))
-            ).alias("t"),
-            "m",
-        )
-    )
-    return (
-        terms.agg(
-            F.count(F.lit(1)).cast("long").alias("n_communities"),
-            F.max("m").cast("long").alias("n_edges"),
-            stable_round(F.sum("t"), 6).alias("modularity"),
-        )
-        .crossJoin(F.broadcast(n_nodes))
-        .select("n_nodes", "n_communities", "n_edges", "modularity")
-    )
-
-
 #: nprobe settings swept by the recall curve (4 = every seed cell —
 #: the exhaustive anchor where recall must hit 1.0).
 NPROBE_SWEEP = (1, 2, 4)

@@ -751,10 +751,6 @@ RBO_QUERIES = 5
 RBO_K = 10
 RBO_P = 0.9
 
-#: Rich-club degree thresholds.
-RICH_KS = (2, 4, 8)
-
-
 @query(
     "text_code_detector",
     oracle=f"""
@@ -1120,132 +1116,6 @@ def retrieval_rbo_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(
                 F.coalesce(F.col("wt"), F.lit(0.0)), 6
             ).alias("rbo"),
-        )
-    )
-
-
-def _rich_club_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    ks = ", ".join(str(k) for k in RICH_KS)
-    return f"""
-    WITH wpairs AS ({wpairs}),
-    e AS MATERIALIZED (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    ),
-    deg AS MATERIALIZED (
-      SELECT node, count(*)::BIGINT AS d FROM (
-        SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-      ) GROUP BY 1
-    ),
-    ks AS (SELECT unnest([{ks}]) AS k),
-    nk AS (
-      SELECT ks.k, count(deg.node)::BIGINT AS n_nodes
-      FROM ks LEFT JOIN deg ON deg.d > ks.k GROUP BY 1
-    ),
-    ek AS (
-      SELECT ks.k,
-             sum(CASE WHEN da.d > ks.k AND db.d > ks.k
-                      THEN 1 ELSE 0 END)::BIGINT AS n_edges
-      FROM ks CROSS JOIN e
-      JOIN deg da ON da.node = e.a
-      JOIN deg db ON db.node = e.b
-      GROUP BY 1
-    )
-    SELECT nk.k::BIGINT AS k, nk.n_nodes, ek.n_edges,
-           round(2.0 * ek.n_edges
-                 / nullif(nk.n_nodes * (nk.n_nodes - 1), 0), 6)
-             AS rich_club_coeff
-    FROM nk JOIN ek USING (k)
-    """
-
-
-@query("graph_rich_club", oracle=_rich_club_oracle)
-def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficient of the winnowing-overlap document graph at
-    degree thresholds k in {RICH_KS}: among nodes of degree > k, the
-    realized edge density 2E_k / (N_k (N_k - 1)) — "do the most
-    duplicated documents duplicate EACH OTHER" (a rich club in the
-    overlap graph means template families interlock, so cluster-level
-    dedup beats pairwise drops; composes with
-    ``graph_degree_assortativity``, the correlation version of the
-    same question, and ``dedup_cluster_manifest``).
-
-    Scale: runs entirely on the capped winnowing edge list (the
-    audited candidate geometry — never all pairs) and its degree
-    frame; the threshold sweep is ONE explode of the 3-element k grid
-    against each frame and ONE hash aggregate per frame (VERDICT r11
-    task 4 folded the former per-k Python loop — 6 aggregate passes —
-    into these 2), every join equi- or broadcast. Counts are exact
-    integers; one rounded division per threshold."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-    deg = pinned(
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    k_grid = F.explode(
-        F.array(*[F.lit(k) for k in RICH_KS])
-    ).alias("k")
-    ks = (
-        deg.select(k_grid, "d")
-        .groupBy("k")
-        .agg(
-            F.sum(F.when(F.col("d") > F.col("k"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_nodes")
-        )
-    )
-    ewd = (
-        e.join(
-            deg.select(F.col("node").alias("a"), F.col("d").alias("da")),
-            "a",
-        )
-        .join(
-            deg.select(F.col("node").alias("b"), F.col("d").alias("db")),
-            "b",
-        )
-    )
-    ek = (
-        ewd.select(k_grid, "da", "db")
-        .groupBy("k")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("da") > F.col("k")) & (F.col("db") > F.col("k")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_edges")
-        )
-    )
-    return (
-        ks.join(ek, "k")
-        .select(
-            F.col("k").cast("long").alias("k"),
-            "n_nodes",
-            "n_edges",
-            stable_round(
-                2.0
-                * F.col("n_edges")
-                / F.nullif(
-                    F.col("n_nodes") * (F.col("n_nodes") - 1), F.lit(0)
-                ),
-                6,
-            ).alias("rich_club_coeff"),
         )
     )
 

@@ -1,15 +1,14 @@
 """Round-10 analytics wave: trend/effect-size/association statistics,
-spectral & evaluation time-series diagnostics, graph structure metrics,
-retrieval-ranking evaluation, and sampling diagnostics.
+spectral & evaluation time-series diagnostics, retrieval-ranking
+evaluation, and sampling diagnostics.
 
 Like every query module here, this is north-star surface the reference
 (a 655-line content-based Kafka router, /root/reference/main.go) never
 had — the operators a training-data pipeline runs NEXT to routing:
 "is this metric trending" (Mann-Kendall), "did the experiment move the
-needle and by how much" (Cohen's d, Wilson CI, Beta posteriors), "is
-the near-dup graph assortative/clustered" (degree assortativity, local
-clustering), "did the retrieval change hurt ranking" (MRR, MAP), "are
-my importance weights degenerate" (effective sample size).
+needle and by how much" (Cohen's d, Wilson CI, Beta posteriors), "did
+the retrieval change hurt ranking" (MRR, MAP), "are my importance
+weights degenerate" (effective sample size).
 
 Every query follows the repo's scale discipline: collapse the fact to
 a calendar/vocabulary/panel-sized frame FIRST, do the quadratic or
@@ -1042,404 +1041,6 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(F.avg("x"), 6).alias("cvar_5pct"),
             F.count(F.lit(1)).cast("long").alias("n_tail"),
         )
-    )
-
-
-# -------------------------------------------------------------- graphs
-
-
-def _wpairs_edges(spark: SparkSession, sf_dir: str):
-    """Undirected (a < b) distinct edge list of the winnowing-overlap
-    document graph — the shared edge source of the whole graph_*
-    family (capped-sparse by winnowing's blocking), pinned."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = _Q["dedup_winnowing_pairs"](spark, sf_dir)
-    return pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-
-
-def _edges_cte() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    return f"""
-    WITH wpairs AS MATERIALIZED ({wpairs}),
-    e AS MATERIALIZED (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    )"""
-
-
-def _assortativity_oracle() -> str:
-    return (
-        _edges_cte()
-        + """,
-    deg AS MATERIALIZED (
-      SELECT node, count(*)::BIGINT AS d FROM (
-        SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-      ) GROUP BY 1
-    ),
-    sym AS (
-      SELECT da.d AS dx, db.d AS dy
-      FROM e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
-      UNION ALL
-      SELECT db.d AS dx, da.d AS dy
-      FROM e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
-    ),
-    m AS (
-      SELECT count(*)::BIGINT AS n,
-             sum(dx)::BIGINT AS sx, sum(dy)::BIGINT AS sy,
-             sum(dx * dy)::BIGINT AS sxy,
-             sum(dx * dx)::BIGINT AS sxx,
-             sum(dy * dy)::BIGINT AS syy
-      FROM sym
-    )
-    SELECT (SELECT count(*) FROM e)::BIGINT AS n_edges,
-           (SELECT count(*) FROM deg)::BIGINT AS n_nodes,
-           round((n * sxy - sx * sy)
-                 / nullif(sqrt((n * sxx - sx * sx) * 1.0
-                               * (n * syy - sy * sy)), 0), 4)
-             AS assortativity
-    FROM m
-    """
-    )
-
-
-@query("graph_degree_assortativity", oracle=_assortativity_oracle)
-def graph_degree_assortativity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Degree assortativity of the winnowing near-dup graph: Pearson
-    correlation of endpoint degrees over the symmetrized edge list
-    (Newman's r) — positive means hub documents overlap with other
-    hubs (one template family densely interlinked: dedup it as a
-    unit), negative means hub-and-spoke (one boilerplate source
-    touching many singletons: drop the hub, keep the spokes). The
-    one-number triage BEFORE running component extraction.
-
-    Scale: degrees are one aggregate of the pinned capped edge list;
-    the endpoint join is two hash joins of that edge frame against
-    the node-cardinality degree frame; the correlation folds from
-    EXACT integer sums (n·Σxy − ΣxΣy form), so both engines derive
-    the identical double before the single rounded division. A
-    degree-regular graph (zero variance) reports NULL on both
-    engines."""
-    e = _wpairs_edges(spark, sf_dir)
-    from kafka_go_streamer_spark.operators.iterate import pinned
-
-    deg = pinned(
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    j = (
-        e.join(
-            F.broadcast(deg.withColumnRenamed("node", "a")
-                        .withColumnRenamed("d", "dxa")), "a"
-        )
-        .join(
-            F.broadcast(deg.withColumnRenamed("node", "b")
-                        .withColumnRenamed("d", "dyb")), "b"
-        )
-        .select(F.col("dxa").alias("dx"), F.col("dyb").alias("dy"))
-    )
-    sym = j.unionAll(
-        j.select(F.col("dy").alias("dx"), F.col("dx").alias("dy"))
-    )
-    m = sym.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("dx").cast("long").alias("sx"),
-        F.sum("dy").cast("long").alias("sy"),
-        F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sxy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).cast("long").alias("syy"),
-    )
-    ne = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * 1.0
-        * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return (
-        m.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "n_edges",
-            "n_nodes",
-            stable_round(
-                num / F.nullif(den, F.lit(0.0)), 4
-            ).alias("assortativity"),
-        )
-    )
-
-
-def _clustering_oracle() -> str:
-    return (
-        _edges_cte()
-        + """,
-    tv AS MATERIALIZED (
-      SELECT node, count(*)::BIGINT AS t FROM (
-        SELECT e1.a AS node
-        FROM e e1 JOIN e e2 ON e2.a = e1.b
-                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-        UNION ALL
-        SELECT e1.b AS node
-        FROM e e1 JOIN e e2 ON e2.a = e1.b
-                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-        UNION ALL
-        SELECT e2.b AS node
-        FROM e e1 JOIN e e2 ON e2.a = e1.b
-                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-      ) GROUP BY 1
-    ),
-    deg AS (
-      SELECT node, count(*)::BIGINT AS d FROM (
-        SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-      ) GROUP BY 1
-    ),
-    lc AS (
-      SELECT deg.node, deg.d, coalesce(tv.t, 0)::BIGINT AS t,
-             2.0 * coalesce(tv.t, 0) / (deg.d * (deg.d - 1.0)) AS cc
-      FROM deg LEFT JOIN tv USING (node)
-      WHERE deg.d >= 2
-    )
-    SELECT count(*)::BIGINT AS n_nodes_deg2,
-           sum(CASE WHEN t > 0 THEN 1 ELSE 0 END)::BIGINT
-             AS n_closed_nodes,
-           round(avg(cc), 6) AS avg_local_cc
-    FROM lc
-    """
-    )
-
-
-@query("graph_clustering_coefficient", oracle=_clustering_oracle)
-def graph_clustering_coefficient(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Average LOCAL clustering coefficient (Watts-Strogatz C̄) of the
-    winnowing graph: per node, the share of its neighbor pairs that
-    are themselves connected, averaged over nodes of degree ≥ 2 —
-    the node-weighted view that ``graph_triangle_count``'s GLOBAL
-    3·tri/wedges ratio deliberately is not (C̄ weights every node
-    equally; the global ratio is dominated by hubs — the two
-    disagreeing is itself the hub-and-spoke signature).
-
-    Scale: triangles come from the same node-ordered (a<b) triple
-    equi-join as the global counter — each triangle generated
-    exactly once, then credited to its three vertices by a 3-arm
-    union of the SAME materialized triple join (one join tree, three
-    projections); per-node T and degree are node-cardinality frames
-    joined hash-left. Integer T and d make 2T/d(d−1) identical
-    doubles on both engines before the one rounded average."""
-    e = _wpairs_edges(spark, sf_dir)
-    from kafka_go_streamer_spark.operators.iterate import pinned
-
-    e1 = e.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-    e2 = e.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-    e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = pinned(e1.join(e2, "tb").join(e3, ["ta", "tc"]))
-    tv = (
-        tri.select(F.col("ta").alias("node"))
-        .unionAll(tri.select(F.col("tb").alias("node")))
-        .unionAll(tri.select(F.col("tc").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    lc = (
-        deg.join(tv, "node", "left")
-        .filter(F.col("d") >= 2)
-        .select(
-            F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("t"),
-            (
-                2.0
-                * F.coalesce(F.col("t"), F.lit(0))
-                / (F.col("d") * (F.col("d") - 1.0))
-            ).alias("cc"),
-        )
-    )
-    return lc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes_deg2"),
-        F.sum(F.when(F.col("t") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_closed_nodes"),
-        stable_round(F.avg("cc"), 6).alias("avg_local_cc"),
-    )
-
-
-@query(
-    "graph_bipartite_projection",
-    oracle="""
-    WITH ut AS MATERIALIZED (
-      SELECT DISTINCT user_id, event_type FROM events
-    ),
-    nt AS (
-      SELECT event_type, count(*)::BIGINT AS nu FROM ut GROUP BY 1
-    ),
-    co AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             count(*)::BIGINT AS n_both
-      FROM ut a JOIN ut b
-        ON b.user_id = a.user_id AND b.event_type > a.event_type
-      GROUP BY 1, 2
-    )
-    SELECT co.type_a, co.type_b, co.n_both,
-           round(co.n_both / sqrt(na.nu * 1.0 * nb.nu), 6)
-             AS cosine_affinity
-    FROM co JOIN nt na ON na.event_type = co.type_a
-            JOIN nt nb ON nb.event_type = co.type_b
-    """,
-)
-def graph_bipartite_projection(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bipartite projection of the user×event-type graph onto event
-    types: co-engagement counts (users doing BOTH types) normalized
-    to cosine affinity n_ab/√(n_a·n_b) — the item-item similarity
-    backbone of co-occurrence recommenders, and the behavioral
-    companion to text PMI (``text_pmi_cooccurrence``) one level up.
-
-    Scale: the fact collapses to the DISTINCT (user, type) frame
-    first (user-cardinality, the stickiness query's first shuffle);
-    the self-join is per-user with fanout bounded by the type
-    vocabulary (≤ k types per user → ≤ k² pairs per user, k tiny),
-    never a type-blind cross join; the projection output is
-    k²-sized. Counts are exact integers; the affinity is one
-    rounded division."""
-    ev = load_table(spark, sf_dir, "events")
-    from kafka_go_streamer_spark.operators.iterate import pinned
-
-    ut = pinned(ev.select("user_id", "event_type").distinct())
-    nt = ut.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("nu")
-    )
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    co = (
-        a.join(b, "user_id")
-        .filter(F.col("type_b") > F.col("type_a"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-    )
-    na = nt.select(
-        F.col("event_type").alias("type_a"), F.col("nu").alias("na")
-    )
-    nb = nt.select(
-        F.col("event_type").alias("type_b"), F.col("nu").alias("nb")
-    )
-    return (
-        co.join(F.broadcast(na), "type_a")
-        .join(F.broadcast(nb), "type_b")
-        .select(
-            "type_a",
-            "type_b",
-            "n_both",
-            stable_round(
-                F.col("n_both")
-                / F.sqrt(F.col("na") * 1.0 * F.col("nb")),
-                6,
-            ).alias("cosine_affinity"),
-        )
-    )
-
-
-@query(
-    "graph_reciprocity",
-    oracle="""
-    WITH seq AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS to_type
-      FROM events
-    ),
-    f AS MATERIALIZED (
-      SELECT from_type, to_type, count(*)::BIGINT AS w
-      FROM seq
-      WHERE to_type IS NOT NULL AND to_type <> from_type
-      GROUP BY 1, 2
-    ),
-    r AS (
-      SELECT f.from_type, f.to_type, f.w, g.w AS w_rev
-      FROM f LEFT JOIN f g
-        ON g.from_type = f.to_type AND g.to_type = f.from_type
-    )
-    SELECT count(*)::BIGINT AS n_directed_edges,
-           sum(CASE WHEN w_rev IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_reciprocated,
-           round(sum(CASE WHEN w_rev IS NOT NULL THEN 1 ELSE 0 END)
-                 * 1.0 / count(*), 6) AS reciprocity,
-           round(sum(least(w, coalesce(w_rev, 0))) * 1.0 / sum(w), 6)
-             AS weighted_reciprocity
-    FROM r
-    """,
-)
-def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocity of the behavioral transition graph (self-loops
-    excluded): the share of directed type→type transition edges
-    whose reverse edge also occurs, plus the weighted form
-    Σmin(w,w̄)/Σw — distinguishes cyclic back-and-forth behavior
-    (view⇄click loops) from one-way funnels (signup→purchase,
-    never back), the structural prior behind the Markov family
-    (``events_transition_matrix`` and its stationary/entropy
-    composites).
-
-    Scale: transitions come from the one lead() window shuffle the
-    whole Markov family shares, collapsed to the k²-row directed
-    edge frame; the reverse lookup is a self-join OF THAT k² frame
-    (constant size regardless of fact volume). All counts exact
-    integers; two rounded ratios at the end."""
-    ev = load_table(spark, sf_dir, "events")
-    from kafka_go_streamer_spark.operators.iterate import pinned
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).filter(
-        F.col("to_type").isNotNull()
-        & (F.col("to_type") != F.col("from_type"))
-    )
-    f = pinned(
-        seq.groupBy("from_type", "to_type").agg(
-            F.count(F.lit(1)).cast("long").alias("w")
-        )
-    )
-    g = f.select(
-        F.col("from_type").alias("to_type"),
-        F.col("to_type").alias("from_type"),
-        F.col("w").alias("w_rev"),
-    )
-    r = f.join(F.broadcast(g), ["from_type", "to_type"], "left")
-    recip = F.sum(
-        F.when(F.col("w_rev").isNotNull(), 1).otherwise(0)
-    )
-    return r.agg(
-        F.count(F.lit(1)).cast("long").alias("n_directed_edges"),
-        recip.cast("long").alias("n_reciprocated"),
-        stable_round(recip * 1.0 / F.count(F.lit(1)), 6).alias(
-            "reciprocity"
-        ),
-        stable_round(
-            F.sum(F.least(F.col("w"), F.coalesce(F.col("w_rev"), F.lit(0))))
-            * 1.0
-            / F.sum("w"),
-            6,
-        ).alias("weighted_reciprocity"),
     )
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from kafka_go_streamer_spark.functions.rounding import stable_round
 
 from kafka_go_streamer_spark.functions import text as X
+from kafka_go_streamer_spark.plans.graph import pagerank, pagerank_sql
 from kafka_go_streamer_spark.plans.registry import query
 from kafka_go_streamer_spark.sources.tables import cpu_fan, load_table
 
@@ -2171,10 +2172,10 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: TextRank geometry: graph restricted to the TR_VOCAB most frequent
 #: words (the documented production cap — rank quality concentrates in
-#: the head), TR_ITERS damped iterations, top TR_TOP keywords out.
+#: the head), TR_ITERS damped iterations (``graph.PR_DAMPING``), top
+#: TR_TOP keywords out.
 TR_VOCAB = 50
 TR_ITERS = 3
-TR_DAMP = 0.85
 TR_TOP = 15
 
 
@@ -2211,26 +2212,11 @@ def _textrank_oracle() -> str:
       SELECT a AS f, b AS t, n / sum(n) OVER (PARTITION BY a) AS p
       FROM eu
     ),
-    nodes AS (SELECT DISTINCT f AS node FROM ew),
-    ns AS (SELECT count(*) AS nn FROM nodes),
-    r0 AS (SELECT node, 1.0 / (SELECT nn FROM ns) AS r FROM nodes)"""
-    iters = []
-    for k in range(1, TR_ITERS + 1):
-        iters.append(f"""
-    r{k} AS (
-      SELECT n.node,
-             {1.0 - TR_DAMP} / (SELECT nn FROM ns)
-             + {TR_DAMP} * coalesce((
-                 SELECT sum(prev.r * ew.p)
-                 FROM ew JOIN r{k - 1} prev ON prev.node = ew.f
-                 WHERE ew.t = n.node), 0) AS r
-      FROM nodes n
-    )""")
+    nodes AS (SELECT DISTINCT f AS node FROM ew),"""
     return (
         "WITH "
         + base
-        + ","
-        + ",".join(iters)
+        + pagerank_sql(TR_ITERS)
         + f"""
     SELECT node AS word, round(r, 6) AS textrank
     FROM r{TR_ITERS}
@@ -2252,8 +2238,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bigrams generate positionally in-row (the PMI query's
     discipline — the corpus is never self-joined); the frequency cap
     bounds the graph at {TR_VOCAB} nodes so the iteration runs on a
-    constant-size frame with 1-row/edge-table broadcasts, identical to
-    the behavioral PageRank loop. One corpus scan at pin time, full
+    constant-size frame with 1-row/edge-table broadcasts — the shared
+    PageRank step (``graph.pagerank``) the behavioral PageRank runs
+    too. One corpus scan at pin time, full
     stop. At 100 TB only the bigram count shuffle grows; the rank loop
     is cardinality-fixed by construction."""
     from kafka_go_streamer_spark.operators.iterate import pinned
@@ -2304,39 +2291,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nodes = ew.select(F.col("f").alias("node")).distinct()
-    ns = nodes.agg(F.count(F.lit(1)).alias("nn"))
-    ranks = nodes.crossJoin(F.broadcast(ns)).select(
-        "node", (F.lit(1.0) / F.col("nn")).alias("r"), "nn"
-    )
-    for _ in range(TR_ITERS):
-        contrib = (
-            ew.join(
-                F.broadcast(
-                    ranks.select(F.col("node").alias("f"), "r")
-                ),
-                "f",
-            )
-            .groupBy("t")
-            .agg(F.sum(F.col("r") * F.col("p")).alias("c"))
-        )
-        ranks = (
-            ranks.drop("r")
-            .join(
-                F.broadcast(contrib.withColumnRenamed("t", "node")),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - TR_DAMP) / F.col("nn")
-                    + TR_DAMP * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("r"),
-                "nn",
-            )
-        )
     return (
-        ranks.select(
+        pagerank(ew, nodes, TR_ITERS)
+        .select(
             F.col("node").alias("word"),
             stable_round(F.col("r"), 6).alias("textrank"),
         )

@@ -1,6 +1,5 @@
 """Time-series & statistics surface: marketing attribution, gap-fill
-interpolation, z-score anomaly flags, Welch's t-test, and PageRank
-over the behavioral transition graph.
+interpolation, z-score anomaly flags, and Welch's t-test.
 
 These are the analytics a product/events pipeline runs next to the
 training-data operators: all are built on the same shuffle-disciplined
@@ -366,134 +365,6 @@ def stats_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: PageRank damping factor and fixed iteration count. Three iterations
-#: over a 5-node graph converge to ~1e-3; the point is the RELATIONAL
-#: iteration shape (edge extraction at data scale, rank refinement on
-#: the node-cardinality table), not numerical convergence.
-PR_DAMPING = 0.85
-PR_ITERS = 3
-
-
-def _pagerank_oracle() -> str:
-    seq = """
-    seq AS (
-      SELECT user_id, event_type,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS next_type
-      FROM events
-    ),
-    e AS (
-      SELECT event_type AS f, next_type AS t, count(*) AS n
-      FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
-    ),
-    ew AS (
-      SELECT f, t, n / sum(n) OVER (PARTITION BY f) AS p FROM e
-    ),
-    nodes AS (
-      SELECT f AS node FROM e UNION SELECT t FROM e
-    ),
-    ns AS (SELECT count(*) AS nn FROM nodes),
-    r0 AS (SELECT node, 1.0 / (SELECT nn FROM ns) AS r FROM nodes)"""
-    iters = []
-    for k in range(1, PR_ITERS + 1):
-        iters.append(f"""
-    r{k} AS (
-      SELECT n.node,
-             {1.0 - PR_DAMPING} / (SELECT nn FROM ns)
-             + {PR_DAMPING} * coalesce((
-                 SELECT sum(prev.r * ew.p)
-                 FROM ew JOIN r{k - 1} prev ON prev.node = ew.f
-                 WHERE ew.t = n.node), 0) AS r
-      FROM nodes n
-    )""")
-    return (
-        "WITH "
-        + seq
-        + ","
-        + ",".join(iters)
-        + f"""
-    SELECT node AS event_type, round(r, 6) AS pagerank
-    FROM r{PR_ITERS}"""
-    )
-
-
-@query("graph_pagerank_transitions", oracle=_pagerank_oracle())
-def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the behavioral transition graph: nodes are event
-    types, edges the lead()-derived next-event transitions weighted by
-    conditional probability, ranks refined through three damped
-    iterations — 'which state does user behavior concentrate in'.
-
-    Scale: the data-sized work is the ONE window shuffle extracting
-    bigram edges (same plan as events_transition_matrix); the
-    iteration then runs entirely on node/edge-cardinality frames (the
-    5x5 matrix), each step a broadcast join + tiny aggregate, so
-    iteration cost is independent of event volume. Dangling-node mass
-    is dropped identically on both engines (no out-edge, no
-    contribution). At web-graph node counts the same loop holds with
-    the rank table partitioned instead of broadcast — the contraction
-    loop in operators/dedup.py:connected_components is this pattern's
-    big-graph sibling."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type",
-        F.lead("event_type").over(w).alias("next_type"),
-    ).filter(F.col("next_type").isNotNull())
-    from kafka_go_streamer_spark.operators.iterate import pinned
-
-    # Pin the edge table ONCE: without the barrier every iteration's
-    # reference to ew/nodes re-derives the whole lineage from the
-    # events scan (measured: 19 scans in the 3-iteration plan) — the
-    # classic iterative-lineage trap. Pinned, the corpus is scanned
-    # exactly once and the loop runs on the materialized 5x5 frame.
-    e = pinned(
-        seq.groupBy(
-            F.col("event_type").alias("f"), F.col("next_type").alias("t")
-        ).agg(F.count(F.lit(1)).alias("n"))
-    )
-    wf = Window.partitionBy("f")
-    ew = e.select("f", "t", (F.col("n") / F.sum("n").over(wf)).alias("p"))
-    nodes = (
-        e.select(F.col("f").alias("node"))
-        .union(e.select(F.col("t").alias("node")))
-        .distinct()
-    )
-    ns = nodes.agg(F.count(F.lit(1)).alias("nn"))
-    ranks = nodes.crossJoin(F.broadcast(ns)).select(
-        "node", (F.lit(1.0) / F.col("nn")).alias("r"), "nn"
-    )
-    for _ in range(PR_ITERS):
-        contrib = (
-            ew.join(
-                F.broadcast(ranks.select(F.col("node").alias("f"), "r")), "f"
-            )
-            .groupBy("t")
-            .agg(F.sum(F.col("r") * F.col("p")).alias("c"))
-        )
-        ranks = (
-            ranks.drop("r")
-            .join(
-                F.broadcast(contrib.withColumnRenamed("t", "node")),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - PR_DAMPING) / F.col("nn")
-                    + PR_DAMPING * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("r"),
-                "nn",
-            )
-        )
-    return ranks.select(
-        F.col("node").alias("event_type"),
-        stable_round(F.col("r"), 6).alias("pagerank"),
-    )
-
-
 #: Rolling-feature knobs: simple stats over the last ROLL_N events and
 #: an exponentially-weighted average (decay EWMA_A) over the last
 #: EWMA_N — the standard per-entity feature block in front of a model.
@@ -721,123 +592,6 @@ def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return st.select(F.explode(pairs).alias("p")).select(
         "p.col_a", "p.col_b", "p.corr"
-    )
-
-
-#: Document-graph PageRank iterations (unrolled in the oracle).
-DOC_PR_ITERS = 2
-
-
-def _doc_centrality_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    # The edge list IS the registered winnowing-pair query — reuse its
-    # oracle verbatim as a CTE so the two stay in lockstep.
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    iters = []
-    for k in range(1, DOC_PR_ITERS + 1):
-        iters.append(f"""
-    r{k} AS (
-      SELECT n.node,
-             {1.0 - PR_DAMPING} / (SELECT nn FROM ns)
-             + {PR_DAMPING} * coalesce(s.c, 0) AS r
-      FROM nodes n
-      LEFT JOIN (
-        SELECT e.dst, sum(p.r * e.p) AS c
-        FROM ew e JOIN r{k - 1} p ON p.node = e.src
-        GROUP BY e.dst
-      ) s ON s.dst = n.node
-    )""")
-    return f"""
-    WITH wpairs AS ({wpairs}),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst, n_shared AS w FROM wpairs
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst, n_shared AS w FROM wpairs
-    ),
-    ew AS (
-      SELECT src, dst, w * 1.0 / sum(w) OVER (PARTITION BY src) AS p
-      FROM edges
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    ns AS (SELECT count(*) AS nn FROM nodes),
-    r0 AS (SELECT node, 1.0 / (SELECT nn FROM ns) AS r FROM nodes),
-    {",".join(iters)}
-    SELECT node AS doc_id, round(r, 6) AS centrality
-    FROM r{DOC_PR_ITERS}
-    """
-
-
-@query("graph_doc_centrality", oracle=_doc_centrality_oracle)
-def graph_doc_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document centrality: damped PageRank over the winnowing-overlap
-    similarity graph (edges = the registered ``dedup_winnowing_pairs``
-    output, symmetrized, weighted by shared-fingerprint count) — a
-    data-selection signal: documents central to a duplication
-    neighborhood are templates/boilerplate hubs, peripheral ones are
-    distinctive. Isolated documents (no near-dup edges) are excluded —
-    centrality is defined on the graph.
-
-    Scale: this is the BIG-GRAPH twin of the event-type PageRank
-    (graph_pagerank_transitions): there the node set is tiny and the
-    rank table broadcasts; here nodes are document-cardinality, so
-    every iteration is a PARTITIONED equi-join of the rank table with
-    the pinned edge list (both hash-partitioned on the node key —
-    exchange reuse across iterations), a map-side-combinable
-    contribution aggregate, and a left join back to nodes. Edge
-    generation inherits winnowing's capped blocking, so the graph is
-    sparse by construction (no bucket can go quadratic). Iteration
-    count is fixed and small — the contraction-loop discipline of
-    connected_components applies unchanged if run to convergence."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    edges = pairs.select(
-        F.col("id_a").alias("src"),
-        F.col("id_b").alias("dst"),
-        F.col("n_shared").alias("w"),
-    ).unionByName(
-        pairs.select(
-            F.col("id_b").alias("src"),
-            F.col("id_a").alias("dst"),
-            F.col("n_shared").alias("w"),
-        )
-    )
-    ws = Window.partitionBy("src")
-    ew = pinned(
-        edges.select(
-            "src", "dst", (F.col("w") * 1.0 / F.sum("w").over(ws)).alias("p")
-        )
-    )
-    nodes = ew.select(F.col("src").alias("node")).distinct()
-    ns = nodes.agg(F.count(F.lit(1)).alias("nn"))
-    ranks = nodes.crossJoin(F.broadcast(ns)).select(
-        "node", (F.lit(1.0) / F.col("nn")).alias("r"), "nn"
-    )
-    for _ in range(DOC_PR_ITERS):
-        contrib = (
-            ew.join(
-                ranks.select(F.col("node").alias("src"), "r"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("r") * F.col("p")).alias("c"))
-        )
-        ranks = (
-            ranks.drop("r")
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - PR_DAMPING) / F.col("nn")
-                    + PR_DAMPING * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("r"),
-                "nn",
-            )
-        )
-    return ranks.select(
-        F.col("node").alias("doc_id"),
-        stable_round(F.col("r"), 6).alias("centrality"),
     )
 
 
@@ -1591,109 +1345,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triangle_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    # e is referenced six times (the three-way triangle self-join, the
-    # degree unions, the edge count); MATERIALIZED stops DuckDB's CTE
-    # inlining from re-deriving the winnowing chain per reference.
-    return f"""
-    WITH wpairs AS MATERIALIZED ({wpairs}),
-    e AS MATERIALIZED (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    ),
-    tri AS (
-      SELECT count(*)::BIGINT AS n_triangles
-      FROM e e1
-      JOIN e e2 ON e2.a = e1.b
-      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-    ),
-    deg AS (
-      SELECT node, count(*)::BIGINT AS d FROM (
-        SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-      ) GROUP BY 1
-    ),
-    wed AS (
-      SELECT sum(d * (d - 1) / 2) AS n_wedges,
-             count(*)::BIGINT AS n_nodes
-      FROM deg
-    ),
-    ec AS (SELECT count(*)::BIGINT AS n_edges FROM e)
-    SELECT t.n_triangles, ec.n_edges, w.n_nodes,
-           round(CASE WHEN w.n_wedges > 0
-                      THEN 3.0 * t.n_triangles / w.n_wedges
-                      ELSE 0.0 END, 6) AS clustering_coeff
-    FROM tri t CROSS JOIN wed w CROSS JOIN ec
-    """
-
-
-@query("graph_triangle_count", oracle=_triangle_oracle)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count + global clustering coefficient of the
-    winnowing-overlap document graph (same edge source as
-    ``graph_doc_centrality``): how CLIQUEY the near-duplication
-    structure is — template families close into triangles, chains of
-    pairwise-similar revisions don't, and the coefficient
-    3·triangles/wedges separates the two corpus pathologies.
-
-    Scale: the classic node-ordered triangle join — edges oriented
-    a<b so each triangle is generated exactly once, one equi-join on
-    the shared endpoint then one equi-join closing the wedge; edge
-    lists inherit winnowing's capped blocking (sparse by
-    construction), and the edge frame is pinned so the three join
-    arms read the materialized blocks instead of re-deriving the
-    shingle pipeline. Production adds degree-descending orientation
-    for skewed graphs; the wedge count is a degree-table aggregate,
-    never a wedge materialization."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-    ab = e
-    bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = e.select("a", F.col("b").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    wed = deg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / 2).alias("n_wedges"),
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-    )
-    ec = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        tri.crossJoin(F.broadcast(wed))
-        .crossJoin(F.broadcast(ec))
-        .select(
-            "n_triangles",
-            "n_edges",
-            "n_nodes",
-            stable_round(
-                F.when(
-                    F.col("n_wedges") > 0,
-                    3.0 * F.col("n_triangles") / F.col("n_wedges"),
-                ).otherwise(0.0),
-                6,
-            ).alias("clustering_coeff"),
-        )
-    )
-
-
 @query(
     "stats_mannwhitney_u",
     oracle="""
@@ -2228,240 +1879,6 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_lags",
             stable_round(F.col("wx") / F.col("wsum"), 4).alias("ewma"),
         )
-    )
-
-
-# ----------------------------------------------------- round 9: graphs
-#: k-core threshold and bounded peeling rounds (production runs the
-#: same loop to a fixpoint; bounded rounds keep the oracle unrollable
-#: and the per-round report is the deterministic contract either way).
-KCORE_K = 2
-KCORE_ROUNDS = 3
-
-
-def _kcore_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    # Every per-round CTE is referenced several times (d/e/report);
-    # DuckDB inlines CTEs by default, so without MATERIALIZED the
-    # round-r lineage re-derives rounds 1..r-1 per reference and the
-    # oracle goes quadratic in rounds (measured 55 s vs Spark's ~15 s
-    # at sf0.1 — VERDICT r9 task 3). MATERIALIZED pins each frame
-    # once, the exact analogue of the Spark plan's pinned() barriers.
-    parts = [f"""
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    )"""]
-    rows = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        parts.append(f"""
-    d{r} AS (
-      SELECT node, count(*)::BIGINT AS deg FROM (
-        SELECT a AS node FROM e{r - 1}
-        UNION ALL SELECT b AS node FROM e{r - 1}
-      ) GROUP BY 1
-    ),
-    k{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE deg >= {KCORE_K}),
-    e{r} AS MATERIALIZED (
-      SELECT e.a, e.b FROM e{r - 1} e
-      JOIN k{r} ka ON ka.node = e.a
-      JOIN k{r} kb ON kb.node = e.b
-    )""")
-        rows.append(
-            f"SELECT {r} AS round, (SELECT count(*) FROM k{r})::BIGINT"
-            f" AS nodes_kept, (SELECT count(*) FROM e{r})::BIGINT"
-            " AS edges_kept"
-        )
-    return (
-        f"WITH wpairs AS MATERIALIZED ({wpairs}),"
-        + ",".join(parts)
-        + " "
-        + " UNION ALL ".join(rows)
-    )
-
-
-@query("graph_kcore_decomposition", oracle=_kcore_oracle)
-def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded k-core peeling of the winnowing-overlap document graph:
-    each round drops nodes of degree < k and their incident edges,
-    reporting (nodes_kept, edges_kept) per round — the standard
-    dense-substructure extractor; what survives peeling is the
-    boilerplate/template CORE of a near-dup graph, the part worth
-    deduplicating first (the per-round report doubles as a
-    convergence trace: equal consecutive rows = fixpoint reached).
-
-    Scale: the edge list inherits winnowing's capped blocking (sparse
-    by construction); each round is a degree aggregate plus two
-    semi-joins against the kept-node set — all equi-joins on the node
-    key, re-using the edge partitioning, with the per-round edge frame
-    pinned so round r+1 never recomputes round r's lineage; the pin's
-    materialization job answers the round's ``edges_kept`` count
-    itself (``pinned_counted``, same merge as the CC loop), so the
-    report never re-aggregates the edge frame. Bounded rounds here;
-    production peels to fixpoint with the same contraction discipline
-    as connected_components."""
-    from kafka_go_streamer_spark.operators.iterate import (
-        pinned,
-        pinned_counted,
-    )
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pairs.select(
-        F.least("id_a", "id_b").alias("a"),
-        F.greatest("id_a", "id_b").alias("b"),
-    ).distinct()
-    reports = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
-        # kept stays UNPINNED: it derives from one aggregate over the
-        # round's pinned edge frame, so its three consumers (both join
-        # sides + the report count) re-derive a cheap subtree instead
-        # of paying a localCheckpoint job per round
-        kept = deg.filter(F.col("deg") >= KCORE_K).select("node")
-        e, n_edges = pinned_counted(
-            e.join(kept.withColumnRenamed("node", "a"), "a").join(
-                kept.withColumnRenamed("node", "b"), "b"
-            ).select("a", "b")
-        )
-        reports.append(
-            kept.agg(F.count(F.lit(1)).cast("long").alias("nodes_kept"))
-            .select(
-                F.lit(r).alias("round"),
-                "nodes_kept",
-                F.lit(n_edges).cast("long").alias("edges_kept"),
-            )
-        )
-    out = reports[0]
-    for rep in reports[1:]:
-        out = out.unionAll(rep)
-    return out
-
-
-#: Synchronous min-label propagation rounds.
-LPA_ROUNDS = 2
-#: Communities reported (largest first).
-LPA_TOP = 10
-
-
-def lpa_label_ctes() -> tuple[str, str]:
-    """The LPA label chain as a reusable ``(with_body, final_name)``
-    pair: ``wpairs`` → symmetric edge list ``e`` → ``l0..lN``. Shared
-    by the LPA query's oracle and composites (modularity)."""
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    # MATERIALIZED for the same reason as _kcore_oracle: l{r-1} is
-    # referenced twice per round and e twice overall, so DuckDB's
-    # default CTE inlining re-derives the whole lineage per reference.
-    parts = [f"""
-    e AS MATERIALIZED (
-      SELECT id_a AS src, id_b AS dst FROM wpairs
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM wpairs
-    ),
-    l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e)"""]
-    for r in range(1, LPA_ROUNDS + 1):
-        parts.append(f"""
-    l{r} AS MATERIALIZED (
-      SELECT l.node, least(l.lbl, min(nl.lbl)) AS lbl
-      FROM l{r - 1} l
-      JOIN e ON e.src = l.node
-      JOIN l{r - 1} nl ON nl.node = e.dst
-      GROUP BY l.node, l.lbl
-    )""")
-    body = f"wpairs AS MATERIALIZED ({wpairs})," + ",".join(parts)
-    return body, f"l{LPA_ROUNDS}"
-
-
-def lpa_label_frame(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
-    """(node, lbl) after LPA_ROUNDS of synchronous min-label
-    propagation over the winnowing graph — the Spark twin of
-    :func:`lpa_label_ctes`, reused by the LPA query and modularity.
-
-    ``pairs`` lets a composite that already holds the PINNED winnowing
-    edge list share it (modularity needs the edges for degrees too —
-    without sharing, the whole winnowing pipeline executes twice;
-    same-session A/B r12 at sf0.1, min-of-3 over the edge+label
-    materialization: recomputed 3.82 s → shared 2.19 s)."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    if pairs is None:
-        pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pinned(
-        pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        ).unionAll(
-            pairs.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-            )
-        )
-    )
-    lbl = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(LPA_ROUNDS):
-        lbl = (
-            lbl.join(e, lbl["node"] == e["src"])
-            .join(
-                lbl.select(
-                    F.col("node").alias("nb"), F.col("lbl").alias("nlbl")
-                ),
-                F.col("dst") == F.col("nb"),
-            )
-            .groupBy("node", "lbl")
-            .agg(F.least(F.first("lbl"), F.min("nlbl")).alias("new_lbl"))
-            .select("node", F.col("new_lbl").alias("lbl"))
-        )
-    return lbl
-
-
-def _lpa_oracle() -> str:
-    body, final = lpa_label_ctes()
-    return (
-        f"WITH {body}"
-        + f"""
-    SELECT lbl AS community, count(*)::BIGINT AS size
-    FROM {final}
-    GROUP BY 1 ORDER BY size DESC, community ASC LIMIT {LPA_TOP}
-    """
-    )
-
-
-@query("graph_label_propagation", oracle=_lpa_oracle)
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous min-label propagation over the winnowing near-dup
-    graph (two rounds): every node starts as its own label and adopts
-    the minimum label in its closed neighborhood each round; the top
-    communities by size fall out — the cheap community detector that
-    groups template FAMILIES (not just connected pairs) after a
-    bounded number of shuffles, where full connected-components runs
-    its contraction to convergence.
-
-    Scale: each round is one equi-join of the label frame with the
-    pinned symmetric edge list plus a min-aggregate — label frames are
-    node-cardinality, edges capped-sparse; rounds reuse the edge
-    partitioning. Bounded rounds = bounded shuffles: LPA is the
-    operator of choice when one pass of "good enough" clustering must
-    fit a fixed stage budget at 100 TB. The label chain itself lives
-    in :func:`lpa_label_frame` (r12: extracted so
-    ``graph_modularity_lpa`` can score the same communities)."""
-    lbl = lpa_label_frame(spark, sf_dir)
-    return (
-        lbl.groupBy(F.col("lbl").alias("community"))
-        .agg(F.count(F.lit(1)).cast("long").alias("size"))
-        .orderBy(F.col("size").desc(), F.col("community").asc())
-        .limit(LPA_TOP)
     )
 
 
@@ -3512,107 +2929,6 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Adamic-Adar: how many predicted links to report.
-AA_TOP = 20
-
-
-def _adamic_adar_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    return f"""
-    WITH wpairs AS ({wpairs}),
-    e AS (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    ),
-    adj AS (
-      SELECT a AS x, b AS y FROM e UNION ALL SELECT b AS x, a AS y FROM e
-    ),
-    deg AS (SELECT x AS node, count(*)::BIGINT AS d FROM adj GROUP BY 1),
-    cand AS (
-      SELECT a1.x AS u, a2.x AS v, count(*)::BIGINT AS n_common,
-             round(sum(1.0 / ln(g.d)), 6) AS aa_score
-      FROM adj a1
-      JOIN adj a2 ON a1.y = a2.y AND a1.x < a2.x
-      JOIN deg g ON g.node = a1.y
-      GROUP BY 1, 2
-    )
-    SELECT c.u AS id_a, c.v AS id_b, c.n_common, c.aa_score
-    FROM cand c LEFT JOIN e ON e.a = c.u AND e.b = c.v
-    WHERE e.a IS NULL
-    ORDER BY c.aa_score DESC, c.u, c.v LIMIT {AA_TOP}
-    """
-
-
-@query("graph_adamic_adar", oracle=_adamic_adar_oracle)
-def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction over the winnowing-overlap document
-    graph: for every NON-adjacent pair sharing at least one neighbor,
-    score = sum over common neighbors c of 1/ln(deg(c)) — rare shared
-    neighbors count more than promiscuous hubs. The top predictions
-    are the near-duplicate pairs the fingerprint blocking MISSED but
-    the graph structure implies (two docs both overlapping the same
-    template are probably versions of each other): a recall audit for
-    the dedup family, from the dedup family's own output.
-
-    Scale: the wedge join is the triangle join's first arm (same
-    capped, pinned edge list — sparse by construction), grouped to
-    pair-cardinality before the degree weighting; existing edges drop
-    out via an anti-join against the edge frame, and only the top-20
-    by rounded score (deterministic id tie-break) surface. deg(c)>=2
-    for any common neighbor, so 1/ln never divides by zero.
-    Production adds the degree-descending orientation + a per-node
-    neighbor cap, same as every candidate generator in this repo."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-    adj = pinned(
-        e.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-            e.select(F.col("b").alias("x"), F.col("a").alias("y"))
-        )
-    )
-    deg = adj.groupBy(F.col("x").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    a1 = adj.select(F.col("x").alias("u"), F.col("y").alias("c"))
-    a2 = adj.select(F.col("x").alias("v"), F.col("y").alias("c"))
-    cand = (
-        a1.join(a2, "c")
-        .filter(F.col("u") < F.col("v"))
-        .join(deg.withColumnRenamed("node", "c"), "c")
-        .groupBy("u", "v")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-            stable_round(F.sum(1.0 / F.log(F.col("d"))), 6).alias(
-                "aa_score"
-            ),
-        )
-    )
-    new = cand.join(
-        e,
-        (cand["u"] == e["a"]) & (cand["v"] == e["b"]),
-        "left_anti",
-    )
-    return (
-        new.select(
-            F.col("u").alias("id_a"),
-            F.col("v").alias("id_b"),
-            "n_common",
-            "aa_score",
-        )
-        .orderBy(F.col("aa_score").desc(), "id_a", "id_b")
-        .limit(AA_TOP)
-    )
-
-
 def _ljung_box_oracle() -> str:
     from kafka_go_streamer_spark.plans.registry import ORACLES
 
@@ -3862,125 +3178,6 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(slope, 4).alias("hurst_exponent"),
         )
         .orderBy("event_type")
-    )
-
-
-def _jaccard_neighbors_oracle() -> str:
-    from kafka_go_streamer_spark.plans.registry import ORACLES
-
-    wpairs = ORACLES["dedup_winnowing_pairs"]
-    return f"""
-    WITH wpairs AS ({wpairs}),
-    e AS (
-      SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM wpairs
-    ),
-    adj AS (
-      SELECT a AS x, b AS y FROM e UNION ALL SELECT b AS x, a AS y FROM e
-    ),
-    deg AS (SELECT x AS node, count(*)::BIGINT AS d FROM adj GROUP BY 1),
-    cand AS (
-      SELECT a1.x AS u, a2.x AS v, count(*)::BIGINT AS n_common
-      FROM adj a1
-      JOIN adj a2 ON a1.y = a2.y AND a1.x < a2.x
-      GROUP BY 1, 2
-    ),
-    sc AS (
-      SELECT c.u, c.v, c.n_common,
-             round(c.n_common * 1.0
-                   / (du.d + dv.d - c.n_common), 6) AS jaccard
-      FROM cand c
-      JOIN deg du ON du.node = c.u
-      JOIN deg dv ON dv.node = c.v
-    )
-    SELECT s.u AS id_a, s.v AS id_b, s.n_common, s.jaccard
-    FROM sc s LEFT JOIN e ON e.a = s.u AND e.b = s.v
-    WHERE e.a IS NULL
-    ORDER BY s.jaccard DESC, s.u, s.v LIMIT {AA_TOP}
-    """
-
-
-@query("graph_jaccard_neighbors", oracle=_jaccard_neighbors_oracle)
-def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighborhood-Jaccard link prediction over the winnowing-overlap
-    document graph: for every non-adjacent pair with at least one
-    common neighbor, |N(u)∩N(v)| / |N(u)∪N(v)| — the set-overlap
-    companion to Adamic-Adar's rarity-weighted score. Jaccard favors
-    pairs whose neighborhoods agree PROPORTIONALLY (two 3-neighbor
-    docs sharing all 3 beat two hubs sharing 10 of 200), so the two
-    predictors disagree exactly where hub structure matters, and
-    running both is the standard link-prediction ablation.
-
-    Scale: same wedge join as the triangle/Adamic-Adar family (capped,
-    pinned, sparse edge list), grouped to pair cardinality before the
-    degree joins; the union size comes from inclusion-exclusion on the
-    degree table (no neighborhood materialization), existing edges
-    drop via anti-join, top-{AA_TOP} by rounded score with id
-    tie-breaks. deg_u + deg_v − n_common ≥ max(deg) ≥ 1, so the ratio
-    never divides by zero."""
-    from kafka_go_streamer_spark.operators.iterate import pinned
-    from kafka_go_streamer_spark.plans.registry import QUERIES as _Q
-
-    pairs = pinned(_Q["dedup_winnowing_pairs"](spark, sf_dir))
-    e = pinned(
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"),
-            F.greatest("id_a", "id_b").alias("b"),
-        ).distinct()
-    )
-    adj = pinned(
-        e.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-            e.select(F.col("b").alias("x"), F.col("a").alias("y"))
-        )
-    )
-    deg = pinned(
-        adj.groupBy(F.col("x").alias("node")).agg(
-            F.count(F.lit(1)).cast("long").alias("d")
-        )
-    )
-    a1 = adj.select(F.col("x").alias("u"), F.col("y").alias("c"))
-    a2 = adj.select(F.col("x").alias("v"), F.col("y").alias("c"))
-    cand = (
-        a1.join(a2, "c")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    sc = (
-        cand.join(
-            deg.select(F.col("node").alias("u"), F.col("d").alias("du")),
-            "u",
-        )
-        .join(
-            deg.select(F.col("node").alias("v"), F.col("d").alias("dv")),
-            "v",
-        )
-        .select(
-            "u",
-            "v",
-            "n_common",
-            stable_round(
-                F.col("n_common")
-                * 1.0
-                / (F.col("du") + F.col("dv") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    new = sc.join(
-        e,
-        (sc["u"] == e["a"]) & (sc["v"] == e["b"]),
-        "left_anti",
-    )
-    return (
-        new.select(
-            F.col("u").alias("id_a"),
-            F.col("v").alias("id_b"),
-            "n_common",
-            "jaccard",
-        )
-        .orderBy(F.col("jaccard").desc(), "id_a", "id_b")
-        .limit(AA_TOP)
     )
 
 

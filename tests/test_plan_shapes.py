@@ -714,7 +714,7 @@ def test_doc_centrality_iterations_reuse_edge_exchange(spark, sf_dir):
         and "ReusedExchange" not in ln
     ]
     assert len(edge_exchanges) <= 1, edge_exchanges
-    from kafka_go_streamer_spark.plans.timeseries import DOC_PR_ITERS
+    from kafka_go_streamer_spark.plans.graph import DOC_PR_ITERS
 
     assert DOC_PR_ITERS >= 2  # the invariant is vacuous with 1 iter
     assert final.count("ReusedExchange") >= 1

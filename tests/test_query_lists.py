@@ -3,6 +3,8 @@
 The bench headline is the key set of ``FLOORS.json["floors"]`` (in file
 order), and the driver ordering in ``__spark_entry__`` is a permutation
 of the registry. Neither may name a query the registry does not hold.
+Family membership is read from the registry too: a family's module is
+where its queries are defined.
 """
 
 from __future__ import annotations
@@ -34,3 +36,25 @@ def test_headline_is_the_floor_keys_and_every_name_is_registered():
     assert len(QUERIES) == REGISTRY_SIZE
     assert sorted(names) == sorted(QUERIES)
     assert list(entry.oracle_sql()) == [n for n in names if n in ORACLES]
+
+
+def test_graph_family_is_defined_in_one_module():
+    """Every registered ``graph_*`` query is defined in ``plans/graph.py``,
+    and that module registers nothing else."""
+    from kafka_go_streamer_spark.plans import QUERIES
+
+    module = "kafka_go_streamer_spark.plans.graph"
+    family = {n for n in QUERIES if n.startswith("graph_")}
+    assert family  # a vacuous pass would prove nothing
+    elsewhere = {
+        n: QUERIES[n].__module__
+        for n in family
+        if QUERIES[n].__module__ != module
+    }
+    assert not elsewhere, f"graph_* queries outside {module}: {elsewhere}"
+    others = sorted(
+        n
+        for n, fn in QUERIES.items()
+        if fn.__module__ == module and n not in family
+    )
+    assert not others, f"non-graph queries in {module}: {others}"

@@ -352,127 +352,6 @@ def test_var_cvar_tail_semantics(spark, duck):
         assert r["cvar_5pct"] <= r["var_5pct"]
 
 
-def _edges(spark):
-    pairs = QUERIES["dedup_winnowing_pairs"](spark, SF).collect()
-    return sorted(
-        {(min(p["id_a"], p["id_b"]), max(p["id_a"], p["id_b"])) for p in pairs}
-    )
-
-
-# -------------------------------------------------------- assortativity
-def test_assortativity_matches_python_reference(spark):
-    e = _edges(spark)
-    deg: Counter = Counter()
-    for a, b in e:
-        deg[a] += 1
-        deg[b] += 1
-    xs, ys = [], []
-    for a, b in e:
-        xs += [deg[a], deg[b]]
-        ys += [deg[b], deg[a]]
-    n = len(xs)
-    sx, sy = sum(xs), sum(ys)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-    sxx, syy = sum(x * x for x in xs), sum(y * y for y in ys)
-    den = math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    r = QUERIES["graph_degree_assortativity"](spark, SF).collect()[0]
-    assert r["n_edges"] == len(e) and r["n_nodes"] == len(deg)
-    if den > 0:
-        assert r["assortativity"] == pytest.approx(
-            (n * sxy - sx * sy) / den, abs=1e-3
-        )
-        assert -1.0 <= r["assortativity"] <= 1.0
-    else:
-        assert r["assortativity"] is None
-
-
-# ---------------------------------------------------- local clustering
-def test_local_clustering_matches_python_reference(spark):
-    e = _edges(spark)
-    adj: dict = defaultdict(set)
-    for a, b in e:
-        adj[a].add(b)
-        adj[b].add(a)
-    ccs = []
-    closed = 0
-    for v, nb in adj.items():
-        d = len(nb)
-        if d < 2:
-            continue
-        nbl = sorted(nb)
-        t = sum(
-            1
-            for i in range(len(nbl))
-            for j in range(i + 1, len(nbl))
-            if nbl[j] in adj[nbl[i]]
-        )
-        ccs.append(2.0 * t / (d * (d - 1)))
-        closed += t > 0
-    r = QUERIES["graph_clustering_coefficient"](spark, SF).collect()[0]
-    assert r["n_nodes_deg2"] == len(ccs)
-    assert r["n_closed_nodes"] == closed
-    if ccs:
-        assert r["avg_local_cc"] == pytest.approx(
-            sum(ccs) / len(ccs), abs=1e-4
-        )
-        assert 0.0 <= r["avg_local_cc"] <= 1.0
-
-
-# ------------------------------------------------- bipartite projection
-def test_bipartite_projection_matches_python_reference(spark, duck):
-    rows = duck.execute(
-        "SELECT DISTINCT user_id, event_type FROM events"
-    ).fetchall()
-    by_user: dict = defaultdict(set)
-    nt: Counter = Counter()
-    for u, t in rows:
-        by_user[u].add(t)
-        nt[t] += 1
-    co: Counter = Counter()
-    for ts in by_user.values():
-        tl = sorted(ts)
-        for i in range(len(tl)):
-            for j in range(i + 1, len(tl)):
-                co[(tl[i], tl[j])] += 1
-    got = {
-        (r["type_a"], r["type_b"]): r
-        for r in QUERIES["graph_bipartite_projection"](spark, SF).collect()
-    }
-    assert set(got) == set(co)
-    for (ta, tb), n_both in co.items():
-        r = got[(ta, tb)]
-        assert r["n_both"] == n_both
-        assert r["cosine_affinity"] == pytest.approx(
-            n_both / math.sqrt(nt[ta] * nt[tb]), abs=1e-5
-        )
-        assert 0.0 < r["cosine_affinity"] <= 1.0
-
-
-# ----------------------------------------------------------- reciprocity
-def test_reciprocity_matches_python_reference(spark, duck):
-    rows = duck.execute(
-        "SELECT user_id, event_type, ts, event_id FROM events"
-        " ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    w: Counter = Counter()
-    prev: dict = {}
-    for u, t, _, _ in rows:
-        if u in prev and prev[u] != t:
-            w[(prev[u], t)] += 1
-        prev[u] = t
-    n_dir = len(w)
-    n_rec = sum(1 for (a, b) in w if (b, a) in w)
-    wrec = sum(min(c, w.get((b, a), 0)) for (a, b), c in w.items())
-    r = QUERIES["graph_reciprocity"](spark, SF).collect()[0]
-    assert r["n_directed_edges"] == n_dir
-    assert r["n_reciprocated"] == n_rec
-    assert r["reciprocity"] == pytest.approx(n_rec / n_dir, abs=1e-5)
-    assert r["weighted_reciprocity"] == pytest.approx(
-        wrec / sum(w.values()), abs=1e-5
-    )
-    assert 0.0 <= r["weighted_reciprocity"] <= r["reciprocity"] <= 1.0
-
-
 def _brute_rank(duck):
     """qid -> corpus ranked by (rounded cosine desc, vec_id asc)."""
     rows = duck.execute(

@@ -425,40 +425,6 @@ def test_rbo_quantization_matches_python_reference(spark, duck):
         assert 0.0 <= r["rbo"] <= 1.0
 
 
-# ------------------------------------------------------------ rich club
-def test_rich_club_matches_python_reference(spark):
-    edges = {
-        (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"]))
-        for r in QUERIES["dedup_winnowing_pairs"](spark, SF).collect()
-    }
-    deg: dict[int, int] = defaultdict(int)
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    got = {
-        r["k"]: r for r in QUERIES["graph_rich_club"](spark, SF).collect()
-    }
-    assert set(got) == set(C.RICH_KS)
-    prev_nodes = None
-    for k in sorted(C.RICH_KS):
-        nodes = {n for n, d in deg.items() if d > k}
-        e_k = sum(1 for a, b in edges if a in nodes and b in nodes)
-        r = got[k]
-        assert r["n_nodes"] == len(nodes), k
-        assert r["n_edges"] == e_k, k
-        if len(nodes) > 1:
-            phi = 2.0 * e_k / (len(nodes) * (len(nodes) - 1))
-            assert r["rich_club_coeff"] == pytest.approx(
-                phi, abs=2e-6
-            ), k
-            assert 0.0 <= r["rich_club_coeff"] <= 1.0
-        else:
-            assert r["rich_club_coeff"] is None
-        if prev_nodes is not None:
-            assert len(nodes) <= prev_nodes  # monotone shrinkage
-        prev_nodes = len(nodes)
-
-
 # --------------------------------------------------------- Cliff's delta
 def test_cliffs_delta_matches_python_reference(spark, duck_ev):
     rows = duck_ev.execute(

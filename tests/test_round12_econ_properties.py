@@ -30,6 +30,7 @@ from kafka_go_streamer_spark.operators.dedup import (
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import pipeline_econ as PE
 from kafka_go_streamer_spark.plans import audit_ops as AO
+from tests.refs import p_lang_id, pwords
 
 SF = "/root/testdata/sf0.001"
 
@@ -62,10 +63,6 @@ def events(duck):
 def _half_up(x: float, s: int) -> float:
     eps = 0.5 * 10.0 ** -(s + 2)
     return math.floor((x + eps) * 10**s + 0.5) / 10**s
-
-
-def _pwords(text: str) -> list[str]:
-    return re.split(r"\s+", text.strip().lower())
 
 
 def _ptokens(text: str) -> int:
@@ -282,24 +279,6 @@ def test_frontier_consistent_with_recall_curve(spark, duck):
 
 
 # ------------------------------------------- quality_calibration_bins
-def _p_lang_id(ws: list[str]) -> str:
-    hits = {
-        lang: sum(1 for w in ws if w in sw)
-        for lang, sw in STOPWORDS.items()
-    }
-    if hits["en"] > 0 and all(
-        hits["en"] >= hits[x] for x in ("de", "es", "fr")
-    ):
-        return "en"
-    if hits["de"] > 0 and hits["de"] >= hits["es"] and hits["de"] >= hits["fr"]:
-        return "de"
-    if hits["es"] > 0 and hits["es"] >= hits["fr"]:
-        return "es"
-    if hits["fr"] > 0:
-        return "fr"
-    return "und"
-
-
 def test_calibration_bins_match_python(spark, docs):
     rows = {
         r["bin"]: r
@@ -315,7 +294,7 @@ def test_calibration_bins_match_python(spark, docs):
 
     per = defaultdict(lambda: [0, 0.0, 0])  # n, sum_score, sum_gold
     for _, text, *_ in docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         wc = len(ws)
         mwl = _half_up(sum(len(w) for w in ws) / max(wc, 1), 4)
         alpha = _half_up(
@@ -330,7 +309,7 @@ def test_calibration_bins_match_python(spark, docs):
             + QC_W_STOP * stop
         )
         score = _half_up(1.0 / (1.0 + math.exp(-z)), 4)
-        gold = int(wc >= 20 and alpha > 0.6 and _p_lang_id(ws) == "en")
+        gold = int(wc >= 20 and alpha > 0.6 and p_lang_id(ws) == "en")
         b = min(int(score * 10), 9)
         per[b][0] += 1
         per[b][1] += score
@@ -379,7 +358,7 @@ def test_cross_source_overlap_matches_python(spark, docs):
     }
     vocab = defaultdict(set)
     for _, text, _, source, _ in docs:
-        vocab[source].update(_pwords(text))
+        vocab[source].update(pwords(text))
     srcs = sorted(vocab)
     expect = {}
     for i, a in enumerate(srcs):
@@ -412,7 +391,7 @@ def test_estimator_error_matches_python_end_to_end(spark, docs):
     }
     sh_sets, sigs = {}, {}
     for doc_id, text, *_ in docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         if len(ws) >= SHINGLE_SIZE:
             sh = {
                 " ".join(ws[i : i + SHINGLE_SIZE])
@@ -577,7 +556,7 @@ def test_zipf_slope_matches_python(spark, docs):
     r = QUERIES["text_zipf_slope"](spark, SF).collect()[0]
     freq = Counter()
     for _, text, *_ in docs:
-        freq.update(_pwords(text))
+        freq.update(pwords(text))
     ranked = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))
     pts = [
         (math.log(i + 1), math.log(c))
@@ -615,7 +594,7 @@ def _score_gold_rows(docs):
 
     out = []
     for _, text, *_ in docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         wc = len(ws)
         mwl = _half_up(sum(len(w) for w in ws) / max(wc, 1), 4)
         alpha = _half_up(
@@ -630,7 +609,7 @@ def _score_gold_rows(docs):
             + QC_W_STOP * stop
         )
         score = _half_up(1.0 / (1.0 + math.exp(-z)), 4)
-        gold = int(wc >= 20 and alpha > 0.6 and _p_lang_id(ws) == "en")
+        gold = int(wc >= 20 and alpha > 0.6 and p_lang_id(ws) == "en")
         out.append((score, gold))
     return out
 

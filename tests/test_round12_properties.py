@@ -716,41 +716,6 @@ def test_fill_rate_stats_recomputed_from_packer(spark):
     )
 
 
-def test_modularity_recomputed_from_lpa_and_edges(spark):
-    from kafka_go_streamer_spark.plans.timeseries import lpa_label_frame
-
-    pairs = QUERIES["dedup_winnowing_pairs"](spark, SF).collect()
-    edges = {
-        (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"]))
-        for r in pairs
-    }
-    lbl = {
-        r["node"]: r["lbl"]
-        for r in lpa_label_frame(spark, SF).collect()
-    }
-    m = len(edges)
-    deg = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    mc = Counter()
-    for a, b in edges:
-        if lbl[a] == lbl[b]:
-            mc[lbl[a]] += 1
-    dc = Counter()
-    for node, d in deg.items():
-        dc[lbl[node]] += d
-    q = sum(
-        mc.get(c, 0) / m - (dc[c] / (2 * m)) ** 2 for c in dc
-    )
-    row = QUERIES["graph_modularity_lpa"](spark, SF).collect()[0]
-    assert row["n_nodes"] == len(lbl)
-    assert row["n_communities"] == len(dc)
-    assert row["n_edges"] == m
-    assert row["modularity"] == pytest.approx(q, abs=2e-6)
-    assert -0.5 <= row["modularity"] <= 1.0
-
-
 def test_nprobe_curve_numpy_reference(spark, duck):
     import numpy as np
 

@@ -18,19 +18,9 @@ import pytest
 
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import lateness as L
+from tests.refs import half_up
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
 
 
 def _h60(eid: int, salt: str) -> int:
@@ -97,7 +87,7 @@ def test_lateness_grid_matches_python(spark, arrivals):
             assert r["n_late"] == late
             assert r["n_dropped"] == dropped
             assert r["drop_share"] == pytest.approx(
-                _half_up(dropped / n, 6), abs=1e-9
+                half_up(dropped / n, 6), abs=1e-9
             )
             assert r["n_windows"] == len(wins)
             assert r["n_windows_dirty"] == len(dirty)
@@ -145,23 +135,23 @@ def test_arrival_delay_profile_matches_python(spark, arrivals):
         r = got[typ]
         assert r["n_events"] == len(rows)
         assert r["mean_delay_s"] == pytest.approx(
-            _half_up(sum(delays) / len(delays), 4), abs=1e-9
+            half_up(sum(delays) / len(delays), 4), abs=1e-9
         )
         assert r["p50_delay_s"] == pytest.approx(
-            _half_up(_pct(delays, 0.5), 4), abs=1e-6
+            half_up(_pct(delays, 0.5), 4), abs=1e-6
         )
         assert r["p95_delay_s"] == pytest.approx(
-            _half_up(_pct(delays, 0.95), 4), abs=1e-6
+            half_up(_pct(delays, 0.95), 4), abs=1e-6
         )
         assert r["max_delay_s"] == pytest.approx(
-            _half_up(delays[-1], 4), abs=1e-9
+            half_up(delays[-1], 4), abs=1e-9
         )
         ooo = sum(1 for _, b in rows if b > 0)
         assert r["ooo_share"] == pytest.approx(
-            _half_up(ooo / len(rows), 6), abs=1e-9
+            half_up(ooo / len(rows), 6), abs=1e-9
         )
         assert r["max_behind_s"] == pytest.approx(
-            _half_up(max(b for _, b in rows) / 1e6, 4), abs=1e-9
+            half_up(max(b for _, b in rows) / 1e6, 4), abs=1e-9
         )
         # the jitter mixture is visible: p95 within the tail bound,
         # p50 within the body bound
@@ -217,7 +207,7 @@ def test_dedup_audit_matches_python(spark, events):
         assert r["n_orig_late"] == orig_late
         assert r["n_leaked"] == leaked
         assert r["leak_share"] == pytest.approx(
-            _half_up(leaked / len(dups), 6), abs=1e-9
+            half_up(leaked / len(dups), 6), abs=1e-9
         )
     # leakage decays with delay; the guarantee zone grows with delay;
     # a leak and a within-delay dedup are mutually exclusive
@@ -253,7 +243,7 @@ def test_open_state_matches_python(spark, events):
             assert r["n_open_windows"] == len(open_w)
             assert r["n_buffered_events"] == buffered
             assert r["buffered_share"] == pytest.approx(
-                _half_up(buffered / len(uss), 6), abs=1e-9
+                half_up(buffered / len(uss), 6), abs=1e-9
             )
             assert r["n_dedup_keys_live"] == live
             # state grows with delay, never exceeds the fact

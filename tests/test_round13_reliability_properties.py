@@ -15,7 +15,6 @@ from collections import Counter, defaultdict
 import duckdb
 import pytest
 
-from kafka_go_streamer_spark.functions.text import STOPWORDS
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import reliability as R
 from kafka_go_streamer_spark.plans.audit_ops import QI_LEN_BIN
@@ -24,41 +23,9 @@ from kafka_go_streamer_spark.plans.sketches import (
     BLOOM_K,
     CMS_D,
 )
+from tests.refs import half_up, p_lang_id, pwords
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _pwords(text: str) -> list[str]:
-    return re.split(r"\s+", text.strip().lower())
-
-
-def _p_lang_id(ws: list[str]) -> str:
-    hits = {
-        lang: sum(1 for w in ws if w in sw)
-        for lang, sw in STOPWORDS.items()
-    }
-    if hits["en"] > 0 and all(
-        hits["en"] >= hits[x] for x in ("de", "es", "fr")
-    ):
-        return "en"
-    if hits["de"] > 0 and hits["de"] >= hits["es"] and hits["de"] >= hits["fr"]:
-        return "de"
-    if hits["es"] > 0 and hits["es"] >= hits["fr"]:
-        return "es"
-    if hits["fr"] > 0:
-        return "fr"
-    return "und"
 
 
 @pytest.fixture(scope="module")
@@ -113,7 +80,7 @@ def test_route_unmatched_by_source_matches_python(spark, docs):
             n,
             unm,
             drp,
-            pytest.approx(_half_up(unm / n, 6), abs=1e-9),
+            pytest.approx(half_up(unm / n, 6), abs=1e-9),
         )
     # the dead-letter table is non-degenerate on this fixture
     assert sum(v[1] for v in per.values()) > 0
@@ -134,8 +101,8 @@ def test_gate_ablation_matches_python(spark, docs):
     first_seen = {}
     flags = []
     for doc_id, text, *_ in sorted(docs, key=lambda r: r[0]):
-        ws = _pwords(text)
-        alpha = _half_up(
+        ws = pwords(text)
+        alpha = half_up(
             len(re.sub("[^A-Za-z]", "", text)) / max(len(text), 1), 4
         )
         fp = hashlib.md5(" ".join(sorted(set(ws))).encode()).hexdigest()
@@ -145,7 +112,7 @@ def test_gate_ablation_matches_python(spark, docs):
             {
                 "words": int(len(ws) < 20),
                 "alpha": int(alpha <= 0.6),
-                "lang": int(_p_lang_id(ws) != "en"),
+                "lang": int(p_lang_id(ws) != "en"),
                 "dup": int(dup),
             }
         )
@@ -160,10 +127,10 @@ def test_gate_ablation_matches_python(spark, docs):
         assert got[gate][0] == total
         assert got[gate][1] == unique
         assert got[gate][2] == pytest.approx(
-            _half_up(total / n, 6), abs=1e-9
+            half_up(total / n, 6), abs=1e-9
         )
         assert got[gate][3] == pytest.approx(
-            _half_up(unique / n, 6), abs=1e-9
+            half_up(unique / n, 6), abs=1e-9
         )
         # unique failures are a subset of failures
         assert got[gate][1] <= got[gate][0]
@@ -187,7 +154,7 @@ def test_l_diversity_matches_python(spark, docs):
         assert got[l_min] == (
             len(below),
             nd,
-            pytest.approx(_half_up(nd / total, 6), abs=1e-9),
+            pytest.approx(half_up(nd / total, 6), abs=1e-9),
         )
     # monotone in l
     counts = [got[m][1] for m in sorted(R.L_DIV_GRID)]
@@ -228,10 +195,10 @@ def test_bloom_fpr_matches_python(spark, duck):
         assert r["bits_set"] == len(bits)
         assert r["n_false_pos"] == fp
         assert r["fpr_measured"] == pytest.approx(
-            _half_up(fp / nonm, 6), abs=1e-9
+            half_up(fp / nonm, 6), abs=1e-9
         )
         assert r["fpr_analytic"] == pytest.approx(
-            _half_up(analytic, 6), abs=1e-6
+            half_up(analytic, 6), abs=1e-6
         )
     # the curve: wider filters fill less and lie less
     fills = [got[m]["fill_ratio"] for m in sorted(R.BLOOM_M_GRID)]
@@ -275,13 +242,13 @@ def test_cms_error_matches_python(spark, duck):
         assert r["n_probes"] == len(top)
         assert r["n_exact"] == exact
         assert r["mean_rel_overcount"] == pytest.approx(
-            _half_up(sum(rels) / len(rels), 6), abs=1e-9
+            half_up(sum(rels) / len(rels), 6), abs=1e-9
         )
         assert r["max_rel_overcount"] == pytest.approx(
-            _half_up(max(rels), 6), abs=1e-9
+            half_up(max(rels), 6), abs=1e-9
         )
         assert r["bound_e_n_over_w"] == pytest.approx(
-            _half_up(math.e * len(users) / w, 2), abs=1e-6
+            half_up(math.e * len(users) / w, 2), abs=1e-6
         )
     # wider is never worse on mean error
     means = [got[w]["mean_rel_overcount"] for w in sorted(R.CMS_W_GRID)]
@@ -320,7 +287,7 @@ def test_backlog_plan_matches_python(spark, duck):
         assert r["backlog_row_hours"] == mass
         assert r["end_backlog"] == b
         assert r["congested_share"] == pytest.approx(
-            _half_up(congested / nh, 6), abs=1e-9
+            half_up(congested / nh, 6), abs=1e-9
         )
     # more capacity, less pain; the overprovisioned row drains
     peaks = [got[f]["peak_backlog"] for f in sorted(R.CAP_FACTORS_PCT)]
@@ -335,17 +302,17 @@ def test_hill_matches_python(spark, docs):
     r = QUERIES["text_tail_index_hill"](spark, SF).collect()[0]
     freq = Counter()
     for _, text, *_ in docs:
-        freq.update(_pwords(text))
+        freq.update(pwords(text))
     counts = sorted(freq.values(), reverse=True)[: R.HILL_K + 1]
     xk1 = counts[R.HILL_K]
     logsum = sum(math.log(c / xk1) for c in counts[: R.HILL_K])
     assert r["k"] == R.HILL_K
     assert r["tail_cut_count"] == xk1
     assert r["alpha_hill"] == pytest.approx(
-        _half_up(R.HILL_K / logsum, 6), abs=1e-6
+        half_up(R.HILL_K / logsum, 6), abs=1e-6
     )
     assert r["implied_zipf_slope"] == pytest.approx(
-        _half_up(-logsum / R.HILL_K, 6), abs=1e-6
+        half_up(-logsum / R.HILL_K, 6), abs=1e-6
     )
     # a frequency tail is heavy: alpha positive, implied slope negative
     assert r["alpha_hill"] > 0

@@ -9,7 +9,6 @@ monotonicity, and r=1's dominance over r=2 at equal hash budget)."""
 from __future__ import annotations
 
 import hashlib
-import re
 from collections import defaultdict
 
 import duckdb
@@ -24,23 +23,9 @@ from kafka_go_streamer_spark.plans.audit_ops import (
     DOC_PANEL_MAX_ID,
     SCURVE_BINS,
 )
+from tests.refs import half_up, pwords
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _pwords(text: str) -> list[str]:
-    return re.split(r"\s+", text.strip().lower())
 
 
 def _an_r1(s: float) -> float:
@@ -91,7 +76,7 @@ def test_scurve_table_matches_python_end_to_end(spark, panel_docs):
     # signatures + shingle sets
     sh_sets, sigs, words = {}, {}, {}
     for doc_id, text in panel_docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         words[doc_id] = ws
         if len(ws) >= SHINGLE_SIZE:
             sh = {
@@ -171,16 +156,16 @@ def test_scurve_table_matches_python_end_to_end(spark, panel_docs):
         r = got[key]
         assert r["n_pairs"] == n
         assert r["mean_exact"] == pytest.approx(
-            _half_up(ssum / n, 6), abs=1e-9
+            half_up(ssum / n, 6), abs=1e-9
         )
         assert r["analytic_p"] == pytest.approx(
-            _half_up(ansum / n, 6), abs=1e-9
+            half_up(ansum / n, 6), abs=1e-9
         )
         assert r["measured_rate"] == pytest.approx(
-            _half_up(hits / n, 6), abs=1e-9
+            half_up(hits / n, 6), abs=1e-9
         )
         assert r["gap"] == pytest.approx(
-            _half_up(hits / n - ansum / n, 6), abs=1e-9
+            half_up(hits / n - ansum / n, 6), abs=1e-9
         )
     # the S-curve fidelity claim itself: in every bin with real mass
     # the measured collision rate sits close to the analytic curve,

@@ -27,19 +27,9 @@ from kafka_go_streamer_spark.plans.sketches import (
     HLL_ALPHAS,
     HLL_M_GRID,
 )
+from tests.refs import half_up
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
 
 
 @pytest.fixture(scope="module")
@@ -82,14 +72,14 @@ def test_hll_error_curve_matches_python(spark, duck):
         r = got[m]
         assert r["filled_registers"] == filled
         assert r["hll_distinct"] == pytest.approx(
-            _half_up(est, 1), abs=1e-6
+            half_up(est, 1), abs=1e-6
         )
         assert r["exact_distinct"] == exact
         assert r["rel_error"] == pytest.approx(
-            _half_up((est - exact) / exact, 6), abs=1e-6
+            half_up((est - exact) / exact, 6), abs=1e-6
         )
         assert r["theoretical_rse"] == pytest.approx(
-            _half_up(1.04 / math.sqrt(m), 6), abs=1e-9
+            half_up(1.04 / math.sqrt(m), 6), abs=1e-9
         )
         # the estimate is within a few theoretical sigma of truth
         assert abs(r["rel_error"]) < 4 * r["theoretical_rse"]
@@ -248,10 +238,10 @@ def test_drop_bias_matches_python(spark, duck):
         assert got[src][0] == n
         assert got[src][1] == nd
         assert got[src][2] == pytest.approx(
-            _half_up(nd / n, 6), abs=1e-9
+            half_up(nd / n, 6), abs=1e-9
         )
         assert got[src][3] == pytest.approx(
-            _half_up((nd / n) / overall, 4), abs=1e-9
+            half_up((nd / n) / overall, 4), abs=1e-9
         )
 
 
@@ -311,11 +301,11 @@ def test_trigger_matrix_matches_python(spark, duck):
             assert r["n_dropped_batch"] == nb
             assert r["n_dropped_continuous"] == nc
             assert r["drop_share_batch"] == pytest.approx(
-                _half_up(nb / len(arr), 6), abs=1e-9
+                half_up(nb / len(arr), 6), abs=1e-9
             )
             if nc:
                 assert r["capture_ratio"] == pytest.approx(
-                    _half_up(nb / nc, 4), abs=1e-9
+                    half_up(nb / nc, 4), abs=1e-9
                 )
             # batch watermarks lag the continuous frontier: never MORE
             # drops than the bound
@@ -392,10 +382,10 @@ def test_zorder_audit_matches_python(spark, duck):
         r = got[layout]
         assert r["n_files"] == len(zmap)
         assert r["mean_files_hit"] == pytest.approx(
-            _half_up(hits / PE.Z_N_PROBES, 4), abs=1e-9
+            half_up(hits / PE.Z_N_PROBES, 4), abs=1e-9
         )
         assert r["skip_rate"] == pytest.approx(
-            _half_up(1 - hits / (PE.Z_N_PROBES * PE.Z_N_FILES), 4),
+            half_up(1 - hits / (PE.Z_N_PROBES * PE.Z_N_FILES), 4),
             abs=1e-9,
         )
     # the point of Z-order: 2-D rectangles skip MORE than a 1-D sort

@@ -18,19 +18,9 @@ import pytest
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import fidelity as FID
 from kafka_go_streamer_spark.plans.audit_ops import QI_LEN_BIN
+from tests.refs import half_up
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
 
 
 def _pct(vals, q):
@@ -89,13 +79,13 @@ def test_transition_dwell_matches_python(spark, events):
         r = got[key]
         assert r["n_transitions"] == len(ds)
         assert r["mean_dwell_s"] == pytest.approx(
-            _half_up(sum(ds) / len(ds) / 1e6, 4), abs=1e-9
+            half_up(sum(ds) / len(ds) / 1e6, 4), abs=1e-9
         )
         assert r["p50_dwell_s"] == pytest.approx(
-            _half_up(_pct(ds, 0.5) / 1e6, 4), abs=1e-9
+            half_up(_pct(ds, 0.5) / 1e6, 4), abs=1e-9
         )
         assert r["p90_dwell_s"] == pytest.approx(
-            _half_up(_pct(ds, 0.9) / 1e6, 4), abs=1e-9
+            half_up(_pct(ds, 0.9) / 1e6, 4), abs=1e-9
         )
         # dwell percentiles are ordered by construction
         assert r["p50_dwell_s"] <= r["p90_dwell_s"]
@@ -130,14 +120,14 @@ def test_rate_anomaly_mad_matches_python(spark, events):
         ) if mad > 0 else sum(1 for c in series if c != med)
         r = got[et]
         assert r["n_hours"] == len(series)
-        assert r["med_hourly"] == pytest.approx(_half_up(med, 2), abs=1e-9)
-        assert r["mad_hourly"] == pytest.approx(_half_up(mad, 2), abs=1e-9)
+        assert r["med_hourly"] == pytest.approx(half_up(med, 2), abs=1e-9)
+        assert r["mad_hourly"] == pytest.approx(half_up(mad, 2), abs=1e-9)
         assert r["n_anomalous"] == n_anom
         assert r["anomaly_share"] == pytest.approx(
-            _half_up(n_anom / len(series), 6), abs=1e-9
+            half_up(n_anom / len(series), 6), abs=1e-9
         )
         assert r["max_abs_dev"] == pytest.approx(
-            _half_up(max(ads), 2), abs=1e-9
+            half_up(max(ads), 2), abs=1e-9
         )
 
 
@@ -160,7 +150,7 @@ def test_t_closeness_matches_python(spark, docs):
         )
         tv[key] = (n_c, tvnum)
     for tn, td in FID.T_CLOSE_GRID:
-        thr = _half_up(tn / td, 4)
+        thr = half_up(tn / td, 4)
         viol = [
             (n_c, tvnum)
             for n_c, tvnum in tv.values()
@@ -170,17 +160,17 @@ def test_t_closeness_matches_python(spark, docs):
         assert r["n_classes_above"] == len(viol)
         assert r["n_docs_above"] == sum(v[0] for v in viol)
         assert r["doc_share"] == pytest.approx(
-            _half_up(sum(v[0] for v in viol) / n, 6), abs=1e-9
+            half_up(sum(v[0] for v in viol) / n, 6), abs=1e-9
         )
         assert r["max_tv"] == pytest.approx(
-            _half_up(
+            half_up(
                 max(tvnum / (2 * n_c * n) for n_c, tvnum in tv.values()), 6
             ),
             abs=1e-9,
         )
     # violations are monotone non-increasing in t
     shares = [
-        got[_half_up(tn / td, 4)]["n_docs_above"]
+        got[half_up(tn / td, 4)]["n_docs_above"]
         for tn, td in FID.T_CLOSE_GRID
     ]
     assert shares == sorted(shares, reverse=True)
@@ -213,15 +203,15 @@ def test_reservoir_uniformity_matches_python(spark, duck):
         exp = FID.RESERVOIR_K * np_ / n
         assert r["n_pop"] == np_
         assert r["n_sample"] == ns
-        assert r["pop_share"] == pytest.approx(_half_up(np_ / n, 6), abs=1e-9)
+        assert r["pop_share"] == pytest.approx(half_up(np_ / n, 6), abs=1e-9)
         assert r["sample_share"] == pytest.approx(
-            _half_up(ns / FID.RESERVOIR_K, 6), abs=1e-9
+            half_up(ns / FID.RESERVOIR_K, 6), abs=1e-9
         )
         assert r["share_gap"] == pytest.approx(
-            _half_up(ns / FID.RESERVOIR_K - np_ / n, 6), abs=1e-9
+            half_up(ns / FID.RESERVOIR_K - np_ / n, 6), abs=1e-9
         )
         assert r["chi2_term"] == pytest.approx(
-            _half_up((ns - exp) ** 2 / exp, 6), abs=1e-9
+            half_up((ns - exp) ** 2 / exp, 6), abs=1e-9
         )
         chi2 += (ns - exp) ** 2 / exp
     # sample shares sum to 1; the md5-rank sample is uniform enough
@@ -252,10 +242,10 @@ def test_bucket_pruning_matches_python(spark, duck):
         assert r["n_buckets_hit"] == len(hit & set(buckets))
         assert r["rows_scanned"] == scanned
         assert r["scan_share"] == pytest.approx(
-            _half_up(scanned / n, 6), abs=1e-9
+            half_up(scanned / n, 6), abs=1e-9
         )
         assert r["skew_max_x"] == pytest.approx(
-            _half_up(max(buckets.values()) * b / n, 4), abs=1e-9
+            half_up(max(buckets.values()) * b / n, 4), abs=1e-9
         )
     # more buckets never scan more rows for the same panel
     shares = [got[b]["rows_scanned"] for b in sorted(FID.BUCKET_B_GRID)]
@@ -292,7 +282,7 @@ def test_rule_shadowing_matches_python(spark, docs):
         assert r["n_shadowed"] == t_cnt[i] - w_cnt[i]
         if t_cnt[i]:
             assert r["shadow_share"] == pytest.approx(
-                _half_up((t_cnt[i] - w_cnt[i]) / t_cnt[i], 6), abs=1e-9
+                half_up((t_cnt[i] - w_cnt[i]) / t_cnt[i], 6), abs=1e-9
             )
         else:
             assert r["shadow_share"] is None
@@ -330,12 +320,12 @@ def test_word_burstiness_matches_python(spark, docs):
         assert r["cf"] == cf
         assert r["df"] == df
         assert r["katz_burstiness"] == pytest.approx(
-            _half_up(cf / df, 4), abs=1e-9
+            half_up(cf / df, 4), abs=1e-9
         )
         assert r["mean_per_doc"] == pytest.approx(
-            _half_up(mean, 6), abs=1e-9
+            half_up(mean, 6), abs=1e-9
         )
-        assert r["vmr"] == pytest.approx(_half_up(vmr, 4), abs=1e-9)
+        assert r["vmr"] == pytest.approx(half_up(vmr, 4), abs=1e-9)
         # Katz burstiness >= 1 by construction (cf >= df)
         assert r["katz_burstiness"] >= 1.0
 
@@ -373,8 +363,8 @@ def test_metric_agreement_matches_python(spark, duck):
         qv = emb[q]
         scored = [
             (
-                _half_up(dot(emb[v], qv), 6),
-                _half_up(dot(emb[v], qv) / (norm(emb[v]) * norm(qv)), 6),
+                half_up(dot(emb[v], qv), 6),
+                half_up(dot(emb[v], qv) / (norm(emb[v]) * norm(qv)), 6),
                 v,
             )
             for v in emb
@@ -397,10 +387,10 @@ def test_metric_agreement_matches_python(spark, duck):
         r = got[q]
         assert r["n_overlap_10"] == len(top_dot & top_cos)
         assert r["overlap_at_10"] == pytest.approx(
-            _half_up(len(top_dot & top_cos) / 10, 2), abs=1e-9
+            half_up(len(top_dot & top_cos) / 10, 2), abs=1e-9
         )
         assert r["top1_same"] == int(best_dot == best_cos)
-        assert r["q_norm"] == pytest.approx(_half_up(norm(qv), 4), abs=1e-9)
+        assert r["q_norm"] == pytest.approx(half_up(norm(qv), 4), abs=1e-9)
 
 
 # ------------------------------------------------- dedup_minhash_width_curve
@@ -457,13 +447,13 @@ def test_minhash_width_curve_matches_python(spark, docs):
         g = got[r]
         assert g["n_pairs"] == len(rows)
         assert g["mean_est"] == pytest.approx(
-            _half_up(sum(e for e, _ in rows) / len(rows), 4), abs=1e-9
+            half_up(sum(e for e, _ in rows) / len(rows), 4), abs=1e-9
         )
         assert g["bias"] == pytest.approx(
-            _half_up(sum(e - x for e, x in rows) / len(rows), 4), abs=1e-9
+            half_up(sum(e - x for e, x in rows) / len(rows), 4), abs=1e-9
         )
         assert g["mae"] == pytest.approx(
-            _half_up(sum(abs(e - x) for e, x in rows) / len(rows), 4),
+            half_up(sum(abs(e - x) for e, x in rows) / len(rows), 4),
             abs=1e-9,
         )
     # the sizing claim: wider signatures estimate no worse (weakly
@@ -487,7 +477,7 @@ def test_kll_error_curve_certified(spark, duck):
         assert r["within_bound"] is True
         assert r["rank_eps"] == FID.KLL_EPS_BY_K[r["k"]]
         assert r["exact"] == pytest.approx(
-            _half_up(_pct(vals, r["q"]), 4), abs=1e-9
+            half_up(_pct(vals, r["q"]), 4), abs=1e-9
         )
     # the certified envelope falls with k — that IS the sizing curve
     eps = [FID.KLL_EPS_BY_K[k] for k in sorted(FID.KLL_K_GRID)]

@@ -11,46 +11,14 @@ from collections import Counter, defaultdict
 import duckdb
 import pytest
 
-from kafka_go_streamer_spark.functions.text import STOPWORDS, TOKEN_RE
+from kafka_go_streamer_spark.functions.text import TOKEN_RE
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import fidelity as FID
 from kafka_go_streamer_spark.plans.audit_ops import QI_LEN_BIN
 from kafka_go_streamer_spark.plans.text import PREP_LANG
+from tests.refs import half_up, p_lang_id, pwords
 
 SF = "/root/testdata/sf0.001"
-
-
-def _half_up(x: float, s: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    eps = 0.5 * 10 ** -(s + 2)
-    return float(
-        Decimal(repr(x + eps)).quantize(
-            Decimal(1).scaleb(-s), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _pwords(text: str) -> list[str]:
-    return re.split(r"\s+", text.strip().lower())
-
-
-def _p_lang_id(ws: list[str]) -> str:
-    hits = {
-        lang: sum(1 for w in ws if w in sw)
-        for lang, sw in STOPWORDS.items()
-    }
-    if hits["en"] > 0 and all(
-        hits["en"] >= hits[x] for x in ("de", "es", "fr")
-    ):
-        return "en"
-    if hits["de"] > 0 and hits["de"] >= hits["es"] and hits["de"] >= hits["fr"]:
-        return "de"
-    if hits["es"] > 0 and hits["es"] >= hits["fr"]:
-        return "es"
-    if hits["fr"] > 0:
-        return "fr"
-    return "und"
 
 
 @pytest.fixture(scope="module")
@@ -78,12 +46,12 @@ def test_gate_threshold_sweep_matches_python(spark, docs):
     }
     scored = []
     for _, text, *_ in docs:
-        ws = _pwords(text)
-        alpha = _half_up(
+        ws = pwords(text)
+        alpha = half_up(
             len(re.sub("[^A-Za-z]", "", text)) / max(len(text), 1), 4
         )
         toks = len(re.findall(TOKEN_RE, text))
-        scored.append((len(ws), toks, alpha, _p_lang_id(ws)))
+        scored.append((len(ws), toks, alpha, p_lang_id(ws)))
     n = len(scored)
     tok_total = sum(t for _, t, _, _ in scored)
     for w in FID.GATE_W_GRID:
@@ -98,10 +66,10 @@ def test_gate_threshold_sweep_matches_python(spark, docs):
             assert r["n_survivors"] == len(surv)
             assert r["n_tokens"] == st
             assert r["doc_share"] == pytest.approx(
-                _half_up(len(surv) / n, 6), abs=1e-9
+                half_up(len(surv) / n, 6), abs=1e-9
             )
             assert r["token_share"] == pytest.approx(
-                _half_up(st / tok_total, 6), abs=1e-9
+                half_up(st / tok_total, 6), abs=1e-9
             )
     # monotone: tightening either floor never keeps more
     for a in FID.GATE_A_GRID:
@@ -163,12 +131,12 @@ def test_generalization_curve_matches_python(spark, docs):
         assert r["bin_chars"] == width
         assert r["n_classes"] == len(classes)
         assert r["kanon_doc_share"] == pytest.approx(
-            _half_up(kanon / n, 6), abs=1e-9
+            half_up(kanon / n, 6), abs=1e-9
         )
         assert r["ldiv_doc_share"] == pytest.approx(
-            _half_up(ldiv / n, 6), abs=1e-9
+            half_up(ldiv / n, 6), abs=1e-9
         )
-        assert r["max_tv"] == pytest.approx(_half_up(max_tv, 6), abs=1e-9)
+        assert r["max_tv"] == pytest.approx(half_up(max_tv, 6), abs=1e-9)
     # generalizing merges classes: class count monotone non-increasing
     counts = [got[m]["n_classes"] for m in sorted(FID.GEN_WIDTH_MULTS)]
     assert counts == sorted(counts, reverse=True)
@@ -205,7 +173,7 @@ def test_nlist_tradeoff_matches_python(spark, duck):
         return acc
 
     def cos(a, b):
-        return _half_up(
+        return half_up(
             dot(a, b) / ((dot(a, a) ** 0.5) * (dot(b, b) ** 0.5)), 6
         )
 
@@ -238,10 +206,10 @@ def test_nlist_tradeoff_matches_python(spark, duck):
         r = got[nl]
         assert r["n_queries"] == len(qs)
         assert r["mean_recall_at_10"] == pytest.approx(
-            _half_up(sum(recs) / len(recs), 4), abs=1e-9
+            half_up(sum(recs) / len(recs), 4), abs=1e-9
         )
         assert r["mean_scan_share"] == pytest.approx(
-            _half_up(sum(shares) / len(shares), 6), abs=1e-9
+            half_up(sum(shares) / len(shares), 6), abs=1e-9
         )
     # more cells => cheaper probes (scan share monotone down); recall
     # never IMPROVES with a finer partition at nprobe=1
@@ -279,11 +247,11 @@ def test_return_probability_matches_python(spark, duck):
                 1 for g in gs if g is not None and g <= h * 3_600_000_000
             ) / len(gs)
             assert r[f"p_return_{h}h"] == pytest.approx(
-                _half_up(p, 6), abs=1e-9
+                half_up(p, 6), abs=1e-9
             )
         cens = sum(1 for g in gs if g is None) / len(gs)
         assert r["censored_share"] == pytest.approx(
-            _half_up(cens, 6), abs=1e-9
+            half_up(cens, 6), abs=1e-9
         )
         # hazard is monotone in the horizon
         ps = [r[f"p_return_{h}h"] for h in sorted(FID.RETURN_H_GRID)]
@@ -302,7 +270,7 @@ def test_shingle_selectivity_matches_python(spark, docs):
     for k in FID.SHINGLE_K_GRID:
         df = defaultdict(set)
         for doc_id, text, *_ in docs:
-            ws = _pwords(text)
+            ws = pwords(text)
             if len(ws) >= k:
                 sh = {
                     " ".join(ws[i : i + k])
@@ -315,18 +283,18 @@ def test_shingle_selectivity_matches_python(spark, docs):
         r = got[k]
         assert r["n_shingles"] == len(df)
         assert r["mean_shingles_per_doc"] == pytest.approx(
-            _half_up(sum(len(v) for v in df.values()) / nd, 4), abs=1e-9
+            half_up(sum(len(v) for v in df.values()) / nd, 4), abs=1e-9
         )
         uniq = sum(1 for v in df.values() if len(v) == 1)
         assert r["unique_share"] == pytest.approx(
-            _half_up(uniq / len(df), 6), abs=1e-9
+            half_up(uniq / len(df), 6), abs=1e-9
         )
         assert r["max_df"] == max(len(v) for v in df.values())
         sharing = set().union(
             *(v for v in df.values() if len(v) > 1)
         ) if any(len(v) > 1 for v in df.values()) else set()
         assert r["docs_sharing_share"] == pytest.approx(
-            _half_up(len(sharing) / nd, 6), abs=1e-9
+            half_up(len(sharing) / nd, 6), abs=1e-9
         )
     # longer shingles are more selective: unique share rises, sharing
     # share falls
@@ -348,7 +316,7 @@ def test_oov_rate_heldout_matches_python(spark, docs):
     train_vocab = set()
     ev = []
     for doc_id, text, _, source, _ in docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         nib = hashlib.md5(str(doc_id).encode()).hexdigest()[0]
         if nib in "0123456789abcd":
             train_vocab.update(ws)
@@ -370,7 +338,7 @@ def test_oov_rate_heldout_matches_python(spark, docs):
         assert r["n_tokens"] == n_tok
         assert r["n_oov"] == n_oov
         assert r["oov_rate"] == pytest.approx(
-            _half_up(n_oov / n_tok, 6), abs=1e-9
+            half_up(n_oov / n_tok, 6), abs=1e-9
         )
         assert r["n_oov_types"] == len(types)
         assert r["n_oov_types"] <= r["n_oov"]
@@ -395,7 +363,7 @@ def test_cross_source_pairs_matches_python(spark, docs):
     }
     sh_sets, sigs, src = {}, {}, {}
     for doc_id, text, _, source, _ in docs:
-        ws = _pwords(text)
+        ws = pwords(text)
         if len(ws) >= SHINGLE_SIZE:
             sh = {
                 " ".join(ws[i : i + SHINGLE_SIZE])
@@ -427,7 +395,7 @@ def test_cross_source_pairs_matches_python(spark, docs):
         inter = len(sh_sets[a] & sh_sets[b])
         if inter < 2:
             continue
-        j = _half_up(
+        j = half_up(
             inter / (len(sh_sets[a]) + len(sh_sets[b]) - inter), 4
         )
         key = tuple(sorted((src[a], src[b])))
@@ -440,7 +408,7 @@ def test_cross_source_pairs_matches_python(spark, docs):
             1 for j in js if j >= FID.CROSS_SOURCE_MIN_J
         )
         assert r["mean_jaccard"] == pytest.approx(
-            _half_up(sum(js) / len(js), 4), abs=1e-9
+            half_up(sum(js) / len(js), 4), abs=1e-9
         )
         assert r["is_cross_source"] == (key[0] != key[1])
 
@@ -479,10 +447,10 @@ def test_pack_cap_sweep_matches_python(spark, docs):
         pad = sum(cap - s for s, _ in seqs if s <= cap)
         assert r["pad_tokens"] == pad
         assert r["pad_share"] == pytest.approx(
-            _half_up(pad / (len(seqs) * cap), 6), abs=1e-9
+            half_up(pad / (len(seqs) * cap), 6), abs=1e-9
         )
         assert r["mean_docs_per_seq"] == pytest.approx(
-            _half_up(sum(d for _, d in seqs) / len(seqs), 4), abs=1e-9
+            half_up(sum(d for _, d in seqs) / len(seqs), 4), abs=1e-9
         )
         assert r["n_oversized"] == sum(1 for s, _ in seqs if s > cap)
     # real tokens are conserved across caps; longer caps pack tighter

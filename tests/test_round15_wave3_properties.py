@@ -10,13 +10,13 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 
-from kafka_go_streamer_spark.functions.text import STOPWORDS
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans.text import (
     PREP_LANG,
     PREP_MIN_ALPHA,
     PREP_MIN_WORDS,
 )
+from tests.refs import p_lang_id
 
 SF = "/root/testdata/sf0.001"
 
@@ -60,24 +60,6 @@ def test_effective_dimensionality_recomputed(spark):
         assert r["n_dead"] == int((var < 1e-6).sum())
 
 
-def _p_lang_id(ws: list[str]) -> str:
-    hits = {
-        lang: sum(1 for w in ws if w in sw)
-        for lang, sw in STOPWORDS.items()
-    }
-    if hits["en"] > 0 and all(
-        hits["en"] >= hits[x] for x in ("de", "es", "fr")
-    ):
-        return "en"
-    if hits["de"] > 0 and hits["de"] >= hits["es"] and hits["de"] >= hits["fr"]:
-        return "de"
-    if hits["es"] > 0 and hits["es"] >= hits["fr"]:
-        return "es"
-    if hits["fr"] > 0:
-        return "fr"
-    return "und"
-
-
 def _passes_gates(text: str) -> bool:
     ws = re.split(r"\s+", text.strip().lower())
     if len(ws) < PREP_MIN_WORDS:
@@ -87,7 +69,7 @@ def _passes_gates(text: str) -> bool:
     )
     if not alpha > PREP_MIN_ALPHA:
         return False
-    return _p_lang_id(ws) == PREP_LANG
+    return p_lang_id(ws) == PREP_LANG
 
 
 def test_order_sensitivity_arithmetic_and_dedup_first_recomputed(spark):

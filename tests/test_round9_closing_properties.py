@@ -131,48 +131,6 @@ def test_ljung_box_matches_python_acf(spark, duck):
         assert r["lb_stat"] == pytest.approx(q, rel=1e-3, abs=1e-3), et
 
 
-# ------------------------------------------------- Jaccard link predict
-def test_jaccard_neighbors_matches_python_sets(spark):
-    """Every predicted pair must be non-adjacent, share the claimed
-    number of neighbors, and carry |∩|/|∪| computed from explicit
-    neighbor sets; the returned scores must be the global top-k
-    multiset."""
-    pairs = (
-        QUERIES["dedup_winnowing_pairs"](spark, SF)
-        .select("id_a", "id_b")
-        .toPandas()
-    )
-    nbr: dict[int, set[int]] = defaultdict(set)
-    edges = set()
-    for a, b in pairs.itertuples(index=False):
-        a, b = int(min(a, b)), int(max(a, b))
-        edges.add((a, b))
-        nbr[a].add(b)
-        nbr[b].add(a)
-    scores: dict[tuple[int, int], tuple[int, float]] = {}
-    nodes = sorted(nbr)
-    for i, u in enumerate(nodes):
-        for v in nodes[i + 1 :]:
-            if (u, v) in edges:
-                continue
-            common = nbr[u] & nbr[v]
-            if not common:
-                continue
-            j = round(len(common) / len(nbr[u] | nbr[v]), 6)
-            scores[(u, v)] = (len(common), j)
-    out = QUERIES["graph_jaccard_neighbors"](spark, SF).toPandas()
-    assert len(out) == min(20, len(scores))
-    for r in out.to_dict("records"):
-        key = (int(r["id_a"]), int(r["id_b"]))
-        assert key in scores, key
-        assert r["n_common"] == scores[key][0], key
-        assert r["jaccard"] == pytest.approx(scores[key][1], abs=1e-6)
-    top = sorted((s for _, s in scores.values()), reverse=True)[
-        : len(out)
-    ]
-    assert sorted(out["jaccard"], reverse=True) == pytest.approx(top)
-
-
 # ------------------------------------------------------ lexical diversity
 def test_ttr_matches_python_tokenization(spark, duck):
     """Per-language token/type/hapax counts and the three ratios must

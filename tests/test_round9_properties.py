@@ -94,28 +94,6 @@ def test_bh_stepup_is_monotone(spark):
     assert sorted(pdf["rk"]) == list(range(1, len(pdf) + 1))
 
 
-# --------------------------------------------------------------- k-core
-def test_kcore_peeling_is_monotone(spark):
-    """Nodes and edges kept can only shrink round over round, and a
-    stable round implies every later round is identical (fixpoint)."""
-    pdf = (
-        QUERIES["graph_kcore_decomposition"](spark, SF)
-        .toPandas()
-        .sort_values("round")
-        .reset_index(drop=True)
-    )
-    n = pdf["nodes_kept"].tolist()
-    e = pdf["edges_kept"].tolist()
-    assert n == sorted(n, reverse=True)
-    assert e == sorted(e, reverse=True)
-    for i in range(1, len(pdf)):
-        if (n[i - 1], e[i - 1]) == (n[i], e[i]):
-            assert all(
-                (n[j - 1], e[j - 1]) == (n[j], e[j])
-                for j in range(i, len(pdf))
-            )
-
-
 # --------------------------------------------------------------- Markov
 def test_markov_stationary_is_probability_vector(spark):
     pdf = QUERIES["events_markov_stationary"](spark, SF).toPandas()
@@ -338,49 +316,3 @@ def test_hits_matches_numpy(spark, duck):
     assert float(pdf["authority"].sum()) == pytest.approx(1.0, abs=1e-4)
 
 
-# ----------------------------------------------------------- Adamic-Adar
-def test_adamic_adar_matches_python_reference(spark):
-    """The Spark Adamic-Adar predictions must equal a from-scratch
-    Python pass over the SAME edge list (the Spark winnowing-pairs
-    output): wedge enumeration, 1/ln(deg) weighting, existing-edge
-    exclusion, (-score, u, v) ordering, top-20 cut."""
-    from kafka_go_streamer_spark.plans.timeseries import AA_TOP
-
-    pairs = QUERIES["dedup_winnowing_pairs"](spark, SF).toPandas()
-    edges = {
-        (min(a, b), max(a, b))
-        for a, b in zip(pairs["id_a"], pairs["id_b"])
-    }
-    nbrs = defaultdict(set)
-    for a, b in edges:
-        nbrs[a].add(b)
-        nbrs[b].add(a)
-    scores: dict = {}
-    for c, ns in nbrs.items():
-        d = len(ns)
-        for u in ns:
-            for v in ns:
-                if u < v and (u, v) not in edges:
-                    n, s = scores.get((u, v), (0, 0.0))
-                    scores[(u, v)] = (n + 1, s + 1.0 / math.log(d))
-    want = sorted(
-        (
-            (u, v, n, round(s, 6))
-            for (u, v), (n, s) in scores.items()
-        ),
-        key=lambda r: (-r[3], r[0], r[1]),
-    )[:AA_TOP]
-    got = [
-        (r["id_a"], r["id_b"], r["n_common"], r["aa_score"])
-        for r in QUERIES["graph_adamic_adar"](spark, SF)
-        .toPandas()
-        .to_dict("records")
-    ]
-    assert len(got) == len(want)
-    for (gu, gv, gn, gs), (wu, wv, wn, ws) in zip(got, want):
-        assert (gu, gv, gn) == (wu, wv, wn)
-        assert gs == pytest.approx(ws, abs=2e-6)
-    # every prediction is a genuinely NEW pair with >=1 shared neighbor
-    for u, v, n, _ in got:
-        assert (min(u, v), max(u, v)) not in edges
-        assert n >= 1

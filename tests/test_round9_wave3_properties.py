@@ -12,12 +12,8 @@ import duckdb
 import pytest
 
 from kafka_go_streamer_spark.plans import QUERIES
-from kafka_go_streamer_spark.plans.text import (
-    TR_DAMP,
-    TR_ITERS,
-    TR_TOP,
-    TR_VOCAB,
-)
+from kafka_go_streamer_spark.plans.graph import PR_DAMPING
+from kafka_go_streamer_spark.plans.text import TR_ITERS, TR_TOP, TR_VOCAB
 
 SF = "/root/testdata/sf0.001"
 
@@ -65,7 +61,7 @@ def test_textrank_matches_python_pagerank(spark, duck):
         for (a, b), n in edges.items():
             contrib[b] += r[a] * n / out_tot[a]
         r = {
-            u: (1.0 - TR_DAMP) / nn + TR_DAMP * contrib.get(u, 0.0)
+            u: (1.0 - PR_DAMPING) / nn + PR_DAMPING * contrib.get(u, 0.0)
             for u in nodes
         }
     expected = sorted(
@@ -77,7 +73,7 @@ def test_textrank_matches_python_pagerank(spark, duck):
     for (v, _), gv in zip(expected, got["textrank"]):
         assert gv == pytest.approx(v, abs=2e-6)
     # rank mass sanity: everything positive, teleport floor respected
-    assert (got["textrank"] > (1.0 - TR_DAMP) / nn * 0.999).all()
+    assert (got["textrank"] > (1.0 - PR_DAMPING) / nn * 0.999).all()
 
 
 # ------------------------------------------------------- seasonal strength

@@ -43,23 +43,28 @@ and the engine provably drops fewer rows (measured: 10 vs 12 at the
 60 s trigger). What r17 changed instead, keeping the per-file loop:
 the three triggers replay CONCURRENTLY from a thread pool (each is an
 independent query on its own feed/checkpoint; wall time collapses to
-the finest trigger's), and per-batch drop counters fold through ONE
-StreamingQueryListener keyed by query name instead of re-parsing the
-~100-entry ``recentProgress`` ring buffer through py4j after every
-promotion. 914 s -> ~3 min on the same box, identical assertions.
+the finest trigger's), and each query's drop counters are read ONCE,
+from its own ``recentProgress`` after ``stop()``, instead of after
+every promotion. 914 s -> ~3 min on the same box, identical assertions.
+
+The counters are not folded from a StreamingQueryListener: its events
+ride the async ``streams`` listener bus, which drops events under CPU
+load. ``recentProgress`` is filled by the query's own execution thread,
+so after ``stop()`` it holds every batch's progress, provided the ring
+(``spark.sql.streaming.numRecentProgressUpdates``) is larger than the
+replay's batch count; the test raises it while the replays run and
+checks that no query filled it.
 """
 
 from __future__ import annotations
 
 import shutil
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from kafka_go_streamer_spark.plans import QUERIES
 from kafka_go_streamer_spark.plans import lateness as L
@@ -115,36 +120,11 @@ def _predict(batches, delay_s, window_s):
     return n_windows, n_rows
 
 
-class _DropFold(StreamingQueryListener):
-    """Folds per-batch drop counters for every query it sees, keyed by
-    query name: the progress events arrive on the async listener bus,
-    so each promotion costs zero py4j traffic (the old harness
-    re-parsed the whole ``recentProgress`` ring buffer per file)."""
-
-    def __init__(self):
-        self.drops: dict[str, dict[int, int]] = {}
-        self.terminated: set[str] = set()
-
-    def onQueryStarted(self, event):
-        pass
-
-    def onQueryProgress(self, event):
-        p = event.progress
-        self.drops.setdefault(p.name, {})[p.batchId] = sum(
-            o.numRowsDroppedByWatermark for o in p.stateOperators
-        )
-
-    def onQueryIdle(self, event):
-        pass
-
-    def onQueryTerminated(self, event):
-        self.terminated.add(str(event.id))
-
-
-def _stream_drops(spark, tmp_path, fold, batches, trigger_s):
+def _stream_drops(spark, tmp_path, batches, trigger_s, ring):
     """Replay the slot batches through the real windowed agg, one
     promoted file + processAllAvailable per occupied slot, and return
-    the engine's late-drop counter (folded by the shared listener)."""
+    the engine's late-drop counter, summed over the query's
+    ``recentProgress`` (a ring of ``ring`` entries) after ``stop()``."""
     name = f"trig_{trigger_s}"
     stage = tmp_path / f"t{trigger_s}"
     feed = stage / "feed"
@@ -182,19 +162,14 @@ def _stream_drops(spark, tmp_path, fold, batches, trigger_s):
             q.processAllAvailable()
     finally:
         q.stop()
-    # the listener bus is async but FIFO: the QueryTerminated event
-    # (emitted by the stop() above) arrives AFTER every progress event
-    # of this query, so waiting for it guarantees the fold is complete
-    # — counting folded ids instead is racy, because interleaved
-    # no-data batches inflate the id range past len(paths) while the
-    # final data batch's event can still be in flight (observed: one
-    # drop undercounted at the 600 s trigger).
-    deadline = time.time() + 60
-    qid = str(q.id)
-    while qid not in fold.terminated and time.time() < deadline:
-        time.sleep(0.05)
-    assert qid in fold.terminated, (name, "listener never drained")
-    return sum(fold.drops.get(name, {}).values())
+    progress = q.recentProgress
+    # a full ring may have evicted early batches' counters
+    assert len(progress) < ring, (name, len(progress), ring)
+    drops = {
+        p.batchId: sum(o.numRowsDroppedByWatermark for o in p.stateOperators)
+        for p in progress
+    }
+    return sum(drops.values())
 
 
 @pytest.mark.timeout(600)
@@ -206,8 +181,12 @@ def test_streaming_trigger_matrix_twin(spark, tmp_path):
             spark, SF
         ).collect()
     }
-    fold = _DropFold()
-    spark.streams.addListener(fold)
+    slots = {t: _slot_batches(pdf, t) for t in L.TRIGGER_GRID_S}
+    # every promotion runs one data batch and at most one no-data batch
+    ring = 2 * max(len(b) for b in slots.values()) + 16
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, str(ring))
     try:
         # the three replays are independent queries on independent
         # feeds/checkpoints: run them concurrently so the wall time is
@@ -218,18 +197,20 @@ def test_streaming_trigger_matrix_twin(spark, tmp_path):
                     _stream_drops,
                     spark,
                     tmp_path,
-                    fold,
-                    _slot_batches(pdf, t),
+                    slots[t],
                     t,
+                    ring,
                 )
                 for t in L.TRIGGER_GRID_S
             }
             drops = {t: f.result() for t, f in futs.items()}
     finally:
-        spark.streams.removeListener(fold)
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
     for t in L.TRIGGER_GRID_S:
-        batches = _slot_batches(pdf, t)
-        pred_windows, pred_rows = _predict(batches, DELAY_S, WINDOW_S)
+        pred_windows, pred_rows = _predict(slots[t], DELAY_S, WINDOW_S)
         assert drops[t] == pred_windows, (t, drops[t], pred_windows)
         # the prefix faces the same watermark sequence as the full
         # fixture's first arrivals, so every prefix-late ROW is also

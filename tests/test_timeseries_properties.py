@@ -175,34 +175,3 @@ def test_welch_and_ols_match_python(spark, events):
         assert abs(ols[et][1] - (sy - slope * sx) / n) < 1e-2, et
 
 
-def test_pagerank_sums_and_matches_python(spark, events):
-    got = {
-        r["event_type"]: r["pagerank"]
-        for r in QUERIES["graph_pagerank_transitions"](spark, SF).collect()
-    }
-    per_user = defaultdict(list)
-    for uid, t, eid, et, _v in events:
-        per_user[uid].append((t, eid, et))
-    edges = defaultdict(int)
-    for rows in per_user.values():
-        seq = [et for _t, _e, et in sorted(rows)]
-        for x, y in zip(seq, seq[1:]):
-            edges[(x, y)] += 1
-    out = defaultdict(int)
-    for (x, _y), n in edges.items():
-        out[x] += n
-    nodes = sorted({x for x, _ in edges} | {y for _, y in edges})
-    rank = {n: 1.0 / len(nodes) for n in nodes}
-    for _ in range(3):
-        nxt = {}
-        for n in nodes:
-            s = sum(
-                rank[x] * (c / out[x])
-                for (x, y), c in edges.items()
-                if y == n
-            )
-            nxt[n] = 0.15 / len(nodes) + 0.85 * s
-        rank = nxt
-    assert set(got) == set(nodes)
-    for n in nodes:
-        assert abs(got[n] - rank[n]) < 1e-5, n
